@@ -97,17 +97,30 @@ object Clean {
     when(c.contains(","), trim(split(c, ",").getItem(0))).otherwise(c)
 
   // ---- C15: skill-list token normalize (transform.py:128-134) ------------
-  def flattenSkills(c: Column): Column = {
+  // No lambdas: `transform`/`filter` are CodegenFallback in Spark 4.1 and
+  // would run interpreted inside the generated stage. Splitting the
+  // trimmed, lowered string on " *, *" eats each token's edge spaces with
+  // the comma (trim strips only ' ', the same char), so dropping the ""
+  // tokens leaves exactly the per-token lower(trim) of the lambda form.
+  private def skillTokens(c: Column): Column =
+    array_remove(split(trim(lower(c)), " *, *"), "")
+
+  def flattenSkills(c: Column): Column =
+    when(c.isNull, lit("not listed")).otherwise(array_join(skillTokens(c), ", "))
+
+  /** Array form of a comma-joined skill list (internal representation per
+    * SURVEY.md §1.3) — the same tokens `flattenSkills` joins.
+    */
+  def skillsAsArray(c: Column): Column = skillTokens(c)
+
+  /** The lambda form of C15, kept as the equivalence oracle for
+    * `flattenSkills`.
+    */
+  private[graft] def flattenSkillsLambda(c: Column): Column = {
     val norm = transform(split(c, ","), t => lower(trim(t)))
     val nonEmpty = filter(norm, t => t =!= "")
     when(c.isNull, lit("not listed")).otherwise(array_join(nonEmpty, ", "))
   }
-
-  /** Array form of a comma-joined skill list (internal representation per
-    * SURVEY.md §1.3).
-    */
-  def skillsAsArray(c: Column): Column =
-    filter(transform(split(c, ","), t => lower(trim(t))), t => t =!= "")
 
   // ---- C16: deterministic timestamp synthesis (data_extract.py:217-225) --
   // The reference draws a random evening time (09:00:00–22:59:59); for
@@ -128,18 +141,38 @@ object Clean {
 
   // ---- T1: multi-label job-type classification (transform.py:44-64) ------
   // Regex-test six classes over job_type ++ " " ++ job_title; emit the
-  // sorted comma-joined label set, else "Not specified".
+  // sorted comma-joined label set, else "Not specified". The labels are
+  // constants, so the table is kept in label order and `concat_ws`
+  // (which skips nulls) emits the sorted set directly — no array_sort /
+  // filter, both CodegenFallback in Spark 4.1. Each rlike is guarded by
+  // a literal every match must contain; `And` short-circuits in codegen,
+  // so most rows skip most regexes without changing any result.
   private val jobTypePatterns = Seq(
-    "full[- ]?time" -> "Full-Time",
-    "part[- ]?time" -> "Part-Time",
-    "contract" -> "Contract",
-    "intern(ship)?" -> "Internship",
-    "temp(orary)?" -> "Temporary",
-    "freelance|consult" -> "Freelance")
+    // (regex, literal every match contains, label) — sorted by label
+    ("contract", Seq("contract"), "Contract"),
+    ("freelance|consult", Seq("freelance", "consult"), "Freelance"),
+    ("full[- ]?time", Seq("full"), "Full-Time"),
+    ("intern(ship)?", Seq("intern"), "Internship"),
+    ("part[- ]?time", Seq("part"), "Part-Time"),
+    ("temp(orary)?", Seq("temp"), "Temporary"))
+  private def jobTypeHaystack(jobType: Column, jobTitle: Column): Column =
+    concat_ws(" ", lower(coalesce(jobType, lit(""))), lower(coalesce(jobTitle, lit(""))))
+
   def inferJobType(jobType: Column, jobTitle: Column): Column = {
-    val hay = concat_ws(" ", lower(coalesce(jobType, lit(""))),
-                        lower(coalesce(jobTitle, lit(""))))
-    val labels = array(jobTypePatterns.map { case (re, label) =>
+    val hay = jobTypeHaystack(jobType, jobTitle)
+    val labels = concat_ws(", ", jobTypePatterns.map { case (re, lits, label) =>
+      val guard = lits.map(l => hay.contains(l)).reduce(_ || _)
+      when(guard && hay.rlike(s"""\\b($re)\\b"""), lit(label))
+    }: _*)
+    when(labels === "", lit("Not specified")).otherwise(labels)
+  }
+
+  /** The array/lambda form of T1, kept as the equivalence oracle for
+    * `inferJobType`.
+    */
+  private[graft] def inferJobTypeLambda(jobType: Column, jobTitle: Column): Column = {
+    val hay = jobTypeHaystack(jobType, jobTitle)
+    val labels = array(jobTypePatterns.map { case (re, _, label) =>
       when(hay.rlike(s"""\\b($re)\\b"""), lit(label))
     }: _*)
     val present = array_sort(filter(labels, l => l.isNotNull))

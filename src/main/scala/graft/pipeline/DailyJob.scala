@@ -40,7 +40,11 @@ object DailyJob {
     loadLanding(spark, workDir)
   }
 
-  /** Incremental transform+load over whatever is in the landing dir. */
+  /** Incremental transform+load over whatever is in the landing dir.
+    * Keep-first dedup orders by each row's position in its landing file
+    * (`Extract.withIngestId`), in this leg and in `runStreaming`, so both
+    * keep the same row of a duplicate group.
+    */
   def loadLanding(spark: SparkSession, workDir: String): Seq[String] = {
     val landing = s"$workDir/landing"
     def listRaw(): Seq[String] =
@@ -49,8 +53,7 @@ object DailyJob {
       spark, listRaw(), s"$workDir/tracker",
       process = f =>
         Transform.transform(
-          CsvTables.read(spark, Schema.canonical, s"$landing/$f")
-            .withColumn("__ingest_id", xxhash64(col("job_title")))),
+          Extract.withIngestId(CsvTables.read(spark, Schema.canonical, s"$landing/$f"))),
       sink = df => df.write.mode("append").parquet(s"$workDir/store"))
   }
 
@@ -70,7 +73,7 @@ object DailyJob {
       .csv(s"$workDir/landing/*")
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        Transform.transform(batch.withColumn("__ingest_id", xxhash64(col("job_title"))))
+        Transform.transform(Extract.withIngestId(batch))
           .write.mode("append").parquet(s"$workDir/stream_store")
       }
       .option("checkpointLocation", s"$workDir/stream_checkpoint")

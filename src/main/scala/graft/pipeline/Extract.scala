@@ -18,15 +18,15 @@ object Extract {
     */
   def normalize(df: DataFrame, colMap: Seq[(String, Seq[String])],
                 sourceTag: String): DataFrame = {
-    val present = df.columns.toSet
     val cols = colMap.map { case (dst, candidates) =>
-      candidates.find(present.contains) match {
-        case Some(src) => col(src).cast("string").as(dst)
-        case None => lit(null).cast("string").as(dst)
-      }
+      resolve(df, candidates).getOrElse(lit(null).cast("string")).as(dst)
     } :+ lit(sourceTag).as("source")
     df.select(cols: _*)
   }
+
+  /** The first of `candidates` present in `df`'s schema, as a string. */
+  private def resolve(df: DataFrame, candidates: Seq[String]): Option[Column] =
+    candidates.find(df.columns.contains).map(src => col(src).cast("string"))
 
   /** F1+F2: US-rows filter with the reference's precedence (reference
     * `src/data_extract.py:85-95`: `if country_col … elif loc_col`): when
@@ -51,8 +51,9 @@ object Extract {
   def hashSample(key: Column, rateBp: Int, seed: Long = 42L): Column =
     pmod(xxhash64(key, lit(seed)), lit(10000L)) < rateBp
 
-  /** Full extract for one run date: normalize both sources, filter,
-    * enrich, union, fill edge defaults, synthesize posted timestamps.
+  /** Full extract for one run date: filter both sources, enrich the kept
+    * rows, normalize, union, fill edge defaults, synthesize posted
+    * timestamps.
     */
   def run(
       kaggle: DataFrame,
@@ -62,18 +63,23 @@ object Extract {
       descriptionCol: Option[String] = None): DataFrame = {
 
     def prep(df: DataFrame, map: Seq[(String, Seq[String])], tag: String): DataFrame = {
+      // Filter mode and source columns are resolved from the RAW schema,
+      // mirroring the reference's column-presence checks before
+      // normalization. The filter runs on the raw frame, before the skill
+      // extractor: Catalyst cannot push it below the mapPartitions, and a
+      // dropped row must not pay for (or spend the budget of) extraction.
+      def source(dst: String): Option[Column] =
+        map.collectFirst { case (`dst`, cands) => cands }.flatMap(resolve(df, _))
+      val country = source("country")
+      val location = source("job_location")
+      val kept = df.where(usaFilter(
+        country.getOrElse(lit(null)), location.getOrElse(lit(null)),
+        hasCountry = country.isDefined, hasLocation = location.isDefined))
       val enriched = descriptionCol match {
-        case Some(c) if df.columns.contains(c) => SkillExtract.withSkills(df, c, extractor)
-        case _ => df
+        case Some(c) if df.columns.contains(c) => SkillExtract.withSkills(kept, c, extractor)
+        case _ => kept
       }
-      // Filter mode is decided per source from the RAW schema, mirroring
-      // the reference's column-presence checks before normalization.
-      val present = df.columns.toSet
-      def resolved(dst: String): Boolean =
-        map.exists { case (d, cands) => d == dst && cands.exists(present.contains) }
       normalize(enriched, map, tag)
-        .where(usaFilter(col("country"), col("job_location"),
-          hasCountry = resolved("country"), hasLocation = resolved("job_location")))
     }
 
     val unioned = prep(kaggle, Schema.kaggleMap, "Kaggle")
@@ -91,8 +97,10 @@ object Extract {
           "yyyy-MM-dd HH:mm:ss"))
   }
 
-  /** Stable per-row ingest id for keep-first dedup: file order is encoded
-    * as (file path, row position within file).
+  /** Stable per-row ingest id for keep-first dedup: the row's position in
+    * its input, as (split index, row within split). A file's splits are
+    * numbered in byte-offset order, so on a one-file read the id grows
+    * with the row's position in the file.
     */
   def withIngestId(df: DataFrame): DataFrame =
     df.withColumn("__ingest_id", monotonically_increasing_id())

@@ -52,21 +52,22 @@ object CleanOps {
              |LIMIT 20""".stripMargin)),
 
     // ---- T1: multi-label classification -> sorted comma-joined label set --
+    // The labels are constants, so the CASEs are listed in label order and
+    // concat_ws (which skips nulls) joins the sorted set — the same shape
+    // as Clean.inferJobType, with no CodegenFallback array_sort/filter.
     Q(
       "q51_multilabel_classify",
       (s, d) =>
         Tables.orders(s, d)
           .withColumn("lbls",
-            expr("""array_sort(filter(array(
-                   |  CASE WHEN o_orderpriority LIKE '%URGENT%' THEN 'urgent' END,
+            expr("""concat_ws(', ',
+                   |  CASE WHEN o_orderstatus = 'F' THEN 'done' END,
                    |  CASE WHEN o_orderpriority LIKE '%HIGH%' THEN 'high' END,
                    |  CASE WHEN o_orderpriority LIKE '%LOW%' THEN 'low' END,
-                   |  CASE WHEN o_orderstatus = 'F' THEN 'done' END,
-                   |  CASE WHEN o_orderstatus = 'O' THEN 'open' END),
-                   |  x -> x IS NOT NULL))""".stripMargin))
+                   |  CASE WHEN o_orderstatus = 'O' THEN 'open' END,
+                   |  CASE WHEN o_orderpriority LIKE '%URGENT%' THEN 'urgent' END)""".stripMargin))
           .withColumn("label_set",
-            when(size(col("lbls")) === 0, lit("none"))
-              .otherwise(array_join(col("lbls"), ", ")))
+            when(col("lbls") === "", lit("none")).otherwise(col("lbls")))
           .groupBy(col("label_set"))
           .agg(count(lit(1)).as("n"))
           .orderBy(col("label_set")),

@@ -1,6 +1,7 @@
 package graft
 
-import graft.pipeline.DailyJob
+import graft.pipeline.{DailyJob, Extract, Schema}
+import graft.sources.CsvTables
 import org.apache.spark.sql.functions._
 
 /** The scheduled entry point (reference `dags/job.py`): N-day replay is
@@ -43,6 +44,36 @@ class DailyJobSpec extends SparkSpec {
     val compacted = spark.read.parquet(s"$work/store")
     assert(compacted.count() == n)
     assert(compacted.columns.toSeq == store.columns.toSeq)
+  }
+
+  test("keep-first dedup keeps the first landing row in both legs") {
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft_keep_first").toString
+    // two rows with the same dedup key (company, title, location, site)
+    // that differ in salary, with filler rows between them
+    val row = (co: String, title: String, salary: Double) =>
+      (co, title, "full-time", "Seattle, WA", "United States", salary,
+       "2025-10-21 10:00:00", "indeed", "python, sql", "teamwork", "Kaggle")
+    val rows = row("acme", "data engineer", 100000.0) +:
+      (1 to 50).map(i => row(s"filler $i", s"analyst $i", 90000.0 + i)) :+
+      row("acme", "data engineer", 150000.0)
+    CsvTables.write(rows.toDF(Schema.canonical.fieldNames.toIndexedSeq: _*).coalesce(1),
+      s"$work/landing/fetch_jobs_2025-10-21.csv")
+
+    // the order column ranks rows by file position, so the tie is broken
+    val ids = Extract.withIngestId(CsvTables.read(spark, Schema.canonical, s"$work/landing/*"))
+      .where(col("company_name") === "acme")
+      .select(col("salary"), col("__ingest_id")).orderBy("__ingest_id")
+      .collect().map(_.getDouble(0)).toSeq
+    assert(ids == Seq(100000.0, 150000.0))
+
+    assert(DailyJob.loadLanding(spark, work) == Seq("fetch_jobs_2025-10-21.csv"))
+    DailyJob.runStreaming(spark, work)
+    Seq("store", "stream_store").foreach { s =>
+      val kept = spark.read.parquet(s"$work/$s")
+        .where(col("company_name") === "acme").select("salary").collect().map(_.getDouble(0))
+      assert(kept.toSeq == Seq(100000.0), s"$s kept ${kept.toSeq}")
+    }
   }
 
   test("appendDeduped loads each record once across overlapping batches") {

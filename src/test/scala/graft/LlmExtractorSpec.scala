@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.pipeline.{LlmSkillExtractor, SkillExtract}
+import graft.pipeline.{Extract, LlmSkillExtractor, SkillExtract}
+import org.apache.spark.sql.functions._
 
 /** X1 hardening: the LLM-backed extractor's retry, degradation,
   * memoization, concurrency bound, and cost cap — all through injected
@@ -72,6 +73,35 @@ class LlmExtractorSpec extends SparkSpec {
     assert(calls.get() == 5) // the endpoint saw exactly the budget
     assert(out.count(_ == (("python, sql", "communication"))) == 5)
     assert(out.count(_ == (("", ""))) == 5)
+  }
+
+  test("Extract.run spends the call budget on kept rows only") {
+    // locals only: the closure must not capture the suite instance
+    val reply = ok
+    val raw = (1 to 12).map { i =>
+      val country = if (i % 2 == 0) "USA" else "France"
+      (s"co$i", s"title $i", "full-time", "Springfield", country, "$90,000", "2025-10-20",
+       "indeed", s"$country posting number $i needing python and communication skills")
+    }.toDF("company", "title", "job_type", "location", "country", "mean_salary",
+           "date_posted", "site", "description")
+      .coalesce(1) // one task, so one extractor instance and one budget
+    def run(maxCalls: Long): (Int, Seq[String]) = {
+      val called = spark.sparkContext.collectionAccumulator[String]("llm-calls")
+      val ex = new LlmSkillExtractor(
+        call = t => { called.add(t); reply }, maxCalls = maxCalls, sleeper = _ => ())
+      val out = Extract.run(raw, raw.where(lit(false)), "2025-10-21", ex, Some("description"))
+        .collect()
+      import scala.jdk.CollectionConverters._
+      (out.count(_.getAs[String]("technical_skills") == "python, sql"),
+       called.value.asScala.toSeq)
+    }
+    // uncapped: one call per US row, none for the six dropped rows
+    val (_, all) = run(Long.MaxValue)
+    assert(all.size == 6 && all.forall(_.startsWith("USA ")), all.toString)
+    // capped below the kept-row count: the whole cap goes to kept rows
+    val (enriched, capped) = run(4L)
+    assert(capped.size == 4 && capped.forall(_.startsWith("USA ")), capped.toString)
+    assert(enriched == 4)
   }
 
   // ---- real HTTP transport, hermetic in-process server -------------------

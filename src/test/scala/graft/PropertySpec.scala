@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.{Clean, Schema, Transform}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -46,6 +47,69 @@ class PropertySpec extends SparkSpec {
       assert(toks.forall(t => t == t.toLowerCase && t == t.trim && t.nonEmpty),
         s"in='$s' out='$out'")
     }
+  }
+
+  /** Samples `n` values of `gen` (seeds 1..n) plus `edges`, evaluates
+    * `fast` and `oracle` over them in one frame, and returns the inputs
+    * where the two differ (null-safe).
+    */
+  private def mismatches(gen: Gen[(String, String)], edges: Seq[(String, String)], n: Int)(
+      fast: (Column, Column) => Column, oracle: (Column, Column) => Column): Seq[String] = {
+    val sampled = (1 to n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong)))
+    (edges ++ sampled).toDF("a", "b")
+      .select(col("a"), col("b"),
+        fast(col("a"), col("b")).as("fast"), oracle(col("a"), col("b")).as("oracle"))
+      .where(not(col("fast") <=> col("oracle")))
+      .collect().toSeq
+      .map(r => s"(${r.get(0)}, ${r.get(1)}): fast='${r.get(2)}' oracle='${r.get(3)}'")
+  }
+
+  /** Null, empty, tab, non-ASCII (final-sigma Greek, dotted I, CJK,
+    * titlecase digraph) and comma/space runs.
+    */
+  private val oddPiece: Gen[String] = Gen.oneOf(
+    null, "", " ", "  ", "\t", " \t ", ",", ",,", " , ", " ,, ,", ", ,", "\u00a0",
+    "Müller", "ΟΔΟΣ", "ΣΑΣ,", "İstanbul", "日本語", "ǅungla", "naïve")
+
+  test("T1 concat_ws job type equals the array_sort/filter oracle") {
+    // every pattern word hyphenated, spaced, glued, as a prefix of a
+    // longer word and as a suffix, in both cases
+    val words = Seq("full", "part", "contract", "intern", "temp", "freelance", "consult")
+      .flatMap { w =>
+        Seq(w, w.toUpperCase, s"$w-time", s"$w time", s"${w}time", s"$w--time",
+          s"${w}_time", s"${w}er", s"$w-timer", s"${w}ship", s"$w-ship",
+          s"${w}orary", s"${w}ing", s"sub$w", s"$w.", s"($w)", s"$w,")
+      } ++ Seq("full-timer", "contractor", "intern-ship", "internship", "temporary",
+        "temporarily", "consultant", "freelancer", "part-time", "Full Time", "PART TIME")
+    val piece = Gen.frequency(
+      4 -> Gen.oneOf(words), 1 -> oddPiece.map(p => if (p == null) "" else p),
+      1 -> Gen.oneOf("engineer", "data", "ΣΑΣ"))
+    val phrase: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null: String),
+      8 -> (for {
+        ps <- Gen.choose(0, 5).flatMap(k => Gen.listOfN(k, piece))
+        sep <- Gen.oneOf(" ", "", "-", "\t", ", ")
+      } yield ps.mkString(sep)))
+    val gen = for { jt <- phrase; title <- phrase } yield (jt, title)
+    val edges = Seq[(String, String)]((null, null), ("", ""), (null, "contract"),
+      ("full-time", null), ("\t", "\t"), ("full", "time"), ("inter", "n"),
+      ("", "contract full time intern role"), ("freelance consulting", "temp work"))
+    val bad = mismatches(gen, edges, 600)(Clean.inferJobType, Clean.inferJobTypeLambda)
+    assert(bad.isEmpty, bad.take(5).mkString("; "))
+  }
+
+  test("C15 split/array_remove skill flattening equals the transform/filter oracle") {
+    val token = Gen.frequency(3 -> Gen.oneOf(" Python ", "SQL", "aws", "ML ", "Power BI",
+      " c++", "  Spark  SQL "), 2 -> oddPiece)
+    val gen = for {
+      ts <- Gen.choose(0, 6).flatMap(k => Gen.listOfN(k, token))
+      sep <- Gen.oneOf(",", ", ", " , ", ",,", "\t,", ", \t")
+    } yield (if (ts.contains(null)) null else ts.mkString(sep), "")
+    val edges = Seq("", " ", ",", " , ", ",,,", " , , ", "\t", "a,\tb", "a ,b, c ,",
+      " Python , SQL,,aws ", "ΟΔΟΣ,ΣΑΣ", "ΣΑΣ ,ΣΑΣ", "İ, I", null).map(s => (s, ""))
+    val bad = mismatches(gen, edges, 600)(
+      (a, _) => Clean.flattenSkills(a), (a, _) => Clean.flattenSkillsLambda(a))
+    assert(bad.isEmpty, bad.take(5).mkString("; "))
   }
 
   test("post-dedup rows are unique on the dedup key") {
