@@ -1,9 +1,8 @@
 package graft.pipeline
 
 import graft.sources.CsvTables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The scheduled entry point — the engine's counterpart of the
   * reference's daily Airflow DAG (`dags/job.py:24-76`: 09:00 daily,
@@ -71,15 +70,11 @@ object DailyJob {
       // batch leg (a single drained mega-batch would dedup ACROSS days)
       .option("maxFilesPerTrigger", "1")
       .csv(s"$workDir/landing/*")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Transform.transform(Extract.withIngestId(batch))
-          .write.mode("append").parquet(s"$workDir/stream_store")
-      }
-      .option("checkpointLocation", s"$workDir/stream_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.streaming.MicroBatchFold.drain(stream,
+        s"$workDir/stream_checkpoint") { (batch, _) =>
+      Transform.transform(Extract.withIngestId(batch))
+        .write.mode("append").parquet(s"$workDir/stream_store")
+    }
   }
 
   /** `runMain graft.pipeline.DailyJob <sfDir> <workDir> <runDate>...`

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.PolyHash.polyHash
 import graft.ops.{HtmlExtract, Robots, Warc}
+import graft.streaming.BatchTuning.withConf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -403,13 +404,9 @@ object CurationOps {
     // therefore checks the store handoff and the partial fold.
     Q(
       "q179_url_frontier_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.UrlFrontierStream.runOn(
-            s, Tables.documents(s, d), nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.UrlFrontierStream.runOn(
+          s, Tables.documents(s, d), nSplits = 2)
       },
       Some(UrlAggSql)),
 
@@ -555,13 +552,9 @@ object CurationOps {
     // fold straight from the documents table, gating the whole chain.
     Q(
       "q182_warc_ingest_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.WarcIngestStream.runOn(
-            s, Tables.documents(s, d), nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.WarcIngestStream.runOn(
+          s, Tables.documents(s, d), nSplits = 2)
       },
       Some(s"""WITH d AS (SELECT doc_id, coalesce(lang, 'und') AS lang,
         |           coalesce(text, '') AS text

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.ops.Multimodal
 import graft.pipeline.{Extract, Transform}
+import graft.streaming.BatchTuning.withConf
 import graft.streaming.EventStreams
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -379,12 +380,9 @@ object PipelineOps {
         // (measured 3.2s -> 1.7s at 8 on sf0.1). Sizing state partitions
         // to state volume, not input volume, is the real deployment
         // decision; restore the session value afterwards.
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        val out =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            EventStreams.runToMemory(s, agg, name, OutputMode.Update())
-          } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        val out = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          EventStreams.runToMemory(s, agg, name, OutputMode.Update())
+        }
         out
           .select(date_format(col("h"), "yyyy-MM-dd HH:00:00").as("h"),
                   col("event_type"), col("n"), col("sum_v"))
@@ -413,12 +411,9 @@ object PipelineOps {
         val name = "graft_stream_kmv_users"
         s.catalog.dropTempView(name)
         // state partitions sized to state volume — see q57
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        val out =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            EventStreams.runToMemory(s, agg, name, OutputMode.Update())
-          } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        val out = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          EventStreams.runToMemory(s, agg, name, OutputMode.Update())
+        }
         out
           .select(date_format(col("h"), "yyyy-MM-dd HH:00:00").as("h"),
                   col("n_min"), col("kth_hash"), col("est_users"))
@@ -453,12 +448,9 @@ object PipelineOps {
         val name = "graft_stream_segments"
         s.catalog.dropTempView(name)
         // state partitions sized to state volume — see q57
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        val out =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            EventStreams.runToMemory(s, agg, name, OutputMode.Update())
-          } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        val out = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          EventStreams.runToMemory(s, agg, name, OutputMode.Update())
+        }
         out
           .select(date_format(col("h"), "yyyy-MM-dd HH:00:00").as("h"),
                   col("c_mktsegment"), col("n"), col("sum_v"))

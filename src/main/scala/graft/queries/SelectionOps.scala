@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VectorFunctions.{dotProduct, squaredNorm}
+import graft.streaming.BatchTuning.withConf
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1016,13 +1017,9 @@ object SelectionOps {
     // batch output row for row: q111 shares q86's oracle end to end.
     Q(
       "q111_ivf_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.IvfStream.runOn(
-            s, Tables.embeddings(s, d), nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.IvfStream.runOn(
+          s, Tables.embeddings(s, d), nSplits = 2)
       },
       Some(TrainingOps.ivfSeededSql)),
 
@@ -1556,13 +1553,9 @@ object SelectionOps {
     // universe every batch.
     Q(
       "q122_bigram_lm_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.BigramLmStream.runOn(
-            s, Tables.documents(s, d), nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.BigramLmStream.runOn(
+          s, Tables.documents(s, d), nSplits = 2)
       },
       Some(bigramSql)),
 
@@ -1600,13 +1593,9 @@ object SelectionOps {
     // the arrived corpus are bit-identical to q144 (shared oracle).
     Q(
       "q146_mixture_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.MixtureStream.runOn(
-            s, Tables.documents(s, d), nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.MixtureStream.runOn(
+          s, Tables.documents(s, d), nSplits = 2)
       },
       Some(mixtureSql)),
 

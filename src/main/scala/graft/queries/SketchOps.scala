@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.CmsSketch
+import graft.streaming.BatchTuning.withConf
 import org.apache.spark.sql.functions._
 
 /** Sketch / sampling operators for corpus-scale statistics (SURVEY.md
@@ -191,17 +192,13 @@ object SketchOps {
     // HLL max fold).
     Q(
       "q125_hll_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.HllStream.runOn(
-            s,
-            Tables.lineitem(s, d)
-              .select(col("l_orderkey").cast("long").as("doc_id"),
-                      col("l_partkey").cast("long").as("key")),
-            nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.HllStream.runOn(
+          s,
+          Tables.lineitem(s, d)
+            .select(col("l_orderkey").cast("long").as("doc_id"),
+                    col("l_partkey").cast("long").as("key")),
+          nSplits = 2)
       },
       Some(hllSql(256))),
 
@@ -696,13 +693,9 @@ object SketchOps {
     // point estimates from state that arrived file by file.
     Q(
       "q109_cms_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.CmsStream.runOn(
-            s, Tables.documents(s, d), nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.CmsStream.runOn(
+          s, Tables.documents(s, d), nSplits = 2)
       },
       Some(cmsSql)),
 

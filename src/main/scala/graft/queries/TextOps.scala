@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.streaming.BatchTuning.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -780,15 +781,11 @@ object TextOps {
     // verbatim — cross-batch store state included.
     Q(
       "q158_yield_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          val dd = Tables.documents(s, d)
-          val labels = graft.streaming.MinHashDedupStream
-            .runClustersOn(s, dd, nSplits = 2)
-          yieldHistogram(docTokens(dd), labels)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        val dd = Tables.documents(s, d)
+        val labels = graft.streaming.MinHashDedupStream
+          .runClustersOn(s, dd, nSplits = 2)
+        yieldHistogram(docTokens(dd), labels)
       },
       Some(yieldOracleSql)),
 
@@ -803,13 +800,9 @@ object TextOps {
     // over the q70 pair set.
     Q(
       "q129_minhash_dedup_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.MinHashDedupStream.runOn(
-            s, Tables.documents(s, d), nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.MinHashDedupStream.runOn(
+          s, Tables.documents(s, d), nSplits = 2)
       },
       Some(minhashDedupOracleSql)),
 
@@ -826,13 +819,9 @@ object TextOps {
     // stream, cross-batch store state included.
     Q(
       "q134_incremental_cc_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.MinHashDedupStream.runClustersOn(
-            s, Tables.documents(s, d), nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.MinHashDedupStream.runClustersOn(
+          s, Tables.documents(s, d), nSplits = 2)
       },
       Some(incCcOracleSql)),
 
@@ -1174,13 +1163,9 @@ object TextOps {
     // (Zipf-bounded), not per-doc streaming state.
     Q(
       "q138_nb_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.NbClassifierStream.runOn(
-            s, docs(s, d), nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.NbClassifierStream.runOn(
+          s, docs(s, d), nSplits = 2)
       },
       Some(nbOracleSql)),
 

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.PolyHash.polyHash
 import graft.functions.VectorFunctions.{dotProduct, squaredNorm}
+import graft.streaming.BatchTuning.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1030,13 +1031,9 @@ object TrainingOps {
     // which checks cross-batch dedup state end to end.
     Q(
       "q101_span_dedup_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.SpanDedupStream.runOn(
-            s, Tables.documents(s, d), w = 8, nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.SpanDedupStream.runOn(
+          s, Tables.documents(s, d), w = 8, nSplits = 2)
       },
       Some(spanDedupSql(8))),
 
@@ -1051,13 +1048,9 @@ object TrainingOps {
     // which therefore checks the store handoff AND the partial-fold.
     Q(
       "q104_corpus_prep_stream",
-      (s, d) => {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.CorpusPrepStream.runOn(
-            s, Tables.documents(s, d), nSplits = 2)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.CorpusPrepStream.runOn(
+          s, Tables.documents(s, d), nSplits = 2)
       },
       Some(corpusPrepSql)),
 

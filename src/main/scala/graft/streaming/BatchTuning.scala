@@ -8,10 +8,11 @@ import org.apache.spark.sql.SparkSession
   * which is the right trade on data-sized queries and pure scheduling
   * overhead on a micro-batch touching a few thousand rows: a measured
   * 6-batch span-dedup replay runs 63 jobs with AQE on vs 34 with it
-  * off, for ~13% wall time. Below their store-size cost switch the
-  * incremental streams therefore run each batch with AQE off and a
-  * narrow fixed shuffle width; above the switch they leave the session
-  * untouched (big batches want AQE's coalescing and skew handling).
+  * off, for ~13% wall time. Below the cost switch
+  * ([[MicroBatchFold.NarrowBelowBytes]]) the micro-batch streams
+  * therefore run each batch with AQE off and a narrow fixed shuffle
+  * width; above it they leave the session untouched (big batches want
+  * AQE's coalescing and skew handling).
   *
   * The scope mutates SESSION conf and restores it in a finally — the
   * streams own their session for the duration of run() (driver
@@ -19,23 +20,27 @@ import org.apache.spark.sql.SparkSession
   * queries would observe the narrowed width for the batch's duration;
   * give such a workload its own SparkSession.
   */
-private[streaming] object BatchTuning {
+private[graft] object BatchTuning {
 
-  private val Width = "spark.sql.shuffle.partitions"
-  private val Aqe = "spark.sql.adaptive.enabled"
-
-  def withNarrowShuffles[T](spark: SparkSession, narrow: Boolean,
-                            partitions: Int = 4)(f: => T): T = {
-    if (!narrow) f
-    else {
-      val aqe0 = spark.conf.get(Aqe)
-      val w0 = spark.conf.get(Width)
-      spark.conf.set(Aqe, "false")
-      spark.conf.set(Width, partitions.toString)
-      try f
-      finally { spark.conf.set(Aqe, aqe0); spark.conf.set(Width, w0) }
+  /** Run `f` with each `key -> value` set on the session conf, restoring
+    * every key's previous value (or unsetting it) in a finally.
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(f: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      f
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
+
+  def withNarrowShuffles[T](spark: SparkSession, narrow: Boolean,
+                            partitions: Int = 4)(f: => T): T =
+    if (!narrow) f
+    else withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> partitions.toString)(f)
 
   /** [[withNarrowShuffles]] over EVERY session a foreachBatch body plans
     * with. MicroBatchExecution hands the body a DataFrame bound to the

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.queries.SelectionOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Bigram-LM training over a document stream (q122) — q107's
   * continuous-ingestion twin for the MODEL-training half: each
@@ -29,39 +28,19 @@ object BigramLmStream {
     */
   def run(spark: SparkSession, inputDir: String, workDir: String): DataFrame = {
     val countsDir = s"$workDir/bigram_counts"
-    // micro-batch-sized inputs plan with AQE off + narrow width;
-    // rung-scale inputs keep the session's AQE planning (the same
-    // 64 MB cost switch the store-gated streams use — always-narrow
-    // regressed the sf10 rung once the clone-session fix made the
-    // narrow scope actually reach the batch plans)
-    val smallInput = graft.pipeline.Load.storeBytes(spark, inputDir) <
-      64L * 1024 * 1024
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // sketch-sized reduce side by construction: always narrow (BatchTuning)
-        BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow = smallInput) {
-        graft.pipeline.Load.writeBatchPartial(
-          SelectionOps.docBigrams(SelectionOps.tokedDocs(
-              batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))))
-            .groupBy(col("prev"), col("tok")).agg(count(lit(1)).as("n"))
-            .coalesce(1),
-          countsDir, batchId)
-        ()
-        }
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatchFold.runInputGated(spark, inputDir, workDir) { (batch, batchId) =>
+      graft.pipeline.Load.writeBatchPartial(
+        SelectionOps.docBigrams(SelectionOps.tokedDocs(
+            batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))))
+          .groupBy(col("prev"), col("tok")).agg(count(lit(1)).as("n"))
+          .coalesce(1),
+        countsDir, batchId)
+    }
     // fold the partial counts (additive, so fold == batch counts) and
     // rebuild the LM; score the arrived corpus under it
     val c2 = spark.read.parquet(countsDir)
       .groupBy(col("prev"), col("tok")).agg(sum(col("n")).as("c2"))
-    val docs = spark.read.parquet(s"$inputDir/split_*.parquet")
+    val docs = MicroBatchFold.arrived(spark, inputDir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val toked = SelectionOps.tokedDocs(docs)
     SelectionOps.scoreWithLm(toked, SelectionOps.docBigrams(toked),
@@ -69,10 +48,6 @@ object BigramLmStream {
   }
 
   /** Stage + run in a fresh work dir: the q122 entry. */
-  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q122_bigram_stream").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir)
-  }
+  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q122_bigram_stream", docs, nSplits)(run(spark, _, _))
 }

@@ -4,7 +4,6 @@ import graft.functions.CmsSketch
 import graft.functions.PolyHash.polyHash
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Continuous frequency monitoring with a count-min sketch (q109):
   * documents arrive as files and every micro-batch folds its tokens
@@ -30,35 +29,15 @@ object CmsStream {
     */
   def run(spark: SparkSession, inputDir: String, workDir: String): DataFrame = {
     val partsDir = s"$workDir/cms_partials"
-    // micro-batch-sized inputs plan with AQE off + narrow width;
-    // rung-scale inputs keep the session's AQE planning (the same
-    // 64 MB cost switch the store-gated streams use — always-narrow
-    // regressed the sf10 rung once the clone-session fix made the
-    // narrow scope actually reach the batch plans)
-    val smallInput = graft.pipeline.Load.storeBytes(spark, inputDir) <
-      64L * 1024 * 1024
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // sketch-sized reduce side by construction: always narrow (BatchTuning)
-        BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow = smallInput) {
-        graft.pipeline.Load.writeBatchPartial(
-          batch
-            .select(explode_outer(split(col("text"), " ")).as("tok"))
-            .where(col("tok").isNotNull && col("tok") =!= "")
-            .agg(CmsSketch.cmsCounters(polyHash(col("tok")), D, W).as("cms"))
-            .coalesce(1),
-          partsDir, batchId)
-        ()
-        }
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatchFold.runInputGated(spark, inputDir, workDir) { (batch, batchId) =>
+      graft.pipeline.Load.writeBatchPartial(
+        batch
+          .select(explode_outer(split(col("text"), " ")).as("tok"))
+          .where(col("tok").isNotNull && col("tok") =!= "")
+          .agg(CmsSketch.cmsCounters(polyHash(col("tok")), D, W).as("cms"))
+          .coalesce(1),
+        partsDir, batchId)
+    }
     // fold the partial matrices entrywise (posexplode -> sum per cell):
     // the accumulated sketch state, as a 64-row (idx, cnt) cell table
     val cells = spark.read.parquet(partsDir)
@@ -66,7 +45,7 @@ object CmsStream {
       .groupBy(col("idx")).agg(sum(col("cnt")).as("cnt"))
     // point queries over the arrived corpus: per distinct token, the
     // min of its d cells (same join structure the DuckDB oracle uses)
-    val exact = spark.read.parquet(s"$inputDir/split_*.parquet")
+    val exact = MicroBatchFold.arrived(spark, inputDir)
       .select(explode_outer(split(col("text"), " ")).as("tok"))
       .where(col("tok").isNotNull && col("tok") =!= "")
       .groupBy(col("tok")).agg(count(lit(1)).as("n_exact"))
@@ -87,10 +66,6 @@ object CmsStream {
   }
 
   /** Stage + run in a fresh work dir: the q109 entry. */
-  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q109_cms_stream").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir)
-  }
+  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q109_cms_stream", docs, nSplits)(run(spark, _, _))
 }

@@ -5,7 +5,6 @@ import graft.queries.TrainingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Continuous-ingestion form of the q98 corpus-prep composition (q104):
@@ -60,18 +59,9 @@ object CorpusPrepStream {
     */
   def run(spark: SparkSession, inputDir: String, workDir: String,
           nBuckets: Int = 16, compactEvery: Int = 8): DataFrame = {
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, workDir, nBuckets, compactEvery)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatchFold.run(spark, inputDir, workDir) { (batch, batchId) =>
+      processBatch(spark, batch, batchId, workDir, nBuckets, compactEvery)
+    }
     spark.read.parquet(s"$workDir/partials")
       .groupBy(col("split"), col("lang"))
       .agg(sum(col("n_docs")).as("n_docs"),
@@ -114,10 +104,9 @@ object CorpusPrepStream {
     // prefixes' distinct hash buckets, bounded by nBuckets.
     // Cost-based like SpanDedupStream: a small store is scanned
     // whole rather than paying an extra job for the prune list.
-    val big = graft.pipeline.Load.storeBytes(spark, storeDir) >=
-      64L * 1024 * 1024
+    val big = !MicroBatchFold.below(spark, storeDir)
     // narrow-shuffle/AQE-off scope below the switch (BatchTuning)
-    BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow = !big) {
+    MicroBatchFold.scoped(spark, batch, narrow = !big) {
     val store = graft.pipeline.Load
       .readStoreExcludingBatch(spark, storeDir, batchId)
       .map { s =>
@@ -167,10 +156,6 @@ object CorpusPrepStream {
   }
 
   /** Stage + run in a fresh work dir: the q104 entry. */
-  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q104_corpus_stream").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir)
-  }
+  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q104_corpus_stream", docs, nSplits)(run(spark, _, _))
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.queries.SelectionOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** DSIR model training over a document stream (q142) — q141's
   * continuous-ingestion twin, the q122/q138 pattern applied to the
@@ -34,63 +33,34 @@ object DsirStream {
     // count pass and the final corpus scoring at sf10 (measured 133s vs
     // the batch q141's 17s). Narrow the file-split size for the run so
     // scan parallelism matches the corpus, not the file count; restored
-    // in the finally. Production streams arrive as many files and don't
-    // need this.
-    val MaxSplit = "spark.sql.files.maxPartitionBytes"
-    val split0 = spark.conf.get(MaxSplit)
-    spark.conf.set(MaxSplit, (16L * 1024 * 1024).toString)
-    try runInner(spark, inputDir, workDir, cntDir, dim, k, isTarget)
-    finally spark.conf.set(MaxSplit, split0)
-  }
-
-  private def runInner(spark: SparkSession, inputDir: String,
-                       workDir: String, cntDir: String, dim: Int, k: Int,
-                       isTarget: => org.apache.spark.sql.Column): DataFrame = {
-    // micro-batch-sized inputs plan with AQE off + narrow width;
-    // rung-scale inputs keep the session's AQE planning (the same
-    // 64 MB cost switch the store-gated streams use — always-narrow
-    // regressed the sf10 rung once the clone-session fix made the
-    // narrow scope actually reach the batch plans)
-    val smallInput = graft.pipeline.Load.storeBytes(spark, inputDir) <
-      64L * 1024 * 1024
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow = smallInput) {
-          graft.pipeline.Load.writeBatchPartial(
-            SelectionOps.dsirToks(batch, isTarget, dim)
-              .groupBy(col("b")).agg(
-                count(lit(1)).as("rc"),
-                sum(when(col("tgt"), 1L).otherwise(0L)).as("tc"))
-              .coalesce(1),
-            cntDir, batchId)
-          ()
-        }
+    // when the run ends. Production streams arrive as many files and
+    // don't need this.
+    BatchTuning.withConf(spark,
+        "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString) {
+      MicroBatchFold.runInputGated(spark, inputDir, workDir) { (batch, batchId) =>
+        graft.pipeline.Load.writeBatchPartial(
+          SelectionOps.dsirToks(batch, isTarget, dim)
+            .groupBy(col("b")).agg(
+              count(lit(1)).as("rc"),
+              sum(when(col("tgt"), 1L).otherwise(0L)).as("tc"))
+            .coalesce(1),
+          cntDir, batchId)
       }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val counts = spark.read.parquet(cntDir)
-      .groupBy(col("b"))
-      .agg(sum(col("rc")).as("rc"), sum(col("tc")).as("tc"))
-    val arrived = spark.read.parquet(s"$inputDir/split_*.parquet")
-    SelectionOps.dsirScore(
-      SelectionOps.dsirToks(arrived, isTarget, dim), counts, dim, k,
-      // the fold runs under a live stream's lifetime: pin to parquet
-      // scratch so an executor kill can't strand a checkpoint block
-      scratch = Some(s"$workDir/scratch"))
+      val counts = spark.read.parquet(cntDir)
+        .groupBy(col("b"))
+        .agg(sum(col("rc")).as("rc"), sum(col("tc")).as("tc"))
+      val arrived = MicroBatchFold.arrived(spark, inputDir)
+      SelectionOps.dsirScore(
+        SelectionOps.dsirToks(arrived, isTarget, dim), counts, dim, k,
+        // the fold runs under a live stream's lifetime: pin to parquet
+        // scratch so an executor kill can't strand a checkpoint block
+        scratch = Some(s"$workDir/scratch"))
+    }
   }
 
   /** Stage + run in a fresh work dir: the q142 entry. */
   def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int,
-            dim: Int, k: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q142_dsir_stream").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir, dim, k)
-  }
+            dim: Int, k: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q142_dsir_stream", docs, nSplits)(
+      run(spark, _, _, dim, k))
 }

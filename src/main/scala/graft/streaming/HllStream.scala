@@ -4,7 +4,6 @@ import graft.functions.HllSketch
 import graft.queries.SketchOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Continuous distinct-count monitoring with the portable HLL (q125):
   * keys arrive as files and every micro-batch folds into the persistent
@@ -27,34 +26,14 @@ object HllStream {
     */
   def run(spark: SparkSession, inputDir: String, workDir: String): DataFrame = {
     val partsDir = s"$workDir/hll_partials"
-    // micro-batch-sized inputs plan with AQE off + narrow width;
-    // rung-scale inputs keep the session's AQE planning (the same
-    // 64 MB cost switch the store-gated streams use — always-narrow
-    // regressed the sf10 rung once the clone-session fix made the
-    // narrow scope actually reach the batch plans)
-    val smallInput = graft.pipeline.Load.storeBytes(spark, inputDir) <
-      64L * 1024 * 1024
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // sketch-sized reduce side by construction: always narrow (BatchTuning)
-        BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow = smallInput) {
-        graft.pipeline.Load.writeBatchPartial(
-          batch
-            .select(SketchOps.hllPack(col("key")).as("pack"))
-            .agg(HllSketch.hllRegisters(col("pack"), M).as("regs"))
-            .coalesce(1),
-          partsDir, batchId)
-        ()
-        }
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatchFold.runInputGated(spark, inputDir, workDir) { (batch, batchId) =>
+      graft.pipeline.Load.writeBatchPartial(
+        batch
+          .select(SketchOps.hllPack(col("key")).as("pack"))
+          .agg(HllSketch.hllRegisters(col("pack"), M).as("regs"))
+          .coalesce(1),
+        partsDir, batchId)
+    }
     // fold the partial register arrays entrywise by MAX, rebuild the
     // register array in index order, and digest exactly like q124
     val folded = spark.read.parquet(partsDir)
@@ -62,7 +41,7 @@ object HllStream {
       .groupBy(col("idx")).agg(max(col("r")).as("r"))
       .agg(sort_array(collect_list(struct(col("idx"), col("r")))).as("a"))
       .select(transform(col("a"), x => x("r")).as("regs"))
-    val exact = spark.read.parquet(s"$inputDir/split_*.parquet")
+    val exact = MicroBatchFold.arrived(spark, inputDir)
       .agg(countDistinct(col("key")).as("n_exact"))
     SketchOps.hllDigest(folded.crossJoin(exact), M)
   }
@@ -70,10 +49,6 @@ object HllStream {
   /** Stage + run in a fresh work dir: the q125 entry. `keyed` must carry
     * (doc_id, key) — doc_id only orders the staged arrival.
     */
-  def runOn(spark: SparkSession, keyed: DataFrame, nSplits: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q125_hll_stream").toString
-    SpanDedupStream.stageSplits(spark, keyed, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir)
-  }
+  def runOn(spark: SparkSession, keyed: DataFrame, nSplits: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q125_hll_stream", keyed, nSplits)(run(spark, _, _))
 }

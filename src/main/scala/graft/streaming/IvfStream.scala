@@ -5,7 +5,6 @@ import graft.queries.SelectionOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming ANN index maintenance (q111) — q86's continuous-ingestion
   * twin: vectors arrive as files, the FIRST batch pins the seeded
@@ -41,16 +40,9 @@ object IvfStream {
   def run(spark: SparkSession, inputDir: String, workDir: String): DataFrame = {
     val storeDir = s"$workDir/bucket_store"
     val centDir = s"$workDir/centroids"
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // narrow-shuffle/AQE-off scope below the cost switch (BatchTuning)
-        val big = graft.pipeline.Load.storeBytes(spark, storeDir) >=
-          64L * 1024 * 1024
-        BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow = !big) {
+    MicroBatchFold.run(spark, inputDir, workDir) { (batch, batchId) =>
+      MicroBatchFold.scoped(spark, batch,
+          narrow = MicroBatchFold.below(spark, storeDir)) {
         // staged via the shared doc_id-range stager; restore the key
         // name. Zero-norm rows drop here like everywhere in the
         // similarity family (r13 degenerate sweep): they can neither
@@ -103,13 +95,8 @@ object IvfStream {
             SelectionOps.assignWith(e, cent).repartition(col("bucket")),
             storeDir, batchId, partitionCols = Seq("bucket"))
         }
-        ()
-        }
       }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     // the q86 probe over the accumulated store; a corpus that pinned no
     // quantizer (no usable seed ids) built no store — empty answer
     if (graft.pipeline.Load.readStoreIfExists(spark, storeDir).isEmpty)
@@ -137,12 +124,8 @@ object IvfStream {
     * staged on vec_id via the shared doc_id-range stager.
     */
   def runOn(spark: SparkSession, embeddings: DataFrame,
-            nSplits: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q111_ivf_stream").toString
-    SpanDedupStream.stageSplits(spark,
-      embeddings.withColumnRenamed("vec_id", "doc_id"),
-      s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir)
-  }
+            nSplits: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q111_ivf_stream",
+      embeddings.withColumnRenamed("vec_id", "doc_id"), nSplits)(
+      run(spark, _, _))
 }

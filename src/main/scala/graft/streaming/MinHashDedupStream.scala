@@ -4,7 +4,6 @@ import graft.functions.ShingleKernel.{minhashSig, shinglePacks}
 import graft.pipeline.Load
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Continuous-ingestion MinHash+LSH near-dup dedup (q129): documents
@@ -60,11 +59,6 @@ object MinHashDedupStream {
   private val NumBands = 8
   private val BandSize = 4
 
-  /** Store size above which a batch pays the bucket-list job to
-    * partition-prune its probes; below it a full scan is cheaper.
-    */
-  private val PruneThresholdBytes = 64L * 1024 * 1024
-
   private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
       schema)
@@ -96,7 +90,8 @@ object MinHashDedupStream {
 
   def run(spark: SparkSession, inputDir: String, workDir: String,
           nBuckets: Int = 16,
-          pruneThresholdBytes: Long = PruneThresholdBytes): DataFrame = {
+          pruneThresholdBytes: Long = MicroBatchFold.NarrowBelowBytes)
+      : DataFrame = {
     runStream(spark, inputDir, workDir, nBuckets, pruneThresholdBytes,
       foldCc = false)
     reportStores(spark, workDir, "q129")
@@ -114,7 +109,7 @@ object MinHashDedupStream {
     */
   def runClusters(spark: SparkSession, inputDir: String, workDir: String,
                   nBuckets: Int = 16,
-                  pruneThresholdBytes: Long = PruneThresholdBytes)
+                  pruneThresholdBytes: Long = MicroBatchFold.NarrowBelowBytes)
       : DataFrame = {
     runStream(spark, inputDir, workDir, nBuckets, pruneThresholdBytes,
       foldCc = true)
@@ -131,19 +126,10 @@ object MinHashDedupStream {
   private def runStream(spark: SparkSession, inputDir: String,
                         workDir: String, nBuckets: Int,
                         pruneThresholdBytes: Long, foldCc: Boolean): Unit = {
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        processBatch(spark, batch0, batchId, workDir, nBuckets,
-          pruneThresholdBytes, foldCc)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatchFold.run(spark, inputDir, workDir) { (batch0, batchId) =>
+      processBatch(spark, batch0, batchId, workDir, nBuckets,
+        pruneThresholdBytes, foldCc)
+    }
   }
 
   /** One micro-batch of the incremental near-dup dedup — the
@@ -170,7 +156,7 @@ object MinHashDedupStream {
     val smallStores =
       Load.storeBytes(spark, bandStoreDir) < pruneThresholdBytes &&
         Load.storeBytes(spark, packStoreDir) < pruneThresholdBytes
-    BatchTuning.withNarrowShufflesOn(Seq(spark, batch0.sparkSession), narrow = smallStores) {
+    MicroBatchFold.scoped(spark, batch0, narrow = smallStores) {
     // per-doc shingle packs and banded signature, one codegen'd
     // kernel pass (the q70 shape); docs under 3 tokens have no
     // shingles and band with nothing
@@ -342,26 +328,19 @@ object MinHashDedupStream {
   }
 
   /** Stage + run in a fresh work dir: the q129 entry. Arrival order is
-    * staged to doc_id order (SpanDedupStream.stageSplits), which is
+    * staged to doc_id order (MicroBatchFold.stageSplits), which is
     * what lets the stream share the batch oracle.
     */
   def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int,
-            pruneThresholdBytes: Long = PruneThresholdBytes): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q129_minhash_stream").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir,
-      pruneThresholdBytes = pruneThresholdBytes)
-  }
+            pruneThresholdBytes: Long = MicroBatchFold.NarrowBelowBytes)
+      : DataFrame =
+    MicroBatchFold.staged(spark, "q129_minhash_stream", docs, nSplits)(
+      run(spark, _, _, pruneThresholdBytes = pruneThresholdBytes))
 
   /** Stage + run with the CC fold: the q134 entry. */
   def runClustersOn(spark: SparkSession, docs: DataFrame, nSplits: Int,
-                    pruneThresholdBytes: Long = PruneThresholdBytes)
-      : DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q134_inc_cc_stream").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    runClusters(spark, s"$workDir/input", workDir,
-      pruneThresholdBytes = pruneThresholdBytes)
-  }
+                    pruneThresholdBytes: Long = MicroBatchFold.NarrowBelowBytes)
+      : DataFrame =
+    MicroBatchFold.staged(spark, "q134_inc_cc_stream", docs, nSplits)(
+      runClusters(spark, _, _, pruneThresholdBytes = pruneThresholdBytes))
 }

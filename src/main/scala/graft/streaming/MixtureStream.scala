@@ -3,7 +3,6 @@ package graft.streaming
 import graft.queries.SelectionOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Temperature-based mixture sampling over a document stream (q146) —
   * q144's continuous-ingestion twin, the q109/q122/q138/q142
@@ -27,35 +26,15 @@ object MixtureStream {
   def run(spark: SparkSession, inputDir: String, workDir: String)
       : DataFrame = {
     val cntDir = s"$workDir/lang_counts"
-    // micro-batch-sized inputs plan with AQE off + narrow width;
-    // rung-scale inputs keep the session's AQE planning (the same
-    // 64 MB cost switch the store-gated streams use — always-narrow
-    // regressed the sf10 rung once the clone-session fix made the
-    // narrow scope actually reach the batch plans)
-    val smallInput = graft.pipeline.Load.storeBytes(spark, inputDir) <
-      64L * 1024 * 1024
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow = smallInput) {
-          graft.pipeline.Load.writeBatchPartial(
-            batch.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
-              .coalesce(1),
-            cntDir, batchId)
-          ()
-        }
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatchFold.runInputGated(spark, inputDir, workDir) { (batch, batchId) =>
+      graft.pipeline.Load.writeBatchPartial(
+        batch.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
+          .coalesce(1),
+        cntDir, batchId)
+    }
     val counts = spark.read.parquet(cntDir)
       .groupBy(col("lang")).agg(sum(col("n_lang")).as("n_lang"))
-    val arrived = SelectionOps.mixDocs(
-      spark.read.parquet(s"$inputDir/split_*.parquet"))
+    val arrived = SelectionOps.mixDocs(MicroBatchFold.arrived(spark, inputDir))
     SelectionOps.mixtureResult(arrived, SelectionOps.mixtureTargets(counts),
       // the fold runs under a live stream's lifetime: pin to parquet
       // scratch so an executor kill can't strand a checkpoint block
@@ -63,10 +42,6 @@ object MixtureStream {
   }
 
   /** Stage + run in a fresh work dir: the q146 entry. */
-  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q146_mixture_stream").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir)
-  }
+  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q146_mixture_stream", docs, nSplits)(run(spark, _, _))
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.queries.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Naive-Bayes classifier training over a document stream (q138) —
   * q137's continuous-ingestion twin, the q122 pattern applied to the
@@ -26,52 +25,33 @@ object NbClassifierStream {
   def run(spark: SparkSession, inputDir: String, workDir: String): DataFrame = {
     val tokDir = s"$workDir/nb_tok_counts"
     val docDir = s"$workDir/nb_doc_counts"
-    // micro-batch-sized inputs plan with AQE off + narrow width;
-    // rung-scale inputs keep the session's AQE planning (the same
-    // 64 MB cost switch the store-gated streams use — always-narrow
-    // regressed the sf10 rung once the clone-session fix made the
-    // narrow scope actually reach the batch plans)
-    val smallInput = graft.pipeline.Load.storeBytes(spark, inputDir) <
-      64L * 1024 * 1024
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow = smallInput) {
-          val train = batch
-            .select(col("doc_id").cast("long").as("doc_id"),
-              col("lang"), col("text"))
-            .where(col("doc_id") % 5 =!= 4)
-          // two independent batch-keyed count partials — overlap them
-          // on a driver pool (Sinks.inParallel, guide §2.6)
-          Sinks.inParallel(spark, Seq(
-            s"b$batchId: token count write" -> (() =>
-              graft.pipeline.Load.writeBatchPartial(
-                TextOps.nbToks(train)
-                  .groupBy(col("lang").as("cls"), col("tok"))
-                  .agg(count(lit(1)).as("n"))
-                  .coalesce(1),
-                tokDir, batchId)),
-            s"b$batchId: doc count write" -> (() =>
-              graft.pipeline.Load.writeBatchPartial(
-                train.groupBy(col("lang").as("cls"))
-                  .agg(count(lit(1)).as("nd"))
-                  .coalesce(1),
-                docDir, batchId))))
-          ()
-        }
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatchFold.runInputGated(spark, inputDir, workDir) { (batch, batchId) =>
+      val train = batch
+        .select(col("doc_id").cast("long").as("doc_id"),
+          col("lang"), col("text"))
+        .where(col("doc_id") % 5 =!= 4)
+      // two independent batch-keyed count partials — overlap them
+      // on a driver pool (Sinks.inParallel, guide §2.6)
+      Sinks.inParallel(spark, Seq(
+        s"b$batchId: token count write" -> (() =>
+          graft.pipeline.Load.writeBatchPartial(
+            TextOps.nbToks(train)
+              .groupBy(col("lang").as("cls"), col("tok"))
+              .agg(count(lit(1)).as("n"))
+              .coalesce(1),
+            tokDir, batchId)),
+        s"b$batchId: doc count write" -> (() =>
+          graft.pipeline.Load.writeBatchPartial(
+            train.groupBy(col("lang").as("cls"))
+              .agg(count(lit(1)).as("nd"))
+              .coalesce(1),
+            docDir, batchId))))
+    }
     val c2 = spark.read.parquet(tokDir)
       .groupBy(col("cls"), col("tok")).agg(sum(col("n")).as("c2"))
     val priors = spark.read.parquet(docDir)
       .groupBy(col("cls")).agg(sum(col("nd")).as("ndoc"))
-    val test = spark.read.parquet(s"$inputDir/split_*.parquet")
+    val test = MicroBatchFold.arrived(spark, inputDir)
       .select(col("doc_id").cast("long").as("doc_id"),
         col("lang"), col("text"))
       .where(col("doc_id") % 5 === 4)
@@ -79,10 +59,6 @@ object NbClassifierStream {
   }
 
   /** Stage + run in a fresh work dir: the q138 entry. */
-  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q138_nb_stream").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir)
-  }
+  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q138_nb_stream", docs, nSplits)(run(spark, _, _))
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.ops.SpanDedup
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Continuous-ingestion form of span dedup (q101): documents arrive as
@@ -23,93 +22,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object SpanDedupStream {
 
   private val packSchema = StructType(Seq(StructField("pack", LongType)))
-
-  /** Store size above which a batch pays the bucket-list job to
-    * partition-prune its probe; below it a full scan is cheaper.
-    */
-  private val PruneThresholdBytes = 64L * 1024 * 1024
-
-  /** Stage `docs` as `nSplits` doc_id-range parquet files under
-    * `inputDir`, named and modification-timestamped in range order so
-    * the file source replays them oldest-first (it orders by mod time):
-    * arrival order = doc_id order.
-    */
-  def stageSplits(spark: SparkSession, docs: DataFrame, inputDir: String,
-                  nSplits: Int): Unit = {
-    // Cost-switched staging plan: when the frame to stage is itself a
-    // narrow scan (the small-fixture case — one or two input splits),
-    // plan it like a micro batch (AQE off, narrow width — each AQE
-    // exchange materialization is an extra scheduling round-trip on a
-    // table this size). A WIDE input keeps the session's AQE planning:
-    // narrowing it funneled a 100x rung's staged table through 4
-    // AQE-off partitions (measured at sf10: q125 35 -> 51 s before
-    // this switch). The hash-repartition on `split` keeps each split
-    // value wholly inside one task at any width, so the
-    // one-file-per-split layout the replay order depends on is
-    // width-independent.
-    val width = math.max(4, nSplits)
-    val narrow = docs.rdd.getNumPartitions <= width
-    BatchTuning.withNarrowShuffles(spark, narrow = narrow,
-      partitions = width) {
-      stageSplitsInner(spark, docs, inputDir, nSplits)
-    }
-  }
-
-  private def stageSplitsInner(spark: SparkSession, docs: DataFrame,
-                               inputDir: String, nSplits: Int): Unit = {
-    val boundRow = docs.agg(max(col("doc_id"))).collect().head
-    new java.io.File(inputDir).mkdirs()
-    val tmp = s"$inputDir/_stage"
-    if (boundRow.isNullAt(0)) {
-      // EMPTY corpus (r13 degenerate sweep): max(doc_id) is null, and a
-      // partitionBy write would stage zero files — the file source then
-      // has nothing to infer a schema from and every stream twin dies.
-      // Stage ONE zero-row file with the real schema instead: the
-      // stream runs one empty micro-batch and its accumulated output
-      // is the batch operator's empty result.
-      docs.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-      val file = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(
-          s"staging wrote no parquet part file under $tmp"))
-      val dest = new java.io.File(inputDir, "split_000.parquet")
-      java.nio.file.Files.move(file.toPath, dest.toPath)
-      require(dest.setLastModified(1000000L),
-        s"setLastModified failed on $dest")
-      deleteRecursively(new java.io.File(tmp))
-      return
-    }
-    val bound = boundRow.getLong(0) + 1
-    val span = math.max(1L, (bound + nSplits - 1) / nSplits)
-    // one pass: hive-partition on the split id, then lift each part
-    // file out as an ordered, timestamped arrival
-    docs.withColumn("split", (col("doc_id") / span).cast("int"))
-      .repartition(col("split"))
-      .write.mode(SaveMode.Overwrite).partitionBy("split").parquet(tmp)
-    for (i <- 0 until nSplits) {
-      val dir = new java.io.File(s"$tmp/split=$i")
-      if (dir.isDirectory) {
-        val file = dir.listFiles().find(_.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(
-            s"staging wrote no parquet part file under $dir"))
-        val dest = new java.io.File(inputDir, f"split_$i%03d.parquet")
-        java.nio.file.Files.move(file.toPath, dest.toPath)
-        // distinct ascending timestamps pin the replay order (the file
-        // source sorts by mod time); correctness of the stream=batch
-        // guarantee depends on it, so a failed/coarse-grained mtime set
-        // must be loud, not a silent reorder
-        require(dest.setLastModified(1000000L + i * 60000L),
-          s"setLastModified failed on $dest: file-source replay order " +
-            "would be undefined")
-      }
-    }
-    deleteRecursively(new java.io.File(tmp))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
 
   /** Run the incremental dedup over the staged splits to completion
     * (one micro-batch per file) and return the accumulated per-doc
@@ -146,19 +58,9 @@ object SpanDedupStream {
     */
   def run(spark: SparkSession, inputDir: String, workDir: String,
           w: Int, nBuckets: Int = 16, compactEvery: Int = 8): DataFrame = {
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        processBatch(spark, batch0, batchId, workDir, w, nBuckets,
-          compactEvery)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatchFold.run(spark, inputDir, workDir) { (batch0, batchId) =>
+      processBatch(spark, batch0, batchId, workDir, w, nBuckets, compactEvery)
+    }
     spark.read.parquet(s"$workDir/out")
       .select(col("doc_id"), col("n_tok"), col("n_dup_spans"),
         col("n_removed"), col("kept_hash"))
@@ -190,12 +92,11 @@ object SpanDedupStream {
     // grams' distinct hash buckets: bounded by nBuckets, a tiny
     // driver-side list, not data. Cost-based: below the size
     // threshold a full scan beats paying an extra job for the list.
-    val big = graft.pipeline.Load.storeBytes(spark, storeDir) >=
-      PruneThresholdBytes
+    val big = !MicroBatchFold.below(spark, storeDir)
     // below the switch, plan the whole batch with narrow shuffles and
     // AQE off — micro-batch data never needs runtime re-planning, and
     // each AQE exchange materialization is a whole extra job
-    BatchTuning.withNarrowShufflesOn(Seq(spark, batch0.sparkSession), narrow = !big) {
+    MicroBatchFold.scoped(spark, batch0, narrow = !big) {
     val store = graft.pipeline.Load
       .readStoreExcludingBatch(spark, storeDir, batchId)
       .map { s =>
@@ -240,10 +141,7 @@ object SpanDedupStream {
 
   /** Stage + run in a fresh work dir: the q101 entry. */
   def runOn(spark: SparkSession, docs: DataFrame, w: Int,
-            nSplits: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q101_span_stream").toString
-    stageSplits(spark, docs, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir, w)
-  }
+            nSplits: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q101_span_stream", docs, nSplits)(
+      run(spark, _, _, w))
 }

@@ -4,7 +4,6 @@ import graft.functions.PolyHash.polyHash
 import graft.queries.CurationOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Incremental URL frontier (q179): the continuous-ingestion twin of
@@ -49,18 +48,9 @@ object UrlFrontierStream {
     */
   def run(spark: SparkSession, inputDir: String, workDir: String,
           nBuckets: Int = 16, compactEvery: Int = 8): DataFrame = {
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, workDir, nBuckets, compactEvery)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatchFold.run(spark, inputDir, workDir) { (batch, batchId) =>
+      processBatch(spark, batch, batchId, workDir, nBuckets, compactEvery)
+    }
     spark.read.parquet(s"$workDir/partials")
       .groupBy(col("host"))
       .agg(sum(col("n_raw")).as("n_raw"),
@@ -92,9 +82,8 @@ object UrlFrontierStream {
       .withColumn("pack2",
         polyHash(col("canon"), 53) * lit(PackBase) + polyHash(col("canon"), 97))
       .cache()
-    val big = graft.pipeline.Load.storeBytes(spark, storeDir) >=
-      64L * 1024 * 1024
-    BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow = !big) {
+    val big = !MicroBatchFold.below(spark, storeDir)
+    MicroBatchFold.scoped(spark, batch, narrow = !big) {
       val store = graft.pipeline.Load
         .readStoreExcludingBatch(spark, storeDir, batchId)
         .map { s =>
@@ -147,10 +136,6 @@ object UrlFrontierStream {
   }
 
   /** Stage + run in a fresh work dir: the q179 entry. */
-  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q179_url_frontier").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir)
-  }
+  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q179_url_frontier", docs, nSplits)(run(spark, _, _))
 }

@@ -4,7 +4,6 @@ import graft.functions.PolyHash.polyHash
 import graft.ops.{HtmlExtract, Warc}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** End-to-end incremental crawl ingestion (q182): WARC segments arrive
   * as files — the exact shape a 100 TB crawl drop has on disk — and
@@ -64,75 +63,46 @@ object WarcIngestStream {
     // a multi-GB contiguous byte vector (measured OOM at the sf100
     // rung). 32 × ~1 MB ≈ 32 MB per batch — the right order for any
     // row size this source stages.
-    val batchKey = "spark.sql.parquet.columnarReaderBatchSize"
-    val prevBatch = spark.conf.get(batchKey, "4096")
-    spark.conf.set(batchKey, "32")
-    try runInner(spark, inputDir, partsDir, workDir)
-    finally spark.conf.set(batchKey, prevBatch)
-  }
-
-  private def runInner(spark: SparkSession, inputDir: String,
-                       partsDir: String, workDir: String): DataFrame = {
-    // micro-batch-sized inputs plan with AQE off + narrow width;
-    // rung-scale inputs keep the session's AQE planning (the same
-    // 64 MB cost switch the store-gated streams use — always-narrow
-    // regressed the sf10 rung once the clone-session fix made the
-    // narrow scope actually reach the batch plans)
-    val smallInput = graft.pipeline.Load.storeBytes(spark, inputDir) <
-      64L * 1024 * 1024
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow = smallInput) {
-          val recs = batch
-            .select(Warc.warcParseLenient(col("seg")).as("st"))
-            .select(explode(col("st.records")).as("r"))
-            .select(
-              regexp_extract(col("r.uri"),
-                "\\.com/([A-Za-z0-9]+)/doc/", 1).as("lang"),
-              col("r.content_length").as("clen"),
-              HtmlExtract.htmlMainStats(col("r.payload").cast("string"))
-                .as("hs"))
-          graft.pipeline.Load.writeBatchPartial(
-            recs.groupBy(col("lang")).agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("clen")).as("sum_clen"),
-              sum(col("hs.n_kept")).as("n_kept"),
-              sum(col("hs.kept_chars")).as("kept_chars"),
-              sum(polyHash(coalesce(col("hs.main_text"), lit(""))))
-                .as("text_hashsum"))
-              .coalesce(1),
-            partsDir, batchId)
-          ()
-        }
+    BatchTuning.withConf(spark,
+        "spark.sql.parquet.columnarReaderBatchSize" -> "32") {
+      MicroBatchFold.runInputGated(spark, inputDir, workDir) { (batch, batchId) =>
+        val recs = batch
+          .select(Warc.warcParseLenient(col("seg")).as("st"))
+          .select(explode(col("st.records")).as("r"))
+          .select(
+            regexp_extract(col("r.uri"),
+              "\\.com/([A-Za-z0-9]+)/doc/", 1).as("lang"),
+            col("r.content_length").as("clen"),
+            HtmlExtract.htmlMainStats(col("r.payload").cast("string"))
+              .as("hs"))
+        graft.pipeline.Load.writeBatchPartial(
+          recs.groupBy(col("lang")).agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("clen")).as("sum_clen"),
+            sum(col("hs.n_kept")).as("n_kept"),
+            sum(col("hs.kept_chars")).as("kept_chars"),
+            sum(polyHash(coalesce(col("hs.main_text"), lit(""))))
+              .as("text_hashsum"))
+            .coalesce(1),
+          partsDir, batchId)
       }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(partsDir)
-      .groupBy(col("lang"))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("sum_clen")).as("sum_clen"),
-        sum(col("n_kept")).as("n_kept"),
-        sum(col("kept_chars")).as("kept_chars"),
-        sum(col("text_hashsum")).as("text_hashsum"))
-      .orderBy(col("lang"))
+      spark.read.parquet(partsDir)
+        .groupBy(col("lang"))
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("sum_clen")).as("sum_clen"),
+          sum(col("n_kept")).as("n_kept"),
+          sum(col("kept_chars")).as("kept_chars"),
+          sum(col("text_hashsum")).as("text_hashsum"))
+        .orderBy(col("lang"))
+    }
   }
 
   /** Build segments, stage them as timed arrivals, run: the q182 entry.
-    * (stageSplits splits on a `doc_id` column, so the segment key rides
+    * (the stager splits on a `doc_id` column, so the segment key rides
     * it renamed — one arrival file per contiguous file_id range.)
     */
-  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q182_warc_ingest").toString
-    SpanDedupStream.stageSplits(spark,
-      buildSegments(docs).withColumnRenamed("file_id", "doc_id"),
-      s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir)
-  }
+  def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int): DataFrame =
+    MicroBatchFold.staged(spark, "q182_warc_ingest",
+      buildSegments(docs).withColumnRenamed("file_id", "doc_id"), nSplits)(
+      run(spark, _, _))
 }

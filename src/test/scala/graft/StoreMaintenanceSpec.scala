@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline.Load
-import graft.streaming.SpanDedupStream
+import graft.streaming.{MicroBatchFold, SpanDedupStream}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
@@ -81,7 +81,7 @@ class StoreMaintenanceSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val workDir = java.nio.file.Files
       .createTempDirectory("graft_replay20").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", 20)
+    MicroBatchFold.stageSplits(spark, docs, s"$workDir/input", 20)
     val streamed = SpanDedupStream.run(spark, s"$workDir/input", workDir,
         w = 4, nBuckets = 8, compactEvery = 4)
       .collect().map(_.toSeq)

@@ -1,8 +1,9 @@
 package graft
 
+import graft.streaming.MicroBatchFold
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 /** Restart-from-checkpoint evidence (r14 verdict #6): every stream twin
   * elsewhere runs start-to-finish inside ONE query. Production
@@ -20,27 +21,21 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 class StreamRestartSpec extends SparkSpec {
 
   /** Phase 1: run the staged splits through `body` (a family's real
-    * processBatch) and throw AFTER `failAfter` completes — its out and
-    * store partials are on disk, its checkpoint commit is not. The
+    * processBatch) on the production file source and drain
+    * ([[MicroBatchFold]]), and throw AFTER `failAfter` completes — its
+    * out and store partials are on disk, its checkpoint commit is not. The
     * restarted query must therefore REPROCESS that batchId on top of
     * its own leftovers.
     */
   private def crashAfter(inputDir: String, ckptDir: String, failAfter: Long)
                         (body: (DataFrame, Long) => Unit): Unit = {
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        body(b, id)
-        if (id == failAfter)
-          throw new RuntimeException(s"injected crash after batch $id")
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    val e = intercept[StreamingQueryException](q.awaitTermination())
+    val e = intercept[StreamingQueryException](
+      MicroBatchFold.drain(MicroBatchFold.source(spark, inputDir), ckptDir) {
+        (b, id) =>
+          body(b, id)
+          if (id == failAfter)
+            throw new RuntimeException(s"injected crash after batch $id")
+      })
     assert(e.getMessage.contains("injected crash") ||
       Option(e.getCause).exists(_.getMessage.contains("injected crash")),
       s"query died for the wrong reason: $e")
@@ -55,8 +50,7 @@ class StreamRestartSpec extends SparkSpec {
   test("q101 span store: crash after batch 1, new query resumes to the batch answer") {
     val docs = Tables.documents(spark, sfDir)
     val work = freshDir("restart_span")
-    graft.streaming.SpanDedupStream
-      .stageSplits(spark, docs, s"$work/input", nSplits = 4)
+    MicroBatchFold.stageSplits(spark, docs, s"$work/input", nSplits = 4)
     crashAfter(s"$work/input", s"$work/ckpt", failAfter = 1L) { (b, id) =>
       graft.streaming.SpanDedupStream
         .processBatch(spark, b, id, work, w = 8, nBuckets = 16,
@@ -79,8 +73,7 @@ class StreamRestartSpec extends SparkSpec {
   test("q129 minhash store: crash after batch 1, new query resumes to the batch answer") {
     val docs = Tables.documents(spark, sfDir)
     val work = freshDir("restart_minhash")
-    graft.streaming.SpanDedupStream
-      .stageSplits(spark, docs, s"$work/input", nSplits = 4)
+    MicroBatchFold.stageSplits(spark, docs, s"$work/input", nSplits = 4)
     val prune = 64L * 1024 * 1024
     crashAfter(s"$work/input", s"$work/ckpt", failAfter = 1L) { (b, id) =>
       graft.streaming.MinHashDedupStream
@@ -106,8 +99,7 @@ class StreamRestartSpec extends SparkSpec {
   test("q104 prefix store: crash after batch 1, new query resumes to the batch answer") {
     val docs = Tables.documents(spark, sfDir)
     val work = freshDir("restart_corpus")
-    graft.streaming.SpanDedupStream
-      .stageSplits(spark, docs, s"$work/input", nSplits = 4)
+    MicroBatchFold.stageSplits(spark, docs, s"$work/input", nSplits = 4)
     crashAfter(s"$work/input", s"$work/ckpt", failAfter = 1L) { (b, id) =>
       graft.streaming.CorpusPrepStream
         .processBatch(spark, b, id, work, nBuckets = 16, compactEvery = 8)

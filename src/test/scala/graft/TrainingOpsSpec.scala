@@ -453,7 +453,7 @@ class TrainingOpsSpec extends SparkSpec {
   // ---- q101 incremental span dedup ---------------------------------------
 
   test("q101: later batch is trimmed against the earlier batch's gram store") {
-    import graft.streaming.SpanDedupStream
+    import graft.streaming.{MicroBatchFold, SpanDedupStream}
     import spark.implicits._
     def ph(s: String): Long =
       graft.functions.TextHash.polyHash(
@@ -463,7 +463,7 @@ class TrainingOpsSpec extends SparkSpec {
     val d1 = "z0 z1 " + (4 to 11).map(i => s"s$i").mkString(" ") + " z2"
     val docs = Seq((0L, d0), (1L, d1)).toDF("doc_id", "text")
     val workDir = java.nio.file.Files.createTempDirectory("q101_spec").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", 2)
+    MicroBatchFold.stageSplits(spark, docs, s"$workDir/input", 2)
     def parquets(dir: String): Int =
       Option(new java.io.File(dir).listFiles()).toSeq.flatten
         .count(_.getName.endsWith(".parquet"))
@@ -506,7 +506,7 @@ class TrainingOpsSpec extends SparkSpec {
   // ---- q104 incremental corpus prep --------------------------------------
 
   test("q104: earlier batch's prefix store drops a later near-dup; partials fold") {
-    import graft.streaming.{CorpusPrepStream, SpanDedupStream}
+    import graft.streaming.{CorpusPrepStream, MicroBatchFold}
     import spark.implicits._
     // all three docs pass the gate (32 words, mean len ~3.8, stopwords)
     val pfxA = "the quick brown fox and lion of the wood ran far into dark deep cold cave"
@@ -522,7 +522,7 @@ class TrainingOpsSpec extends SparkSpec {
       .agg(sum(col("quality_pass"))).collect().head.getLong(0) == 3L)
     // splits: {0} then {2, 3} — b's only dup source sits in batch 1
     val workDir = java.nio.file.Files.createTempDirectory("q104_spec").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", 2)
+    MicroBatchFold.stageSplits(spark, docs, s"$workDir/input", 2)
     val streamed = CorpusPrepStream.run(spark, s"$workDir/input", workDir)
       .collect().map(_.toSeq)
     // b is gone purely through the cross-batch prefix store
