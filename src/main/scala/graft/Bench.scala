@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are fully materialized via collect()
   * (not count(), which would let Catalyst prune the computed columns).
@@ -50,36 +48,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same multi-process hooks as Verify (round-12 verdict #3):
-    // SPARK_GRAFT_MASTER=local-cluster[n,c,mem] + SPARK_GRAFT_JARS run
-    // the identical bench against real executor JVMs
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    sys.env.get("SPARK_GRAFT_EXEC_MEM")
-      .foreach(m => builder.config("spark.executor.memory", m))
-    val spark = builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // fixture files are single small parquets; split finer so scans use
-      // the cores (a real cluster with 128MB+ files keeps the default)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // reclaim shuffle files of GC'd stages promptly: iterative jobs
-      // (PageRank rounds at the sf100 rung) otherwise accumulate every
-      // round's shuffle on disk until the default 30-min periodic GC —
-      // measured as a disk-full crash at 1.17B edges
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // released rank/edge snapshots WARN about truncated lineage on every
-    // unpersist (intentional: retired checkpoints are never re-read) —
-    // mute the RDD loggers so the noise can't interleave bench output
-    org.apache.logging.log4j.core.config.Configurator
-      .setLevel("org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.start("graft-bench")
     // warm the JVM/codegen paths once so per-query numbers reflect the
     // engine, not first-call classloading
     SparkEntry.queries.get("q01_orders_kpis")

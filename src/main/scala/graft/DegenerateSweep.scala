@@ -133,16 +133,7 @@ object DegenerateSweep {
   def main(args: Array[String]): Unit = {
     val baseDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft_degenerate"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-degenerate-sweep")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start("graft-degenerate-sweep")
     val scenarios = buildScenarios(spark, baseDir, outRoot)
     var total = 0
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

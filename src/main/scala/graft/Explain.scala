@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `sbt "runMain graft.Explain q08_revenue_by_nation"`
   * prints the formatted physical plan of one (or all) registered queries
   * against SPARK_GRAFT_SF_DIR — the review loop for pushdown, pruning,
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start("graft-explain")
     val names = if (args.nonEmpty) args.toSeq else queries.Registry.all.map(_.name)
     names.foreach { n =>
       println(s"\n======== $n ========")

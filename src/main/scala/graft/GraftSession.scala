@@ -1,0 +1,85 @@
+package graft
+
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.sql.SparkSession
+
+/** The one place a graft session is built. Every main and the test
+  * suite take their session from here, so the settings the suite
+  * certifies are the settings every main runs, and the library's
+  * strategies and SQL functions ([[graft.plans.GraftExtensions]]) are
+  * installed everywhere, the SQL endpoint included.
+  *
+  * Environment:
+  *   - SPARK_GRAFT_CPUS: local cores and shuffle width (default: every
+  *     available processor);
+  *   - SPARK_GRAFT_MASTER: overrides `local[cpus]`, e.g.
+  *     `local-cluster[n,c,mem]` runs the same code against real executor
+  *     JVMs (Netty shuffle, torrent broadcast, serialized closures);
+  *   - SPARK_GRAFT_JARS / SPARK_GRAFT_EXEC_MEM: the engine jar shipped
+  *     to those executors, and their heap.
+  */
+object GraftSession {
+
+  /** SPARK_GRAFT_CPUS as a core count: unset means every available
+    * processor; anything but a positive integer fails here, naming the
+    * variable, rather than as a master-URL parse error inside Spark.
+    */
+  def parseCpus(value: Option[String]): Int = value match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
+  lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** The session every main runs: a caller that needs a further static
+    * conf adds it on the returned builder and passes that to [[start]].
+    */
+  def builder(app: String, cpus: Int): SparkSession.Builder = {
+    val b = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+      .appName(app)
+    sys.env.get("SPARK_GRAFT_JARS").foreach(j => b.config("spark.jars", j))
+    sys.env.get("SPARK_GRAFT_EXEC_MEM")
+      .foreach(m => b.config("spark.executor.memory", m))
+    b.config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      // fixture files are single small parquets; split finer so scans use
+      // the cores (a real cluster with 128MB+ files keeps the default)
+      .config("spark.sql.files.maxPartitionBytes", "4m")
+      // reclaim shuffle files of GC'd stages promptly: iterative jobs
+      // (PageRank rounds at the sf100 rung) otherwise accumulate every
+      // round's shuffle on disk until the default 30-min periodic GC —
+      // measured as a disk-full crash at 1.17B edges
+      .config("spark.cleaner.periodicGC.interval", "1min")
+      .config("spark.ui.enabled", "false")
+  }
+
+  def start(app: String): SparkSession = start(builder(app, cpus))
+
+  /** Build `b` and apply the one log policy: WARN, with known-benign
+    * warnings raised to ERROR so they cannot bury real signals:
+    *   - org.apache.spark.rdd: released rank/edge snapshots warn about
+    *     truncated lineage on every unpersist (retired checkpoints are
+    *     never re-read);
+    *   - WindowExec: "No Partition Defined for Window operation", from
+    *     global windows whose inputs are provably small aggregates;
+    *   - ResolveWriteToStream: the temporary-checkpoint notice of
+    *     streams.
+    * DAGScheduler keeps WARN: it also reports real signals such as large
+    * task binaries.
+    */
+  def start(b: SparkSession.Builder): SparkSession = {
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    Seq("org.apache.spark.rdd",
+      "org.apache.spark.sql.execution.window.WindowExec",
+      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream")
+      .foreach(Configurator.setLevel(_, Level.ERROR))
+    spark
+  }
+}

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query profiling diagnostic (not part of the driver surface):
   * for each named query (or all), runs it twice on SPARK_GRAFT_SF_DIR
-  * under the bench's exact session config and prints
+  * under the bench's exact session config (both take theirs from
+  * [[GraftSession]]) and prints
   *
   *   name cold_s warm_s jobs stages tasks cpu_s shuffle_mb
   *
@@ -12,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   * counts. cold-warm ≈ codegen/JIT compile floor (not plan cost); a
   * warm run with many jobs/stages is latency-bound on scheduling
   * round-trips — the guide §1 "where is the time" split for this
-  * local-mode bench.
+  * local-mode bench. A name given N times is profiled N times in the
+  * same session (`Profile q q q`): the steady-state repeat loop.
   */
 object Profile {
   private final class Counter extends org.apache.spark.scheduler.SparkListener {
@@ -65,19 +65,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator
-      .setLevel("org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.start("graft-profile")
     val names =
       if (args.nonEmpty) args.toSeq else queries.Registry.all.map(_.name)
     // same warmup as Bench so cold numbers are comparable to bench rows

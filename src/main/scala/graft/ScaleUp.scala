@@ -124,14 +124,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val Array(srcDir, dstDir, factorStr) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-scaleup")
     run(spark, srcDir, dstDir, factorStr.toInt)
     println(s"[scaleup] wrote ${factorStr}x of $srcDir to $dstDir")
     spark.stop()

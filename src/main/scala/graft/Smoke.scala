@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local twin of the driver's t1 smoke: run SparkEntry.entry and assert
   * rows > 0. `sbt "runMain graft.Smoke"`.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-smoke")
     val rows = SparkEntry.entry(spark).collect()
     println(s"[smoke] entry rows=${rows.length}")
     rows.take(5).foreach(r => println(s"[smoke] $r"))

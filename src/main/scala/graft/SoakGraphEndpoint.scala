@@ -2,8 +2,6 @@ package graft
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
-
 /** BI-endpoint soak AGAINST A CORPUS-RUNG GRAPH BUILD (round-11
   * verdict #7). GraphIsolationSpec proves the widened shuffle width
   * cannot leak into concurrent thrift plans on fixture data; what it
@@ -65,7 +63,7 @@ object SoakGraphEndpoint {
     val graphSf = args(1)
     val maxLatencySec = if (args.length > 2) args(2).toDouble else 60.0
     val maxP99Sec = if (args.length > 3) args(3).toDouble else 3.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // FAIR pools: serve gets a guaranteed minShare of half the cores
     // and 4× the weight of the build pool beyond it
     val poolsXml = java.nio.file.Files.createTempFile("graft-pools", ".xml")
@@ -75,7 +73,7 @@ object SoakGraphEndpoint {
          |  <pool name="serve">
          |    <schedulingMode>FIFO</schedulingMode>
          |    <weight>4</weight>
-         |    <minShare>${math.max(1, cpus.toInt * 3 / 4)}</minShare>
+         |    <minShare>${math.max(1, cpus * 3 / 4)}</minShare>
          |  </pool>
          |  <pool name="build">
          |    <schedulingMode>FIFO</schedulingMode>
@@ -86,24 +84,17 @@ object SoakGraphEndpoint {
          |""".stripMargin)
     // one temp file per soak run otherwise leaks (ADVICE r13)
     poolsXml.toFile.deleteOnExit()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.scheduler.allocation.file", poolsXml.toString)
-      .config("spark.sql.thriftserver.scheduler.pool", "serve")
-      // fine-grained tasks (see Scaladoc #2): the non-preemptive tail
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(
+      GraftSession.builder("graft-soak-graph-endpoint", cpus)
+        .config("spark.scheduler.mode", "FAIR")
+        .config("spark.scheduler.allocation.file", poolsXml.toString)
+        .config("spark.sql.thriftserver.scheduler.pool", "serve")
+        // fine-grained tasks (see Scaladoc #2): the non-preemptive tail
+        .config("spark.sql.files.maxPartitionBytes", "16m"))
     // widen the graph build's shuffle 4× past the fact-scaled width:
     // shorter tasks, faster core handoff to the serve pool
     spark.conf.set("spark.graft.graph.minShuffleWidth",
-      (cpus.toInt * 8).toString)
+      (cpus * 8).toString)
 
     val port = {
       val ss = new java.net.ServerSocket(0)
@@ -164,9 +155,9 @@ object SoakGraphEndpoint {
         // page reads.
         val bs = spark.newSession()
         bs.conf.set("spark.sql.shuffle.partitions",
-          (cpus.toInt * 4).toString)
+          (cpus * 4).toString)
         bs.conf.set("spark.graft.graph.minShuffleWidth",
-          (cpus.toInt * 8).toString)
+          (cpus * 8).toString)
         val t0 = System.nanoTime()
         try buildRows.put(qn,
           queries.Registry.byName(qn).run(bs, dir).count())

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Long-lived SQL endpoint main: mounts the engine's views (base tables +
   * job_data / job_skills / job_summary) on a HiveServer2 thrift socket
   * and blocks until killed. The BI-lifecycle analogue of the reference's
@@ -14,20 +12,12 @@ object SqlServerMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val port = args.lift(1).map(_.toInt).getOrElse(10000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sql-endpoint")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // one shared catalog for every JDBC connection: clients address
-      // the views by their plain names (static conf — must be set here,
-      // before the session exists)
-      .config("spark.sql.hive.thriftServer.singleSession", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // one shared catalog for every JDBC connection: clients address the
+    // views by their plain names (static conf — must be set before the
+    // session exists)
+    val spark = GraftSession.start(
+      GraftSession.builder("graft-sql-endpoint", GraftSession.cpus)
+        .config("spark.sql.hive.thriftServer.singleSession", "true"))
     graft.server.SqlEndpoint.start(spark, sfDir, port)
     System.err.println(
       s"graft SQL endpoint up: jdbc:hive2://localhost:$port (sf=$sfDir)")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Staged oracle export for the span-dedup and corpus-prep stream
@@ -33,17 +33,9 @@ object StagedVerifySpans {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(
+      GraftSession.builder("graft-staged-verify-spans", GraftSession.cpus)
+        .config("spark.sql.files.maxPartitionBytes", "16m"))
 
     def t[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime()

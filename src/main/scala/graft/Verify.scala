@@ -1,39 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the in-process master — the
-    // multi-process evidence hook (round-12 verdict #3): with
-    // `local-cluster[n,c,mem]` the SAME gate runs against real executor
-    // JVMs (Netty shuffle, torrent broadcast, serialized task
-    // closures); SPARK_GRAFT_JARS ships the packaged engine jar to
-    // those executors, SPARK_GRAFT_EXEC_MEM sizes their heaps.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    sys.env.get("SPARK_GRAFT_EXEC_MEM")
-      .foreach(m => builder.config("spark.executor.memory", m))
-    val spark = builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench: prompt shuffle-file reclamation for iterative jobs
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // released rank/edge snapshots WARN about truncated lineage on every
-    // unpersist (intentional: retired checkpoints are never re-read) —
-    // mute the RDD loggers so the noise can't interleave bench output
-    org.apache.logging.log4j.core.config.Configurator
-      .setLevel("org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.start("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated query-name filter for fast local iteration
     // (unset when the driver runs this — full dump).

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -161,19 +161,4 @@ object VectorFunctions {
   def centroidTop2(members: Column, v: Column, n2: Column): Column =
     ColumnBridge.column(CentroidTop2(ColumnBridge.expression(members),
       ColumnBridge.expression(v), ColumnBridge.expression(n2)))
-
-  /** Register graft's custom expressions for the SQL entry point:
-    * `SELECT title_case(s)`, `dot_product(a, b)`, `squared_norm(a)`.
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("title_case",
-      exprs => TitleCase(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("squared_norm",
-      exprs => SquaredNorm(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("poly_hash",
-      exprs => PolyHash(exprs.head), "scala_udf")
-  }
 }

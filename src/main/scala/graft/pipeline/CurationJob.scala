@@ -108,14 +108,7 @@ object CurationJob {
   /** CLI: CurationJob <sfDir> <outDir> */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start("graft-curation-job")
     val r = run(spark, sfDir, outDir)
     println(s"[curate] input=${r.n_input} quality_kept=${r.n_quality_kept} " +
       s"ppl_kept=${r.n_ppl_kept} tokens=${r.n_tokens_out} shards=${r.n_shards}")

@@ -84,15 +84,7 @@ object DailyJob {
     require(args.length >= 3,
       "usage: DailyJob <sfDir> <workDir> <runDate> [runDate ...]")
     val Array(sfDir, workDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .appName("graft-daily-job")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start("graft-daily-job")
     args.drop(2).foreach { dt =>
       val loaded = runOnce(spark, sfDir, workDir, dt)
       println(s"[daily-job] $dt loaded=${loaded.mkString(",")}")

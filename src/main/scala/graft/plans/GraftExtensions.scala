@@ -15,8 +15,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * registers the custom planner strategy (as-of join) and the custom
   * expression functions at session build time — no imperative
-  * `registerAll`/`ensureStrategy` calls needed, and SQL-only users get
-  * `title_case` / `dot_product` / `squared_norm` / `poly_hash` for free.
+  * registration calls needed, and SQL-only users get `title_case` /
+  * `dot_product` / `squared_norm` / `poly_hash` for free. Every
+  * [[graft.GraftSession]] installs it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -784,7 +784,7 @@ object TextOps {
       (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val dd = Tables.documents(s, d)
         val labels = graft.streaming.MinHashDedupStream
-          .runClustersOn(s, dd, nSplits = 2)
+          .runClustersOn(s, "q158_yield_stream", dd, nSplits = 2)
         yieldHistogram(docTokens(dd), labels)
       },
       Some(yieldOracleSql)),
@@ -821,7 +821,8 @@ object TextOps {
       "q134_incremental_cc_stream",
       (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         graft.streaming.MinHashDedupStream.runClustersOn(
-          s, Tables.documents(s, d), nSplits = 2)
+          s, "q134_incremental_cc_stream", Tables.documents(s, d),
+          nSplits = 2)
       },
       Some(incCcOracleSql)),
 

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.pipeline.Load
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TempDirBridge
 import org.apache.spark.sql.streaming.Trigger
 
 /** The micro-batch harness every file-per-trigger stream runs on: a
@@ -85,11 +86,12 @@ private[graft] object MicroBatchFold {
 
   /** Stage `docs` as `nSplits` arrivals in a fresh `tag` work dir and
     * hand `(inputDir, workDir)` to `body`: the registry entry of every
-    * staged stream.
+    * staged stream. The work dir is deleted when the JVM exits.
     */
   def staged[T](spark: SparkSession, tag: String, docs: DataFrame,
                 nSplits: Int)(body: (String, String) => T): T = {
-    val workDir = java.nio.file.Files.createTempDirectory(tag).toString
+    val workDir = TempDirBridge.createTempDir(
+      System.getProperty("java.io.tmpdir"), tag).toString
     stageSplits(spark, docs, s"$workDir/input", nSplits)
     body(s"$workDir/input", workDir)
   }

@@ -105,15 +105,16 @@ object MinHashDedupStream {
     * appears in some confirmed near-dup pair, labeled with its
     * component's minimum doc_id. Equal to batch CC over the full q70
     * pair set (the stream-equals-batch spec + DuckDB recursive-CTE
-    * oracle both certify it).
+    * oracle both certify it). `tag` names the rows in the store report
+    * (q134, or q158, which reads the same snapshot).
     */
   def runClusters(spark: SparkSession, inputDir: String, workDir: String,
-                  nBuckets: Int = 16,
+                  tag: String, nBuckets: Int = 16,
                   pruneThresholdBytes: Long = MicroBatchFold.NarrowBelowBytes)
       : DataFrame = {
     runStream(spark, inputDir, workDir, nBuckets, pruneThresholdBytes,
       foldCc = true)
-    reportStores(spark, workDir, "q134")
+    reportStores(spark, workDir, tag)
     val last = new java.io.File(s"$workDir/labels").listFiles()
       .map(_.getName).filter(_.startsWith("batch="))
       .map(_.stripPrefix("batch=").toLong).max
@@ -337,10 +338,15 @@ object MinHashDedupStream {
     MicroBatchFold.staged(spark, "q129_minhash_stream", docs, nSplits)(
       run(spark, _, _, pruneThresholdBytes = pruneThresholdBytes))
 
-  /** Stage + run with the CC fold: the q134 entry. */
-  def runClustersOn(spark: SparkSession, docs: DataFrame, nSplits: Int,
+  /** Stage + run with the CC fold: the q134 and q158 entry. The
+    * caller's registry `name` prefixes the work dir, and its q-number
+    * tags the store report.
+    */
+  def runClustersOn(spark: SparkSession, name: String, docs: DataFrame,
+                    nSplits: Int,
                     pruneThresholdBytes: Long = MicroBatchFold.NarrowBelowBytes)
       : DataFrame =
-    MicroBatchFold.staged(spark, "q134_inc_cc_stream", docs, nSplits)(
-      runClusters(spark, _, _, pruneThresholdBytes = pruneThresholdBytes))
+    MicroBatchFold.staged(spark, name, docs, nSplits)(
+      runClusters(spark, _, _, name.takeWhile(_ != '_'),
+        pruneThresholdBytes = pruneThresholdBytes))
 }

@@ -46,9 +46,9 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("spark.sql.extensions wires the strategy and SQL functions declaratively") {
-    // The shared session is built with
-    // spark.sql.extensions=graft.plans.GraftExtensions (SparkSpec) and
-    // this suite never calls registerAll — the functions and the
+    // The shared session is built by GraftSession, which sets
+    // spark.sql.extensions=graft.plans.GraftExtensions, and nothing
+    // registers functions imperatively — the functions and the
     // planner strategy must come from the extensions class alone.
     // (Setting the static conf on a builder that reuses an existing
     // SparkContext is silently ignored, so the conf must be on the

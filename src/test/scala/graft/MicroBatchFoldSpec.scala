@@ -3,13 +3,15 @@ package graft
 import graft.streaming.MicroBatchFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TempDirBridge
 import org.apache.spark.sql.streaming.StreamingQueryException
 
 /** The micro-batch harness every file-per-trigger stream runs on: the
   * cost switch's narrow scope reaches both sessions a foreachBatch body
   * plans with and is undone after the drain (also when the body
   * throws), staged splits replay one per batch in doc_id-range order,
-  * and an empty corpus still drains as one empty batch.
+  * an empty corpus still drains as one empty batch, and a staged work
+  * dir is deleted at JVM exit.
   */
 class MicroBatchFoldSpec extends SparkSpec {
 
@@ -98,5 +100,15 @@ class MicroBatchFoldSpec extends SparkSpec {
     assert(counts == Seq(0L))
     assert(MicroBatchFold.arrived(spark, s"$work/input").columns.toSeq ==
       Seq("doc_id", "v"))
+  }
+
+  test("a staged work dir is named by its tag and deleted at JVM exit") {
+    val (inputDir, workDir) = MicroBatchFold.staged(spark, "mbf_staged",
+      ids(20), nSplits = 2)((in, work) => (in, work))
+    val dir = new java.io.File(workDir)
+    assert(dir.getName.startsWith("mbf_staged"))
+    assert(new java.io.File(inputDir).list().count(_.startsWith("split_")) == 2)
+    assert(TempDirBridge.deletedAtExit(dir),
+      s"$dir is not registered for deletion at JVM exit")
   }
 }

@@ -4,21 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SharedSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      // the declarative wiring under test in AsOfJoinSpec: strategies +
-      // SQL functions from the extensions class, no registerAll calls
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The factory's session on a fixed `local[8]`: the suite certifies
+    * the settings and extensions every main runs.
+    */
+  lazy val spark: SparkSession = GraftSession.start(
+    GraftSession.builder("graft-test", 8).master("local[8]"))
 
   /** THE fixture dir for the shared-session suites — SharedEndpoint
     * serves this same dir, so wire-vs-direct asserts compare like for

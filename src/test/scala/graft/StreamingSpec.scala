@@ -132,7 +132,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("custom SQL functions registered for the SQL entry point") {
-    graft.functions.VectorFunctions.registerAll(spark)
     val r = spark.sql(
       "SELECT title_case('ai/ml engineer') AS t, " +
       "dot_product(array(1D, 2D, 3D), array(4D, 5D, 6D)) AS d, " +
@@ -303,7 +302,8 @@ class StreamingSpec extends SparkSpec {
     assert(batchLabels.nonEmpty, "fixture has no near-dup clusters")
 
     def streamed(nSplits: Int): Seq[(Long, Long)] =
-      graft.streaming.MinHashDedupStream.runClustersOn(spark, docs, nSplits)
+      graft.streaming.MinHashDedupStream.runClustersOn(
+        spark, "q134_incremental_cc_stream", docs, nSplits)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
     // 3 splits: pairs spanning batch boundaries must fold into the same
@@ -326,7 +326,7 @@ class StreamingSpec extends SparkSpec {
     // and the fold is split-count invariant
     val dd = Tables.documents(spark, sfDir)
     val labels3 = graft.streaming.MinHashDedupStream
-      .runClustersOn(spark, dd, nSplits = 3)
+      .runClustersOn(spark, "q158_yield_stream", dd, nSplits = 3)
     val stream3 = graft.queries.TextOps.yieldHistogram(
       graft.queries.TextOps.docTokens(dd), labels3)
       .collect().map(_.toSeq).toSeq

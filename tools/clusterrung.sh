@@ -1,35 +1,38 @@
 #!/bin/bash
-# Round-15 verdict #5: local-cluster PERF rung for the heavy family.
-# Correctness parity across process boundaries is standing (r13/r14);
-# this measures TIMING behavior — real Netty shuffle + torrent
-# broadcast — for q130/q132/q140/q129/q158 at sf10, next to a same-day
-# local[32] twin of the identical tree. A plan secretly depending on
-# local-mode shared memory would show here as a >2x cluster/local gap.
+# Local-cluster PERF rung: times ROWS at sf10 under real executor JVMs
+# (local-cluster[4,8,6144]: Netty shuffle + torrent broadcast) next to a
+# same-day local[32] twin of the identical tree. Correctness parity
+# across process boundaries is tools/streamcluster.sh's job; this
+# measures TIMING. A plan secretly depending on local-mode shared
+# memory shows as a >2x cluster/local gap, and any such row (or a row
+# missing from the cluster run) fails the rung.
+#
+# usage: ROWS=q130_pagerank,q132_personalized_pagerank tools/clusterrung.sh
 set -u
-cd /root/repo
-HEAVY=q129_minhash_dedup_stream,q130_pagerank,q132_personalized_pagerank,q140_pairs_auto_routed,q158_yield_stream
+cd "$(dirname "$0")/.."
+ROWS=${ROWS:?set ROWS to a comma-separated list of registry rows}
 JAR=target/scala-2.13/avkjobskillanalyticsspark_2.13-0.1.0.jar
 
 echo "== local[32] twin =="
 SPARK_GRAFT_SF_DIR=/root/sf10 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=24g \
-  SPARK_GRAFT_ONLY=$HEAVY \
-  SPARK_GRAFT_BENCH_OUT=bench_history/r15_local_sf10_heavy_local.json \
+  SPARK_GRAFT_ONLY=$ROWS \
+  SPARK_GRAFT_BENCH_OUT=bench_history/clusterrung_sf10_local.json \
   sbt -batch "runMain graft.Bench" 2>/dev/null | grep metric
 
 echo "== local-cluster[4,8,6144] =="
 SPARK_GRAFT_SF_DIR=/root/sf10 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=24g \
-  SPARK_GRAFT_ONLY=$HEAVY \
+  SPARK_GRAFT_ONLY=$ROWS \
   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
   SPARK_GRAFT_MASTER=local-cluster[4,8,6144] SPARK_GRAFT_JARS=$JAR \
   SPARK_GRAFT_EXEC_MEM=6g \
-  SPARK_GRAFT_BENCH_OUT=bench_history/r15_cluster_sf10_heavy.json \
+  SPARK_GRAFT_BENCH_OUT=bench_history/clusterrung_sf10_cluster.json \
   sbt -batch "runMain graft.Bench" 2>/dev/null | grep metric
 
 echo "== per-query cluster/local ratios =="
 python3 - <<'EOF'
 import json
-loc = json.load(open("bench_history/r15_local_sf10_heavy_local.json"))
-clu = json.load(open("bench_history/r15_cluster_sf10_heavy.json"))
+loc = json.load(open("bench_history/clusterrung_sf10_local.json"))
+clu = json.load(open("bench_history/clusterrung_sf10_cluster.json"))
 bad = 0
 for k in sorted(loc["queries"]):
     l, c = loc["queries"][k], clu["queries"].get(k)

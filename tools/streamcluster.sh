@@ -7,7 +7,7 @@
 # worker's launcher build executor commands from the /opt/spark
 # distribution.
 set -u
-cd /root/repo
+cd "$(dirname "$0")/.."
 STREAMS=q57_events_hourly_stream,q80_events_segment_stream,q95_stream_quality_gate,q101_span_dedup_stream,q104_corpus_prep_stream,q109_cms_stream,q111_ivf_stream,q122_bigram_lm_stream,q123_kmv_users_stream,q125_hll_stream,q129_minhash_dedup_stream,q134_incremental_cc_stream,q138_nb_stream,q142_dsir_stream,q146_mixture_stream,q158_yield_stream
 SF=/root/testdata/sf0.1
 JAR=target/scala-2.13/avkjobskillanalyticsspark_2.13-0.1.0.jar
