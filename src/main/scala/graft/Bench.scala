@@ -15,37 +15,6 @@ package graft
   */
 object Bench {
 
-  /** Accumulates per-task work metrics; snapshot deltas around each
-    * query attribute its jobs (incl. foreachBatch micro-batches, which
-    * run on the same SparkContext). The listener bus is drained via
-    * the graftbridge before every snapshot so no task-end race
-    * misattributes a stage to the next query.
-    */
-  private final class WorkMetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      // SUCCESSFUL attempts only (round-15 verdict #5): failed/killed
-      // attempts — lost-executor retries, speculation losers — burn real
-      // CPU that is box state, not plan cost, and were one source of the
-      // 1.9x cpu_s spread between bit-identical sf100 twins. Spill bytes
-      // are recorded as their own column for the same reason: spilling is
-      // real work, but its VOLUME tracks box memory pressure, so benchcmp
-      // attributes a cpu move with a matching spill move to the box.
-      if (m != null && t.reason == org.apache.spark.Success) {
-        cpuNs.addAndGet(m.executorCpuTime + m.executorDeserializeCpuTime)
-        shuffleBytes.addAndGet(
-          m.shuffleReadMetrics.totalBytesRead +
-            m.shuffleWriteMetrics.bytesWritten)
-        spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        ()
-      }
-    }
-  }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.start("graft-bench")
@@ -57,8 +26,9 @@ object Bench {
     // order would otherwise bill entirely to q101 (the first stream)
     locally {
       import org.apache.spark.sql.functions.col
-      val warmDir = java.nio.file.Files
-        .createTempDirectory("bench_warm_stream").toString
+      val warmDir = org.apache.spark.sql.graftbridge.TempDirBridge
+        .createTempDir(System.getProperty("java.io.tmpdir"),
+          "bench_warm_stream").toString
       spark.range(2).select(col("id")).coalesce(1)
         .write.parquet(s"$warmDir/in")
       val q = spark.readStream
@@ -84,17 +54,14 @@ object Bench {
     // sub-100ms successes, poisoning round-over-round comparison. Omit
     // the row and report the failure on stderr + in a "failed" field.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val work = new WorkMetricsListener
+    val work = new WorkListener
     spark.sparkContext.addSparkListener(work)
     // drain the async listener bus so the snapshot below owns every
     // task-end already produced; tolerate a slow bus rather than abort
     def drain(): Unit =
-      try org.apache.spark.sql.graftbridge.ListenerBridge
-        .waitUntilEmpty(spark.sparkContext, 30000L)
-      catch { case _: java.util.concurrent.TimeoutException =>
+      if (!WorkListener.drain(spark.sparkContext))
         System.err.println("[bench] listener bus drain timed out (30s); " +
           "work metrics for the adjacent rows may bleed")
-      }
     val workRows = scala.collection.mutable.LinkedHashMap
       .empty[String, (Double, Long, Long)] // name -> (cpu_s, shuffle, spill)
     // Both listener-bus drains sit OUTSIDE the wall-time window (round-15
@@ -151,8 +118,9 @@ object Bench {
     // asked for by name.
     val curation =
       if (only.forall(_.contains("curation"))) {
-        val out = java.nio.file.Files
-          .createTempDirectory("bench_curation").toString
+        val out = org.apache.spark.sql.graftbridge.TempDirBridge
+          .createTempDir(System.getProperty("java.io.tmpdir"),
+            "bench_curation").toString
         try {
           val (r, wall) = timed("curation") {
             graft.pipeline.CurationJob.run(spark, sfDir, out) }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** One word type during BPE training: corpus frequency + current symbol
   * sequence (top-level case class for by-name encoder resolution).
@@ -61,17 +62,10 @@ object BpeTrain {
     out.toSeq
   }
 
-  /** Word-type count up to which merge learning folds on the driver.
-    * 2^17 (word, freq) rows is a few MB — the same bounded-collect
-    * budget as ConnectedComponents.DriverFoldCap — while every merge
-    * round it replaces costs three jobs (pair-count argmax collect,
-    * checkpointed merge map, corpus-syms aggregate): 3k+1 scheduling
-    * round-trips for k merges, ~50% of the q99/q102/q148/q159 sf0.1
-    * bench rows (guide §1: the time was scheduling latency, not
-    * compute). Above the cap the distributed rounds run unchanged —
-    * the probe is one bounded limit(cap+1) job over the type table the
-    * distributed path materializes anyway. BpeTrainSpec pins
-    * fast == distributed on the fixture corpus.
+  /** [[DriverFold]] cap: (word, freq) rows, a few MB, where
+    * every merge round costs three jobs (pair-count argmax collect,
+    * checkpointed merge map, corpus-syms aggregate) — ~50% of the
+    * q99/q102/q148/q159 sf0.1 bench rows.
     */
   private[graft] val DriverTrainCap = 1 << 17
 
@@ -94,23 +88,19 @@ object BpeTrain {
   private def splitCodePoints(w: String): Seq[String] =
     w.codePoints().toArray.toSeq.map(cp => new String(Character.toChars(cp)))
 
-  /** Collect the frequency-weighted word-TYPE table when it fits
-    * [[DriverTrainCap]]; None above it (the caller falls back to the
-    * distributed rounds). One bounded job either way.
+  /** The frequency-weighted word-TYPE table when it fits
+    * [[DriverTrainCap]]; None otherwise (the caller runs the
+    * distributed rounds).
     */
-  private def collectTypes(words: DataFrame): Option[Array[(Long, Seq[String])]] = {
-    val rows = words.groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .limit(DriverTrainCap + 1).collect()
-    if (rows.length > DriverTrainCap) None
-    // contract check (ADVICE r16, mirroring Triangles.perNodeDriver):
-    // the fold treats an empty/null word as zero symbols, but the
-    // distributed seed `sequence(1, length(w))` on an empty word yields
-    // [1,0] → two empty-string symbols and a phantom ("","") pair —
-    // fall back to the distributed rounds on contract-violating input
-    // rather than diverge from them
-    else if (rows.exists(r => r.isNullAt(0) || r.getString(0).isEmpty)) None
-    else Some(rows.map(r => (r.getLong(1), splitCodePoints(r.getString(0)))))
-  }
+  private def collectTypes(words: DataFrame): Option[Array[(Long, Seq[String])]] =
+    DriverFold.rows(words.groupBy(col("w")).agg(count(lit(1)).as("freq")),
+        DriverTrainCap, StringType, LongType)
+      // contract check: the fold treats an empty word as zero symbols,
+      // but the distributed seed `sequence(1, length(w))` on an empty
+      // word yields [1,0] → two empty-string symbols and a phantom
+      // ("","") pair — run the distributed rounds rather than diverge
+      .filterNot(_.exists(_.getString(0).isEmpty))
+      .map(_.map(r => (r.getLong(1), splitCodePoints(r.getString(0)))))
 
   /** The in-memory merge recurrence — bit-identical to the distributed
     * loop: same pair counts (freq-weighted, per adjacent position),
@@ -151,11 +141,8 @@ object BpeTrain {
   }
 
   /** Learn `k` merges from a one-column DataFrame of word occurrences
-    * (`w`, non-empty). Returns the merge table ordered by round.
-    * Cost switch (round-16 optimization; the q60/q134 driver-fold
-    * pattern): a type table under [[DriverTrainCap]] trains entirely
-    * on the driver from one bounded collect; bigger vocabularies run
-    * the distributed rounds unchanged.
+    * (`w`, non-empty). Returns the merge table ordered by round. A type
+    * table under [[DriverTrainCap]] trains entirely on the driver.
     */
   def learnMerges(s: SparkSession, words: DataFrame, k: Int): DataFrame =
     collectTypes(words) match {
@@ -248,6 +235,34 @@ object BpeTrain {
       }
       s.createDataFrame(rows).orderBy(col("rung"))
     }
+
+  /** q159's curve the distributed way — the path above
+    * [[DriverTrainCap]] and [[curveFast]]'s reference: learn the merges,
+    * then read each rung's corpus piece mass and live symbol vocabulary
+    * off [[wordTypes]].
+    */
+  private[graft] def curveDistributed(s: SparkSession, words: DataFrame,
+                                      k: Int, rungs: Seq[Int]): DataFrame = {
+    val merges = learnMerges(s, words, k)
+      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    def rungRow(r: Int): DataFrame = {
+      // two consumers (piece mass + live vocab) of one type table
+      val types = wordTypes(s, words, merges.take(r)).localCheckpoint()
+      val pieces = types
+        .agg(sum(col("freq") * size(col("syms"))).as("corpus_pieces"))
+      val vocab = types.select(explode(col("syms")).as("sym")).distinct()
+        .agg(count(lit(1)).as("vocab_syms"))
+      pieces.crossJoin(vocab).withColumn("rung", lit(r.toLong))
+    }
+    val rows = rungs.map(rungRow).reduce(_ unionByName _).localCheckpoint()
+    val base = rows.where(col("rung") === 0)
+      .select(col("corpus_pieces").as("p0"))
+    rows.crossJoin(broadcast(base))
+      .withColumn("compress_permille", expr("(1000 * corpus_pieces) DIV p0"))
+      .select(col("rung"), col("corpus_pieces"), col("vocab_syms"),
+        col("compress_permille"))
+      .orderBy(col("rung"))
+  }
 
   /** The word-TYPE table after applying a learned merge-list prefix —
     * (word, freq, syms), the `s<r>` state of training replayed from a

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed connected components via alternating large-star /
   * small-star rounds (the MapReduce CC algorithm of Kiveris et al.,
@@ -78,10 +79,9 @@ object ConnectedComponents {
           .select(lit(1).as("viol")))
       .isEmpty
 
-  /** Edge count up to which the whole graph folds on the driver.
-    * 2^17 canonical (src, dst) Long pairs is ~2 MB — far below any
-    * centroid-pin collect the engine already does — while every star
-    * round it replaces costs several jobs plus a localCheckpoint.
+  /** [[DriverFold]] cap: 2^17 canonical (src, dst) Long pairs is ~2 MB,
+    * while every star round it replaces costs several jobs plus a
+    * localCheckpoint.
     */
   private[graft] val DriverFoldCap = 1 << 17
 
@@ -90,21 +90,15 @@ object ConnectedComponents {
     * node id. Same fixpoint as min-label propagation / the recursive-CTE
     * oracle.
     *
-    * Cost switch (r14 stretch #8): an incremental CC fold's per-batch
-    * input is the previous label snapshot plus one batch's confirmed
-    * pairs — routinely a few hundred edges — yet the iterative path
-    * pays 2+ star rounds of several jobs each PER MICRO-BATCH (the
-    * q134/q158 sf0.1 bench rows were ~50% this fixed cost). One cheap
-    * probe (`limit(cap+1)`, a single bounded partial-scan job) decides:
-    * a graph that fits under [[DriverFoldCap]] is ALREADY on the driver
-    * from the probe and folds with a union-find; anything bigger runs
-    * the distributed star rounds unchanged — the probe's cost there is
-    * one task reading cap+1 rows, noise next to a single round. Same
-    * labels either way (OpsSpec pins fast == distributed on random
-    * graphs); Long-typed ids only — any other id type skips the probe.
+    * An incremental CC fold's per-batch input is the previous label
+    * snapshot plus one batch's confirmed pairs — routinely a few hundred
+    * edges — yet the star rounds pay several jobs each PER MICRO-BATCH
+    * (the q134/q158 sf0.1 bench rows were ~50% this fixed cost), so a
+    * Long-id graph under [[DriverFoldCap]] folds on the driver
+    * ([[DriverFold]]) with a union-find.
     */
   def clusters(edges: DataFrame): DataFrame =
-    clustersCapped(edges, DriverFoldCap)
+    folded(edges).getOrElse(clustersWithRounds(edges)._1)
 
   /** [[clusters]] for callers inside a LONG-LIVED stream (the q134/q158
     * CC fold): when the graph exceeds [[DriverFoldCap]] the star rounds
@@ -121,55 +115,50 @@ object ConnectedComponents {
     * its caller, a dead stream is an ingest outage.
     */
   def clustersReliable(edges: DataFrame, scratchDir: String): DataFrame =
-    clustersCapped(edges, DriverFoldCap, Some(scratchDir))
+    folded(edges).getOrElse(
+      clustersWithRounds(edges, scratchDir = Some(scratchDir))._1)
 
-  private[graft] def clustersCapped(edges: DataFrame, cap: Int,
-                                    scratchDir: Option[String] = None)
-      : DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val longIds = edges.schema.fields.length >= 2 &&
-      edges.schema("src").dataType == LongType &&
-      edges.schema("dst").dataType == LongType
-    if (!longIds || cap <= 0)
-      return clustersWithRounds(edges, scratchDir = scratchDir)._1
-    val canon = edges.where(col("src") =!= col("dst"))
+  /** Self-loops dropped, each edge oriented big → small. */
+  private def canonical(edges: DataFrame): DataFrame =
+    edges.where(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("src"),
               least(col("src"), col("dst")).as("dst"))
-    val probe = canon.limit(cap + 1).collect()
-    if (probe.length > cap) clustersWithRounds(edges, scratchDir = scratchDir)._1
-    else {
-      // the probe returned the WHOLE canonical edge set: union-find with
-      // path compression, then label every member with its component min
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      probe.foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-      }
-      val rep = new java.util.HashMap[Long, Long]()
-      parent.keySet().forEach { n =>
-        val r = find(n)
-        val cur = rep.getOrDefault(r, Long.MaxValue)
-        if (n < cur) rep.put(r, n)
-      }
-      val spark = edges.sparkSession
-      import scala.jdk.CollectionConverters._
-      val rows = parent.keySet().asScala.toSeq
-        .map(n => org.apache.spark.sql.Row(n, rep.get(find(n))))
-      spark.createDataFrame(rows.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", LongType),
-          org.apache.spark.sql.types.StructField("cluster_rep", LongType))))
+
+  private def folded(edges: DataFrame): Option[DataFrame] =
+    DriverFold.rows(canonical(edges), DriverFoldCap, LongType, LongType)
+      .map(unionFind(edges.sparkSession, _))
+
+  /** The driver fold: union-find with path compression over the whole
+    * canonical edge set, then every member labelled with its component
+    * min.
+    */
+  private def unionFind(spark: SparkSession, probe: Array[Row]): DataFrame = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
     }
+    probe.foreach { row =>
+      val a = row.getLong(0); val b = row.getLong(1)
+      if (!parent.containsKey(a)) parent.put(a, a)
+      if (!parent.containsKey(b)) parent.put(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+    }
+    val rep = new java.util.HashMap[Long, Long]()
+    parent.keySet().forEach { n =>
+      val r = find(n)
+      val cur = rep.getOrDefault(r, Long.MaxValue)
+      if (n < cur) rep.put(r, n)
+    }
+    import scala.jdk.CollectionConverters._
+    val rows = parent.keySet().asScala.toSeq
+      .map(n => Row(n, rep.get(find(n))))
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("node", LongType), StructField("cluster_rep", LongType))))
   }
 
   private[graft] def clustersWithRounds(
@@ -192,9 +181,7 @@ object ConnectedComponents {
     // Canonical big→small orientation so the star-forest certificate is
     // meaningful on the input itself (pure dup-pair graphs finish here
     // with zero star rounds).
-    var e = pin(edges.where(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("src"),
-              least(col("src"), col("dst")).as("dst")), 0)
+    var e = pin(canonical(edges), 0)
     var rounds = 0
     var done = false
     // do-while: real pair graphs have some multi-member cluster, so a

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Driver-fold output row (top-level for by-name encoder resolution). */
 final case class PrRank(node: Long, rank_units: Long)
@@ -73,19 +74,11 @@ object PageRank {
   /** Total rank mass in fixed-point units. */
   val Mass: Long = 1000000000000L
 
-  /** Pair count up to which the SYMMETRIC fixpoints fold on the driver
-    * (round-16 optimization; the ConnectedComponents.DriverFoldCap
-    * pattern, sized up because the collect is a flat (Long, Long[, w])
-    * tuple array: 2^20 pairs ≈ 24 MB — bounded by construction via the
-    * limit(cap+1) probe). Integer fixed-point arithmetic is
-    * order-independent, so the driver fold is bit-identical to the
-    * distributed rounds (PageRankSpec pins it); above the cap, and on
-    * every corpus-scale call (the columnar-edge-cache hint), the
-    * distributed path runs unchanged. What it buys at the benched
-    * sf0.1 point: the k-round loop was ~45 scheduling round-trips
-    * (per-round join/agg stages + localCheckpoint jobs) over
-    * node-sized frames — pure latency, not plan cost (guide §1.2:
-    * algorithm first).
+  /** [[DriverFold]] cap of the SYMMETRIC fixpoints: flat (a, b[, w])
+    * Long rows, 2^20 pairs ≈ 24 MB, where the k-round loop was ~45
+    * scheduling round-trips over node-sized frames at sf0.1. Integer
+    * fixed-point sums commute, so the fold is bit-identical to the
+    * rounds.
     */
   private[graft] val DriverFoldCap = 1 << 20
 
@@ -210,13 +203,12 @@ object PageRank {
   def ranksSymmetric(pairs: DataFrame, k: Int,
                      columnarEdgeCache: Boolean = false): DataFrame = {
     require(k >= 0, s"pagerank rounds must be >= 0, got $k")
-    if (!columnarEdgeCache) {
-      driverRanksSymmetric(pairs, k) match {
-        case Some(out) => return out
-        case None => ()
-      }
-    }
-    ranksSymmetricDistributed(pairs, k, columnarEdgeCache)
+    // a corpus-scale call (the columnar-edge-cache hint) skips the probe
+    val folded = if (columnarEdgeCache) None
+      else DriverFold.rows(pairs.select(col("a"), col("b")), DriverFoldCap,
+          LongType, LongType)
+        .map(driverRanksSymmetric(pairs.sparkSession, _, k))
+    folded.getOrElse(ranksSymmetricDistributed(pairs, k, columnarEdgeCache))
   }
 
   /** The distributed [[ranksSymmetric]] body — the scale path above
@@ -372,13 +364,14 @@ object PageRank {
   def personalizedSymmetric(pw: DataFrame, seeds: DataFrame, k: Int,
                             columnarEdgeCache: Boolean = false): DataFrame = {
     require(k >= 0, s"pagerank rounds must be >= 0, got $k")
-    if (!columnarEdgeCache) {
-      driverPersonalizedSymmetric(pw, seeds, k) match {
-        case Some(out) => return out
-        case None => ()
-      }
-    }
-    personalizedSymmetricDistributed(pw, seeds, k, columnarEdgeCache)
+    val folded = if (columnarEdgeCache) None else for {
+      p <- DriverFold.rows(pw.select(col("a"), col("b"), col("w")),
+        DriverFoldCap, LongType, LongType, LongType)
+      s <- DriverFold.rows(seeds.select(col("node")).distinct(),
+        DriverFoldCap, LongType)
+    } yield driverPersonalizedSymmetric(pw.sparkSession, p, s, k)
+    folded.getOrElse(
+      personalizedSymmetricDistributed(pw, seeds, k, columnarEdgeCache))
   }
 
   /** The distributed [[personalizedSymmetric]] body — see
@@ -464,57 +457,53 @@ object PageRank {
     r.select(col("node"), col("rank").as("rank_units"))
   }
 
-  /** Long-typed (a, b[, w]) schema guard for the driver folds — the
-    * [[graft.ops.ConnectedComponents]] rule: any other id type keeps
-    * the distributed path, whose output node type follows the input.
+  /** The symmetric graph of a folded pair list: node ids indexed in
+    * first-seen order, both directions of pair i as edges 2i and 2i+1
+    * with weight `w(row)`, and each node's weight summed over its pairs
+    * (a self-pair counts twice, as in the distributed endpoint
+    * aggregates).
     */
-  private def longCols(df: DataFrame, names: String*): Boolean =
-    names.forall(n => df.schema.fields.exists(f =>
-      f.name == n &&
-        f.dataType == org.apache.spark.sql.types.LongType))
-
-  /** [[ranksSymmetric]] folded on the driver when the pair list fits
-    * [[DriverFoldCap]] (probe: one bounded limit(cap+1) job). None when
-    * it does not, or when the ids are not Long. Bit-identical to the
-    * distributed rounds: same deg/spine construction, same per-round
-    * floor divisions, and integer sums commute.
-    */
-  private def driverRanksSymmetric(pairs: DataFrame, k: Int)
-      : Option[DataFrame] = {
-    if (!longCols(pairs, "a", "b")) return None
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val probe = pairs.select(col("a"), col("b"))
-      .limit(DriverFoldCap + 1).as[(Long, Long)].collect()
-    if (probe.length > DriverFoldCap) return None
-    // index nodes; deg(v) = #pairs containing v (both endpoint
-    // aggregates merged — a self-pair counts twice, as distributed)
+  private final class SymGraph(rows: Array[Row], w: Row => Long) {
     val idx = new java.util.HashMap[java.lang.Long, Integer]()
-    def id(n: Long): Int = {
-      val got = idx.get(n)
+    private def id(v: Long): Int = {
+      val got = idx.get(v)
       if (got != null) got.intValue()
-      else { val i = idx.size(); idx.put(n, i); i }
+      else { val i = idx.size(); idx.put(v, i); i }
     }
-    val m = probe.length
-    val srcA = new Array[Int](2 * m); val dstA = new Array[Int](2 * m)
-    var i = 0
-    while (i < m) {
-      val (a, b) = probe(i)
-      val ia = id(a); val ib = id(b)
-      srcA(2 * i) = ia; dstA(2 * i) = ib
-      srcA(2 * i + 1) = ib; dstA(2 * i + 1) = ia
-      i += 1
+    val edges: Int = 2 * rows.length
+    val srcA = new Array[Int](edges); val dstA = new Array[Int](edges)
+    val wA = new Array[Long](edges)
+    rows.indices.foreach { i =>
+      val ia = id(rows(i).getLong(0)); val ib = id(rows(i).getLong(1))
+      val wi = w(rows(i))
+      srcA(2 * i) = ia; dstA(2 * i) = ib; wA(2 * i) = wi
+      srcA(2 * i + 1) = ib; dstA(2 * i + 1) = ia; wA(2 * i + 1) = wi
     }
-    val n = idx.size()
-    if (n == 0)
-      return Some(spark.createDataFrame(Seq.empty[PrRank]))
-    val deg = new Array[Long](n)
-    i = 0
-    while (i < m) {
-      val (a, b) = probe(i)
-      deg(idx.get(a).intValue()) += 1L; deg(idx.get(b).intValue()) += 1L
-      i += 1
+    val n: Int = idx.size()
+    val weight = new Array[Long](n)
+    (0 until edges).foreach(e => weight(srcA(e)) += wA(e))
+
+    /** One (node, rank_units) row per node. */
+    def ranks(spark: SparkSession, rank: Array[Long]): DataFrame = {
+      val out = new Array[PrRank](n)
+      idx.forEach { (node, ix) =>
+        out(ix.intValue()) = PrRank(node.longValue(), rank(ix.intValue())) }
+      spark.createDataFrame(out.toIndexedSeq)
     }
+  }
+
+  /** [[ranksSymmetric]] folded on the driver over the whole (a, b)
+    * pair list. Bit-identical to the distributed rounds: same deg/spine
+    * construction, same per-round floor divisions, and integer sums
+    * commute.
+    */
+  private def driverRanksSymmetric(spark: SparkSession, rows: Array[Row],
+                                   k: Int): DataFrame = {
+    // deg(v) = #pairs containing v
+    val g = new SymGraph(rows, _ => 1L)
+    val n = g.n
+    if (n == 0) return g.ranks(spark, Array.empty[Long])
+    val deg = g.weight
     val teleport = (15L * Mass) / (100L * n)
     var rank = Array.fill(n)(Mass / n)
     var round = 0
@@ -527,77 +516,39 @@ object PageRank {
       }
       val next = Array.fill(n)(teleport)
       var e = 0
-      while (e < 2 * m) {
-        next(dstA(e)) += share(srcA(e))
+      while (e < g.edges) {
+        next(g.dstA(e)) += share(g.srcA(e))
         e += 1
       }
       rank = next
       round += 1
     }
-    val out = new Array[PrRank](n)
-    idx.forEach { (node, ix) =>
-      out(ix.intValue()) = PrRank(node.longValue(), rank(ix.intValue())) }
-    Some(spark.createDataFrame(out.toIndexedSeq))
+    g.ranks(spark, rank)
   }
 
   /** [[personalizedSymmetric]] folded on the driver — the weighted,
-    * seeded twin of [[driverRanksSymmetric]]. Both the pair list and
-    * the seed set must fit [[DriverFoldCap]] (each probed with one
-    * bounded limit(cap+1) job); otherwise None.
+    * seeded twin of [[driverRanksSymmetric]] over the whole (a, b, w)
+    * pair list and the distinct seed set.
     */
-  private def driverPersonalizedSymmetric(pw: DataFrame, seeds: DataFrame,
-                                          k: Int): Option[DataFrame] = {
-    if (!longCols(pw, "a", "b", "w") || !longCols(seeds, "node")) return None
-    val spark = pw.sparkSession
-    import spark.implicits._
-    val probe = pw.select(col("a"), col("b"), col("w"))
-      .limit(DriverFoldCap + 1).as[(Long, Long, Long)].collect()
-    if (probe.length > DriverFoldCap) return None
-    val seedArr = seeds.select(col("node")).distinct()
-      .limit(DriverFoldCap + 1).as[Long].collect()
-    if (seedArr.length > DriverFoldCap) return None
-    val idx = new java.util.HashMap[java.lang.Long, Integer]()
-    def id(n: Long): Int = {
-      val got = idx.get(n)
-      if (got != null) got.intValue()
-      else { val i = idx.size(); idx.put(n, i); i }
-    }
-    val m = probe.length
-    val srcA = new Array[Int](2 * m); val dstA = new Array[Int](2 * m)
-    val wA = new Array[Long](2 * m)
-    var i = 0
-    while (i < m) {
-      val (a, b, w) = probe(i)
-      val ia = id(a); val ib = id(b)
-      srcA(2 * i) = ia; dstA(2 * i) = ib; wA(2 * i) = w
-      srcA(2 * i + 1) = ib; dstA(2 * i + 1) = ia; wA(2 * i + 1) = w
-      i += 1
-    }
-    val n = idx.size()
-    val tw = new Array[Long](n)
-    i = 0
-    while (i < m) {
-      val (a, b, w) = probe(i)
-      tw(idx.get(a).intValue()) += w; tw(idx.get(b).intValue()) += w
-      i += 1
-    }
+  private def driverPersonalizedSymmetric(spark: SparkSession,
+                                          rows: Array[Row],
+                                          seedRows: Array[Row],
+                                          k: Int): DataFrame = {
+    val g = new SymGraph(rows, _.getLong(2))
+    val n = g.n
+    val tw = g.weight
     // in-graph seeds only (out-of-graph seeds can never hold mass)
     val seed = new Array[Boolean](n)
     var ns = 0L
-    seedArr.foreach { sNode =>
-      val got = idx.get(sNode)
+    seedRows.foreach { sRow =>
+      val got = g.idx.get(sRow.getLong(0))
       if (got != null && !seed(got.intValue())) {
         seed(got.intValue()) = true; ns += 1
       }
     }
-    if (ns == 0L) {
-      // no in-graph seed: every rank is exactly 0 for any k — the same
-      // closed form the distributed path returns
-      val out = new Array[PrRank](n)
-        idx.forEach { (node, ix) =>
-        out(ix.intValue()) = PrRank(node.longValue(), 0L) }
-      return Some(spark.createDataFrame(out.toIndexedSeq))
-    }
+    // no in-graph seed: every rank is exactly 0 for any k — the same
+    // closed form the distributed path returns
+    if (ns == 0L) return g.ranks(spark, new Array[Long](n))
     val teleport = (15L * Mass) / (100L * ns)
     val r0 = Mass / ns
     var rank = Array.tabulate(n)(v => if (seed(v)) r0 else 0L)
@@ -622,21 +573,18 @@ object PageRank {
       }
       val next = Array.tabulate(n)(v => if (seed(v)) teleport else 0L)
       var e = 0
-      while (e < 2 * m) {
-        val su = srcA(e)
+      while (e < g.edges) {
+        val su = g.srcA(e)
         if (tw(su) > 0L) {
-          val d = dstA(e)
+          val d = g.dstA(e)
           next(d) = Math.addExact(next(d),
-            Math.multiplyExact(r85(su), wA(e)) / tw100(su))
+            Math.multiplyExact(r85(su), g.wA(e)) / tw100(su))
         }
         e += 1
       }
       rank = next
       round += 1
     }
-    val out = new Array[PrRank](n)
-    idx.forEach { (node, ix) =>
-      out(ix.intValue()) = PrRank(node.longValue(), rank(ix.intValue())) }
-    Some(spark.createDataFrame(out.toIndexedSeq))
+    g.ranks(spark, rank)
   }
 }

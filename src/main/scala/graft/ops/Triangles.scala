@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Distributed triangle counting via degree-ordered edge orientation
   * (node-iterator++ / "compact-forward"; Suri & Vassilvitskii's
@@ -25,15 +26,9 @@ final case class TriNode(node: Long, deg: Long, n_tri: Long)
 
 object Triangles {
 
-  /** Edge count up to which the census folds on the driver (round-16
-    * optimization; the ConnectedComponents.DriverFoldCap pattern and
-    * size): the distributed path pays two localCheckpoints, a wedge
-    * self-join and two aggregates (~8 jobs + a 50 MB wedge shuffle at
-    * sf0.1) for a pair graph of a few thousand rows. The probe is one
-    * bounded limit(cap+1) job; above the cap — or on any input that
-    * violates the canonical contract (non-Long ids, a ≥ b, duplicate
-    * rows) — the distributed census runs unchanged. TrianglesSpec pins
-    * fast == distributed.
+  /** [[DriverFold]] cap: (a, b) Long pairs as in ConnectedComponents,
+    * where the distributed census pays two localCheckpoints, a wedge
+    * self-join and two aggregates (~8 jobs at sf0.1).
     */
   private[graft] val DriverFoldCap = 1 << 17
 
@@ -43,19 +38,14 @@ object Triangles {
     * `n_tri` = triangles through the node, 0 when none).
     */
   def perNode(edges: DataFrame): DataFrame =
-    perNodeDriver(edges).getOrElse(perNodeDistributed(edges))
+    DriverFold.rows(edges.select(col("a"), col("b")), DriverFoldCap,
+        LongType, LongType)
+      .flatMap(perNodeDriver(edges.sparkSession, _))
+      .getOrElse(perNodeDistributed(edges))
 
-  private def perNodeDriver(edges: DataFrame): Option[DataFrame] = {
-    import org.apache.spark.sql.types.LongType
-    val longIds = edges.schema.fields.length >= 2 &&
-      edges.schema("a").dataType == LongType &&
-      edges.schema("b").dataType == LongType
-    if (!longIds) return None
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val probe = edges.select(col("a"), col("b"))
-      .limit(DriverFoldCap + 1).as[(Long, Long)].collect()
-    if (probe.length > DriverFoldCap) return None
+  private def perNodeDriver(spark: SparkSession, rows: Array[Row])
+      : Option[DataFrame] = {
+    val probe = rows.map(r => (r.getLong(0), r.getLong(1)))
     // canonical-contract check: the distributed operators assume it,
     // the fold verifies it (falling back keeps ANY caller exact)
     val seen = new java.util.HashSet[(Long, Long)]()

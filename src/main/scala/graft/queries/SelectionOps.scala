@@ -2428,53 +2428,34 @@ object SelectionOps {
       .unionByName(topn)
   }
 
+  /** [[graft.ops.DriverFold]] cap: each row carries a whole vector (the
+    * registered q110 frame is bounded to the cell top-100 anyway), while
+    * each greedy round costs ~4 scheduling round-trips. The fold replays
+    * the identical arithmetic: VectorOps2.dot in array order, Catalyst's
+    * exact 4-dp HALF_UP rounding (VectorOps2.round4), java.lang.Double
+    * total order for the (score DESC, vec_id ASC) argmax, and greatest()
+    * via the same comparison.
+    */
+  private val MmrDriverCap = 1 << 12
+
   /** The q110 operator body, exposed for spec inputs: MMR over an
     * embedding frame (vec_id, v, n2) — query = vec_id 0, candidates =
     * the rest. Terminates early when k exceeds the candidate pool
     * (same rule as BPE's merge learning).
     */
-  /** Candidate-row count up to which [[mmrSelect]] folds on the driver
-    * (the registered q110 frame is already bounded to the cell top-100
-    * by construction, so the probe is belt-and-braces for spec-sized
-    * corpus-wide inputs). The k greedy rounds each cost a distributed
-    * argmax collect + broadcast crossJoin + localCheckpoint — ~4
-    * scheduling round-trips per pick for <1 s of executor CPU at
-    * sf0.1 (guide §1.2). The driver fold replays the identical
-    * arithmetic: VectorOps2.dot in array order, Catalyst's exact
-    * 4-dp HALF_UP rounding (VectorOps2.round4), java.lang.Double
-    * total order for the (score DESC, vec_id ASC) argmax, and
-    * greatest() via the same comparison. SelectionOpsSpec pins
-    * fast == distributed.
-    */
-  private val MmrDriverCap = 1 << 12
-
   private[graft] def mmrSelect(s: org.apache.spark.sql.SparkSession,
                                frame: org.apache.spark.sql.DataFrame,
-                               k: Int): org.apache.spark.sql.DataFrame =
-    mmrSelectDriver(s, frame, k)
+                               k: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types._
+    graft.ops.DriverFold.rows(frame.select(col("vec_id"), col("v"), col("n2")),
+        MmrDriverCap, LongType, ArrayType(DoubleType), DoubleType)
+      .flatMap(mmrSelectDriver(s, _, k))
       .getOrElse(mmrSelectDistributed(s, frame, k))
+  }
 
   private def mmrSelectDriver(s: org.apache.spark.sql.SparkSession,
-                              frame: org.apache.spark.sql.DataFrame,
+                              rows: Array[org.apache.spark.sql.Row],
                               k: Int): Option[org.apache.spark.sql.DataFrame] = {
-    import org.apache.spark.sql.types._
-    val byName = frame.schema.fields.map(f => f.name -> f.dataType).toMap
-    val typed = byName.get("vec_id").contains(LongType) &&
-      byName.get("n2").contains(DoubleType) &&
-      (byName.get("v") match {
-        case Some(ArrayType(DoubleType, _)) => true
-        case _ => false
-      })
-    if (!typed) return None
-    val rows = frame.select(col("vec_id"), col("v"), col("n2"))
-      .limit(MmrDriverCap + 1).collect()
-    if (rows.length > MmrDriverCap) return None
-    // contract check (ADVICE r16): the fold unboxes vec_id/v/n2, so a
-    // null in a caller-composed frame would NPE here where the
-    // distributed loop's null-propagating predicates silently drop the
-    // row — fall back to the distributed path instead of diverging
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-      return None
     val qRows = rows.filter(_.getLong(0) == 0L)
     // the fold's exactness argument assumes one query row (the
     // distributed crossJoin would MULTIPLY candidates under several);

@@ -1133,33 +1133,11 @@ object TrainingOps {
         // driver fold under the type-table cap (r16 optimization): the
         // whole curve — training plus all three rung replays — from one
         // bounded collect, vs ~59 scheduling round-trips for ~0.5 s of
-        // executor CPU. Above the cap the distributed rungs below run
-        // unchanged (BpeTrainSpec pins row equality).
+        // executor CPU. Above the cap the distributed rungs run
+        // unchanged (TrainingOpsSpec pins row equality).
         graft.ops.BpeTrain.curveFast(s, words, k = 6, rungs = Seq(0, 3, 6))
-          .getOrElse {
-        val merges = graft.ops.BpeTrain.learnMerges(s, words, k = 6)
-          .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-        def rungRow(r: Int): DataFrame = {
-          // two consumers (piece mass + live vocab) of one type table
-          val types = graft.ops.BpeTrain
-            .wordTypes(s, words, merges.take(r)).localCheckpoint()
-          val pieces = types
-            .agg(sum(col("freq") * size(col("syms"))).as("corpus_pieces"))
-          val vocab = types.select(explode(col("syms")).as("sym")).distinct()
-            .agg(count(lit(1)).as("vocab_syms"))
-          pieces.crossJoin(vocab).withColumn("rung", lit(r.toLong))
-        }
-        val rungs = Seq(0, 3, 6).map(rungRow).reduce(_ unionByName _)
-          .localCheckpoint()
-        val base = rungs.where(col("rung") === 0)
-          .select(col("corpus_pieces").as("p0"))
-        rungs.crossJoin(broadcast(base))
-          .withColumn("compress_permille",
-            expr("(1000 * corpus_pieces) DIV p0"))
-          .select(col("rung"), col("corpus_pieces"), col("vocab_syms"),
-            col("compress_permille"))
-          .orderBy(col("rung"))
-          }
+          .getOrElse(graft.ops.BpeTrain.curveDistributed(s, words, k = 6,
+            rungs = Seq(0, 3, 6)))
       },
       Some(bpeCurveSql(6))),
 

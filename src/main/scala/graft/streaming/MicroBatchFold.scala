@@ -79,10 +79,12 @@ private[graft] object MicroBatchFold {
   }
 
   /** Every staged arrival as one batch frame: the corpus a final fold
-    * scores.
+    * scores. `inputDir` holds only the split files once staging is done;
+    * reading the dir rather than a glob keeps Spark from probing the
+    * glob as a sink-metadata path (a WARN with a stack trace per read).
     */
   def arrived(spark: SparkSession, inputDir: String): DataFrame =
-    spark.read.parquet(s"$inputDir/split_*.parquet")
+    spark.read.parquet(inputDir)
 
   /** Stage `docs` as `nSplits` arrivals in a fresh `tag` work dir and
     * hand `(inputDir, workDir)` to `body`: the registry entry of every

@@ -452,16 +452,12 @@ class OpsSpec extends SparkSpec {
       val dist = graft.ops.ConnectedComponents.clustersWithRounds(df)._1
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(fast == dist, s"trial $trial diverged")
-      // and the probe-overflow branch (cap 0 forces distributed) agrees
-      val capped = graft.ops.ConnectedComponents.clustersCapped(df, 0)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(capped == dist)
-      // and the stream-reliable variant (parquet-pinned rounds instead
-      // of localCheckpoint) agrees through the distributed path too
+      // and the stream-reliable rounds (parquet-pinned instead of
+      // localCheckpoint) agree through the distributed path too
       val scratch = java.nio.file.Files
         .createTempDirectory(s"cc_scratch_$trial").toString
       val reliable = graft.ops.ConnectedComponents
-        .clustersCapped(df, 0, Some(scratch))
+        .clustersWithRounds(df, scratchDir = Some(scratch))._1
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(reliable == dist)
     }

@@ -12,12 +12,6 @@ import org.scalacheck.rng.Seed
   */
 class PropertySpec extends SparkSpec {
 
-  /** Raw-ScalaCheck driver: sample `n` deterministic values from `gen`. */
-  private def forAllSeeded[A](gen: Gen[A], n: Int = 30)(body: A => Unit): Unit =
-    (1 to n).foreach { i =>
-      gen.apply(Gen.Parameters.default, Seed(i.toLong))
-        .foreach(a => body(a))
-    }
   import spark.implicits._
 
   private val messyString: Gen[String] = for {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 object SharedSpark {
@@ -21,4 +23,11 @@ object SharedSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
   val sfDir = SharedSpark.sfDir
+
+  /** Raw-ScalaCheck driver: sample `n` deterministic values from `gen`. */
+  protected def forAllSeeded[A](gen: Gen[A], n: Int = 30)(body: A => Unit): Unit =
+    (1 to n).foreach { i =>
+      gen.apply(Gen.Parameters.default, Seed(i.toLong))
+        .foreach(a => body(a))
+    }
 }

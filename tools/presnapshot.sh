@@ -25,8 +25,7 @@ sbt -batch compile > "$OUT_DIR/compile.log" 2>&1 || {
   tail -30 "$OUT_DIR/compile.log"; echo "[presnapshot] COMPILE FAILED"; exit 1; }
 
 echo "[presnapshot] 2/5 graft.Verify @ $SF_DIR"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
-  sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR/verify" \
+sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR/verify" \
   > "$OUT_DIR/verify.log" 2>&1 || {
   tail -30 "$OUT_DIR/verify.log"; echo "[presnapshot] VERIFY FAILED"; exit 1; }
 
