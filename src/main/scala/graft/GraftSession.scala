@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{Filter, LoggerContext}
 import org.apache.logging.log4j.core.config.Configurator
-import org.apache.spark.sql.SparkSession
+import org.apache.logging.log4j.core.filter.RegexFilter
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.{DatasetBridge, SessionBridge}
 
 /** The one place a graft session is built. Every main and the test
   * suite take their session from here, so the settings the suite
@@ -70,8 +73,10 @@ object GraftSession {
     *     global windows whose inputs are provably small aggregates;
     *   - ResolveWriteToStream: the temporary-checkpoint notice of
     *     streams.
-    * DAGScheduler keeps WARN: it also reports real signals such as large
-    * task binaries.
+    * DAGScheduler keeps WARN for its real signals (large task binaries)
+    * but drops "Failed to cancel job group … Cannot find active jobs":
+    * the thrift server and `StreamingQuery.stop` cancel their job group
+    * whether or not a job still runs.
     */
   def start(b: SparkSession.Builder): SparkSession = {
     val spark = b.getOrCreate()
@@ -80,6 +85,39 @@ object GraftSession {
       "org.apache.spark.sql.execution.window.WindowExec",
       "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream")
       .foreach(Configurator.setLevel(_, Level.ERROR))
+    val dag = "org.apache.spark.scheduler.DAGScheduler"
+    Configurator.setLevel(dag, Level.WARN)
+    val dagLog = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getConfiguration.getLoggerConfig(dag)
+    if (!dagLog.hasFilter) dagLog.addFilter(RegexFilter.createFilter(
+      "Failed to cancel job group .*\\. Cannot find active jobs for it\\.",
+      Array.empty[String], false, Filter.Result.DENY, Filter.Result.NEUTRAL))
     spark
   }
+
+  /** A clone of `spark` with `kvs` set: the caller's runtime conf, temp
+    * views, functions and streaming listeners, on its SparkContext and
+    * catalog. Nothing done on the fork reaches the caller, whose session
+    * may be planning other queries meanwhile (the SQL endpoint plans
+    * client queries on it). The one way to plan with another conf.
+    */
+  def fork(spark: SparkSession, kvs: (String, String)*): SparkSession = {
+    val f = SessionBridge.cloneSession(spark)
+    set(f, kvs: _*)
+    spark.streams.listListeners().foreach(l => f.streams.addListener(l))
+    f
+  }
+
+  /** `df` as a frame of `spark`: a fork's result handed back to its
+    * caller, so its lazy tail plans with the caller's conf and runs the
+    * code the caller already compiled (each session compiles its own).
+    */
+  def on(spark: SparkSession, df: DataFrame): DataFrame =
+    DatasetBridge.ofRows(spark, DatasetBridge.analyzed(df))
+
+  /** Set `kvs` on `owned`, a session nothing else plans on: a fork, or
+    * the clone a running stream hands its foreachBatch body.
+    */
+  private[graft] def set(owned: SparkSession, kvs: (String, String)*): Unit =
+    kvs.foreach { case (k, v) => owned.conf.set(k, v) }
 }

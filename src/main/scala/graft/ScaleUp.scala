@@ -34,14 +34,11 @@ object ScaleUp {
     x ^ (x >>> 31)
   }
 
+  /** Write the `factor`x rung of `srcDir` to `dstDir`, on a session
+    * built like [[main]]'s (nanos read as longs, micros written).
+    */
   def run(spark: SparkSession, srcDir: String, dstDir: String,
           factor: Int): Unit = {
-    // events.ts is parquet TIMESTAMP(NANOS): read it as a raw long,
-    // convert to a microsecond timestamp, and write as annotated INT64
-    // (not Spark's legacy INT96 default) so batch readers, file-stream
-    // schemas, and DuckDB all see one plain timestamp column
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     def src(t: String): DataFrame =
       spark.read.parquet(s"$srcDir/$t.parquet")
     def write(df: DataFrame, t: String): Unit =
@@ -124,7 +121,12 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val Array(srcDir, dstDir, factorStr) = args.take(3)
-    val spark = GraftSession.start("graft-scaleup")
+    val spark = GraftSession.start(
+      GraftSession.builder("graft-scaleup", GraftSession.cpus)
+        // events.ts is TIMESTAMP(NANOS): read raw longs, write annotated
+        // INT64 micros (not INT96) so every reader sees one plain column
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"))
     run(spark, srcDir, dstDir, factorStr.toInt)
     println(s"[scaleup] wrote ${factorStr}x of $srcDir to $dstDir")
     spark.stop()

@@ -12,7 +12,7 @@ import java.sql.DriverManager
   *  1. mount the dashboard views on `endpointSf` and start the thrift
   *     endpoint; record every page's direct count first;
   *  2. launch q130 on `graphSf` (a scale rung — its fact size trips
-  *     the wide path, so the build runs on the isolated newSession());
+  *     the wide path, so the build runs on an isolated fork);
   *  3. while it builds, 4 hive-jdbc clients sweep all 27 pages in
   *     rotation, checking wire == direct on every read and recording
   *     per-read latency;
@@ -90,11 +90,10 @@ object SoakGraphEndpoint {
         .config("spark.scheduler.allocation.file", poolsXml.toString)
         .config("spark.sql.thriftserver.scheduler.pool", "serve")
         // fine-grained tasks (see Scaladoc #2): the non-preemptive tail
-        .config("spark.sql.files.maxPartitionBytes", "16m"))
-    // widen the graph build's shuffle 4× past the fact-scaled width:
-    // shorter tasks, faster core handoff to the serve pool
-    spark.conf.set("spark.graft.graph.minShuffleWidth",
-      (cpus * 8).toString)
+        .config("spark.sql.files.maxPartitionBytes", "16m")
+        // widen the graph build's shuffle 4× past the fact-scaled width:
+        // shorter tasks, faster core handoff to the serve pool
+        .config("spark.graft.graph.minShuffleWidth", (cpus * 8).toString))
 
     val port = {
       val ss = new java.net.ServerSocket(0)
@@ -150,14 +149,10 @@ object SoakGraphEndpoint {
         // same fine-grained-tasks lever that bounded the single-build
         // p99 in r13, now applied to EVERY build's shuffles (the span
         // stream's gram stages, not just the graph build's). The serve
-        // sessions keep their own width; newSession shares the context
-        // but not runtime SQLConf, so the widening cannot leak into
-        // page reads.
-        val bs = spark.newSession()
-        bs.conf.set("spark.sql.shuffle.partitions",
-          (cpus * 4).toString)
-        bs.conf.set("spark.graft.graph.minShuffleWidth",
-          (cpus * 8).toString)
+        // sessions keep their own width: the build plans on a fork, so
+        // the widening cannot leak into page reads.
+        val bs = GraftSession.fork(spark,
+          "spark.sql.shuffle.partitions" -> (cpus * 4).toString)
         val t0 = System.nanoTime()
         try buildRows.put(qn,
           queries.Registry.byName(qn).run(bs, dir).count())

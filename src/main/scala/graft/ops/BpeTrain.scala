@@ -141,15 +141,18 @@ object BpeTrain {
   }
 
   /** Learn `k` merges from a one-column DataFrame of word occurrences
-    * (`w`, non-empty). Returns the merge table ordered by round. A type
-    * table under [[DriverTrainCap]] trains entirely on the driver.
+    * (`w`, non-empty; a null word contributes nothing). Returns the
+    * merge table ordered by round. A type table under
+    * [[DriverTrainCap]] trains entirely on the driver.
     */
-  def learnMerges(s: SparkSession, words: DataFrame, k: Int): DataFrame =
-    collectTypes(words) match {
+  def learnMerges(s: SparkSession, words: DataFrame, k: Int): DataFrame = {
+    val ws = words.where(col("w").isNotNull)
+    collectTypes(ws) match {
       case Some(tys) =>
         s.createDataFrame(trainLocal(tys, k)).orderBy(col("round"))
       case None => learnMergesDistributed(s, words, k)
     }
+  }
 
   /** The distributed merge rounds (the pre-fold learnMerges body) —
     * the scale path above [[DriverTrainCap]], and the equality
@@ -158,7 +161,8 @@ object BpeTrain {
   private[graft] def learnMergesDistributed(s: SparkSession, words: DataFrame,
                                             k: Int): DataFrame = {
     import s.implicits._
-    var syms = words.groupBy(col("w")).agg(count(lit(1)).as("freq"))
+    var syms = words.where(col("w").isNotNull)
+      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(col("w").as("word"), col("freq"),
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
           .as("syms"))

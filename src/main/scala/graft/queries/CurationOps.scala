@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import graft.functions.PolyHash.polyHash
 import graft.ops.{HtmlExtract, Robots, Warc}
-import graft.streaming.BatchTuning.withConf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -404,7 +403,7 @@ object CurationOps {
     // therefore checks the store handoff and the partial fold.
     Q(
       "q179_url_frontier_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.UrlFrontierStream.runOn(
           s, Tables.documents(s, d), nSplits = 2)
       },
@@ -552,7 +551,7 @@ object CurationOps {
     // fold straight from the documents table, gating the whole chain.
     Q(
       "q182_warc_ingest_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.WarcIngestStream.runOn(
           s, Tables.documents(s, d), nSplits = 2)
       },

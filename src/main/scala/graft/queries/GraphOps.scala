@@ -154,9 +154,8 @@ object GraphOps {
     * mode, where driver and executors share one machine.
     */
   private def stageParquet(s: org.apache.spark.sql.SparkSession,
-                           df: DataFrame, tag: String,
-                           scratchRoot: Option[String]): (DataFrame, String) = {
-    val dir = scratchRoot match {
+                           df: DataFrame, tag: String): (DataFrame, String) = {
+    val dir = s.conf.getOption("spark.graft.scratchDir") match {
       case Some(root) =>
         s"${root.stripSuffix("/")}/graft_${tag}_${java.util.UUID.randomUUID}"
       case None =>
@@ -177,13 +176,13 @@ object GraphOps {
     * build cost twin B the disk headroom run A survived on.
     *
     * Width ISOLATION (round-10 verdict #3): the widened
-    * `spark.sql.shuffle.partitions` is set on a `newSession()` — same
-    * SparkContext, block manager, and shared catalog, but its OWN
-    * SQLConf — never on the caller's session. The caller's session is
-    * concurrent in this engine (the BI endpoint plans thrift clients'
-    * queries on it), and a session-level conf mutation would leak the
-    * ~26× width into any plan compiled while the graph build holds it.
-    * Below the threshold no second session is created at all.
+    * `spark.sql.shuffle.partitions` is set on a [[graft.GraftSession.fork]]
+    * (same SparkContext, block manager, catalog and runtime conf, but
+    * its OWN SQLConf), never on the caller's session. The caller's
+    * session is concurrent in this engine (the BI endpoint plans thrift
+    * clients' queries on it), and a session-level conf mutation would
+    * leak the ~26× width into any plan compiled while the graph build
+    * holds it. Below the threshold no second session is created at all.
     *
     * `spark.graft.graph.minShuffleWidth` (session conf, optional)
     * floors the computed width — the production override for clusters
@@ -204,17 +203,11 @@ object GraphOps {
     val parts = math.max(factShuffleWidth(s, d, prev), floor)
     if (parts == prev) build(s, identity, false)
     else {
-      // scratchDir must be read off the CALLER's session before the
-      // fork: newSession() starts from cloned defaults, not the
-      // caller's runtime conf.set values, so resolving it on `gs`
-      // would silently drop a runtime-set shared-FS staging root on
-      // exactly the (wide) path that stages.
-      val scratchRoot = s.conf.getOption("spark.graft.scratchDir")
-      val gs = s.newSession()
-      gs.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val gs = graft.GraftSession.fork(s,
+        "spark.sql.shuffle.partitions" -> parts.toString)
       val staged = scala.collection.mutable.ArrayBuffer.empty[String]
       try build(gs, { df =>
-        val (out, dir) = stageParquet(gs, df, "graph", scratchRoot)
+        val (out, dir) = stageParquet(gs, df, "graph")
         staged += dir
         out
       }, true).localCheckpoint()

@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import graft.ops.Multimodal
 import graft.pipeline.{Extract, Transform}
-import graft.streaming.BatchTuning.withConf
 import graft.streaming.EventStreams
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -369,21 +368,17 @@ object PipelineOps {
     // verifies the streaming path.
     Q(
       "q57_events_hourly_stream",
-      (s, d) => {
+      // Stateful operators allocate one state store per shuffle
+      // partition, and each store pays per-batch checkpoint I/O — for
+      // this window×type-sized state, 32 stores are pure overhead.
+      // Sizing state partitions to state volume, not input volume, is
+      // the real deployment decision. The memory sink registers its
+      // result view on the fork, and the row reads it back there.
+      Q.atWidth8 { (s, d) =>
         val stream = EventStreams.readEventStream(s, s"$d/events.parquet")
         val agg = EventStreams.hourlyCounts(stream)
-        val name = "graft_stream_hourly"
-        s.catalog.dropTempView(name)
-        // Stateful operators allocate one state store per shuffle
-        // partition, and each store pays per-batch checkpoint I/O — for
-        // this window×type-sized state, 32 stores are pure overhead
-        // (measured 3.2s -> 1.7s at 8 on sf0.1). Sizing state partitions
-        // to state volume, not input volume, is the real deployment
-        // decision; restore the session value afterwards.
-        val out = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-          EventStreams.runToMemory(s, agg, name, OutputMode.Update())
-        }
-        out
+        EventStreams.runToMemory(s, agg, "graft_stream_hourly",
+            OutputMode.Update())
           .select(date_format(col("h"), "yyyy-MM-dd HH:00:00").as("h"),
                   col("event_type"), col("n"), col("sum_v"))
           .orderBy(col("h"), col("event_type"))
@@ -405,16 +400,12 @@ object PipelineOps {
     // DuckDB replays the whole approximate result.
     Q(
       "q123_kmv_users_stream",
-      (s, d) => {
+      // state partitions sized to state volume — see q57
+      Q.atWidth8 { (s, d) =>
         val stream = EventStreams.readEventStream(s, s"$d/events.parquet")
         val agg = EventStreams.hourlyDistinctUsers(stream)
-        val name = "graft_stream_kmv_users"
-        s.catalog.dropTempView(name)
-        // state partitions sized to state volume — see q57
-        val out = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-          EventStreams.runToMemory(s, agg, name, OutputMode.Update())
-        }
-        out
+        EventStreams.runToMemory(s, agg, "graft_stream_kmv_users",
+            OutputMode.Update())
           .select(date_format(col("h"), "yyyy-MM-dd HH:00:00").as("h"),
                   col("n_min"), col("kth_hash"), col("est_users"))
           .orderBy(col("h"))
@@ -440,18 +431,14 @@ object PipelineOps {
     // twin of a star join, verified against the batch SQL.
     Q(
       "q80_events_segment_stream",
-      (s, d) => {
+      // state partitions sized to state volume — see q57
+      Q.atWidth8 { (s, d) =>
         val stream = EventStreams.readEventStream(s, s"$d/events.parquet")
         val dim = Tables.customer(s, d)
           .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
         val agg = EventStreams.segmentCounts(stream, dim)
-        val name = "graft_stream_segments"
-        s.catalog.dropTempView(name)
-        // state partitions sized to state volume — see q57
-        val out = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-          EventStreams.runToMemory(s, agg, name, OutputMode.Update())
-        }
-        out
+        EventStreams.runToMemory(s, agg, "graft_stream_segments",
+            OutputMode.Update())
           .select(date_format(col("h"), "yyyy-MM-dd HH:00:00").as("h"),
                   col("c_mktsegment"), col("n"), col("sum_v"))
           .orderBy(col("h"), col("c_mktsegment"))

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VectorFunctions.{dotProduct, squaredNorm}
-import graft.streaming.BatchTuning.withConf
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -934,7 +933,7 @@ object SelectionOps {
     // to q141 — both share one oracle, which therefore checks the
     // cross-batch count handoff AND the totals derivation end to end.
     // (no session-wide shuffle-partition clamp here, unlike the store
-    // streams: the per-batch partials already run under BatchTuning's
+    // streams: the per-batch partials already run under the harness's
     // narrow shuffles inside foreachBatch, and the final scoring pass is
     // corpus-wide — clamping it to 8 partitions cost 7x at sf10,
     // measured 120s -> see PLANS round-9 close-out)
@@ -1017,7 +1016,7 @@ object SelectionOps {
     // batch output row for row: q111 shares q86's oracle end to end.
     Q(
       "q111_ivf_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.IvfStream.runOn(
           s, Tables.embeddings(s, d), nSplits = 2)
       },
@@ -1553,7 +1552,7 @@ object SelectionOps {
     // universe every batch.
     Q(
       "q122_bigram_lm_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.BigramLmStream.runOn(
           s, Tables.documents(s, d), nSplits = 2)
       },
@@ -1593,7 +1592,7 @@ object SelectionOps {
     // the arrived corpus are bit-identical to q144 (shared oracle).
     Q(
       "q146_mixture_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.MixtureStream.runOn(
           s, Tables.documents(s, d), nSplits = 2)
       },

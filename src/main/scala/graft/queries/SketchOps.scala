@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.CmsSketch
-import graft.streaming.BatchTuning.withConf
 import org.apache.spark.sql.functions._
 
 /** Sketch / sampling operators for corpus-scale statistics (SURVEY.md
@@ -192,7 +191,7 @@ object SketchOps {
     // HLL max fold).
     Q(
       "q125_hll_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.HllStream.runOn(
           s,
           Tables.lineitem(s, d)
@@ -693,7 +692,7 @@ object SketchOps {
     // point estimates from state that arrived file by file.
     Q(
       "q109_cms_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.CmsStream.runOn(
           s, Tables.documents(s, d), nSplits = 2)
       },

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.streaming.BatchTuning.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -781,7 +780,7 @@ object TextOps {
     // verbatim — cross-batch store state included.
     Q(
       "q158_yield_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         val dd = Tables.documents(s, d)
         val labels = graft.streaming.MinHashDedupStream
           .runClustersOn(s, "q158_yield_stream", dd, nSplits = 2)
@@ -800,7 +799,7 @@ object TextOps {
     // over the q70 pair set.
     Q(
       "q129_minhash_dedup_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.MinHashDedupStream.runOn(
           s, Tables.documents(s, d), nSplits = 2)
       },
@@ -819,7 +818,7 @@ object TextOps {
     // stream, cross-batch store state included.
     Q(
       "q134_incremental_cc_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.MinHashDedupStream.runClustersOn(
           s, "q134_incremental_cc_stream", Tables.documents(s, d),
           nSplits = 2)
@@ -1164,7 +1163,7 @@ object TextOps {
     // (Zipf-bounded), not per-doc streaming state.
     Q(
       "q138_nb_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.NbClassifierStream.runOn(
           s, docs(s, d), nSplits = 2)
       },

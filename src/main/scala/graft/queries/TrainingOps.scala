@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import graft.functions.PolyHash.polyHash
 import graft.functions.VectorFunctions.{dotProduct, squaredNorm}
-import graft.streaming.BatchTuning.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1031,7 +1030,7 @@ object TrainingOps {
     // which checks cross-batch dedup state end to end.
     Q(
       "q101_span_dedup_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.SpanDedupStream.runOn(
           s, Tables.documents(s, d), w = 8, nSplits = 2)
       },
@@ -1048,7 +1047,7 @@ object TrainingOps {
     // which therefore checks the store handoff AND the partial-fold.
     Q(
       "q104_corpus_prep_stream",
-      (s, d) => withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      Q.atWidth8 { (s, d) =>
         graft.streaming.CorpusPrepStream.runOn(
           s, Tables.documents(s, d), nSplits = 2)
       },

@@ -39,6 +39,7 @@ object CorpusPrepStream {
     StructField("pack2", LongType)))
   private val PackBase = graft.functions.ShingleKernel.PackBase
   private val PackKeys = Seq("pack", "pack2")
+  private def storeDir(workDir: String): String = s"$workDir/pfx_store"
 
   /** Run the staged splits to completion (one micro-batch per file) and
     * return the folded per-(split, lang) stats, schema-identical to
@@ -59,8 +60,11 @@ object CorpusPrepStream {
     */
   def run(spark: SparkSession, inputDir: String, workDir: String,
           nBuckets: Int = 16, compactEvery: Int = 8): DataFrame = {
-    MicroBatchFold.run(spark, inputDir, workDir) { (batch, batchId) =>
-      processBatch(spark, batch, batchId, workDir, nBuckets, compactEvery)
+    // narrow-shuffle/AQE-off batches below the switch
+    MicroBatchFold.run(spark, inputDir, workDir,
+        narrow = () => MicroBatchFold.below(spark, storeDir(workDir))) {
+      (batch, batchId) => processBatch(batch.sparkSession, batch, batchId,
+        workDir, nBuckets, compactEvery)
     }
     spark.read.parquet(s"$workDir/partials")
       .groupBy(col("split"), col("lang"))
@@ -79,7 +83,7 @@ object CorpusPrepStream {
   private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
                                   batchId: Long, workDir: String,
                                   nBuckets: Int, compactEvery: Int): Unit = {
-    val storeDir = s"$workDir/pfx_store"
+    val storeDir = CorpusPrepStream.storeDir(workDir)
     val partsDir = s"$workDir/partials"
     val bucketOf = pmod(col("pack"), lit(nBuckets.toLong)).cast("int")
     // three consumers scan the gated batch (bucket list, chunking,
@@ -105,8 +109,6 @@ object CorpusPrepStream {
     // Cost-based like SpanDedupStream: a small store is scanned
     // whole rather than paying an extra job for the prune list.
     val big = !MicroBatchFold.below(spark, storeDir)
-    // narrow-shuffle/AQE-off scope below the switch (BatchTuning)
-    MicroBatchFold.scoped(spark, batch, narrow = !big) {
     val store = graft.pipeline.Load
       .readStoreExcludingBatch(spark, storeDir, batchId)
       .map { s =>
@@ -152,7 +154,6 @@ object CorpusPrepStream {
       graft.pipeline.Load.consolidateBatchStore(spark, storeDir, batchId)
     gated.unpersist()
     ()
-    }
   }
 
   /** Stage + run in a fresh work dir: the q104 entry. */

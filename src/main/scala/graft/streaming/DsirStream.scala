@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession
 import graft.queries.SelectionOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,30 +33,31 @@ object DsirStream {
     // 350MB file scans as ~3 tasks, which starved both the per-batch
     // count pass and the final corpus scoring at sf10 (measured 133s vs
     // the batch q141's 17s). Narrow the file-split size for the run so
-    // scan parallelism matches the corpus, not the file count; restored
-    // when the run ends. Production streams arrive as many files and
-    // don't need this.
-    BatchTuning.withConf(spark,
-        "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString) {
-      MicroBatchFold.runInputGated(spark, inputDir, workDir) { (batch, batchId) =>
-        graft.pipeline.Load.writeBatchPartial(
-          SelectionOps.dsirToks(batch, isTarget, dim)
-            .groupBy(col("b")).agg(
-              count(lit(1)).as("rc"),
-              sum(when(col("tgt"), 1L).otherwise(0L)).as("tc"))
-            .coalesce(1),
-          cntDir, batchId)
-      }
-      val counts = spark.read.parquet(cntDir)
-        .groupBy(col("b"))
-        .agg(sum(col("rc")).as("rc"), sum(col("tc")).as("tc"))
-      val arrived = MicroBatchFold.arrived(spark, inputDir)
-      SelectionOps.dsirScore(
-        SelectionOps.dsirToks(arrived, isTarget, dim), counts, dim, k,
-        // the fold runs under a live stream's lifetime: pin to parquet
-        // scratch so an executor kill can't strand a checkpoint block
-        scratch = Some(s"$workDir/scratch"))
+    // scan parallelism matches the corpus, not the file count: the
+    // stream and the corpus scan plan on a fork with it set. Production
+    // streams arrive as many files and don't need this.
+    val fs = GraftSession.fork(spark,
+      "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString)
+    MicroBatchFold.runInputGated(fs, inputDir, workDir) { (batch, batchId) =>
+      graft.pipeline.Load.writeBatchPartial(
+        SelectionOps.dsirToks(batch, isTarget, dim)
+          .groupBy(col("b")).agg(
+            count(lit(1)).as("rc"),
+            sum(when(col("tgt"), 1L).otherwise(0L)).as("tc"))
+          .coalesce(1),
+        cntDir, batchId)
     }
+    val counts = spark.read.parquet(cntDir)
+      .groupBy(col("b"))
+      .agg(sum(col("rc")).as("rc"), sum(col("tc")).as("tc"))
+    // split on the fork's size (a scan takes it from the session that
+    // read it), scored on the caller's session
+    val arrived = GraftSession.on(spark, MicroBatchFold.arrived(fs, inputDir))
+    SelectionOps.dsirScore(
+      SelectionOps.dsirToks(arrived, isTarget, dim), counts, dim, k,
+      // the fold runs under a live stream's lifetime: pin to parquet
+      // scratch so an executor kill can't strand a checkpoint block
+      scratch = Some(s"$workDir/scratch"))
   }
 
   /** Stage + run in a fresh work dir: the q142 entry. */

@@ -40,61 +40,60 @@ object IvfStream {
   def run(spark: SparkSession, inputDir: String, workDir: String): DataFrame = {
     val storeDir = s"$workDir/bucket_store"
     val centDir = s"$workDir/centroids"
-    MicroBatchFold.run(spark, inputDir, workDir) { (batch, batchId) =>
-      MicroBatchFold.scoped(spark, batch,
-          narrow = MicroBatchFold.below(spark, storeDir)) {
-        // staged via the shared doc_id-range stager; restore the key
-        // name. Zero-norm rows drop here like everywhere in the
-        // similarity family (r13 degenerate sweep): they can neither
-        // seed a centroid (cn2=0 divisor) nor join a bucket.
-        val e = batch
-          .select(col("doc_id").as("vec_id"),
-            col("embedding").cast("array<double>").as("v"))
-          .withColumn("n2", squaredNorm(col("v")))
-          .where(col("n2") > 0d)
-        // pin the quantizer from the batch that carries the seed ids;
-        // id-ordered arrival puts every seed the corpus HAS in batch 0.
-        // A corpus so small that its id span splits below 8 pins on the
-        // usable seeds batch 0 carries (documented degenerate-corpus
-        // deviation: the stream's seed set is split 0's prefix of the
-        // batch twin's); a corpus with NO usable seed ids builds no
-        // index and the probe answers empty.
-        if (graft.pipeline.Load.readStoreIfExists(spark, centDir).isEmpty) {
-          val seeds = SelectionOps.seedCentroids(e).cache()
-          val k = seeds.count()
-          // While NO quantizer is pinned yet, ANY batch may pin whatever
-          // usable seeds it carries (ADVICE r13): if split 0's seed-range
-          // vectors were all zero-norm (dropped by the n2>0 guard above)
-          // and a later split carries usable vec_id<8 rows, failing loud
-          // here would kill a degenerate stream that contracts to "empty
-          // result, not dead query". Seeds arriving AFTER a store is
-          // pinned never reach this block (guarded by isEmpty), so the
-          // ErrorIfExists write below stays the loud path for a
-          // double-pin, the one state that would mean staging broke.
-          if (k > 0L) {
-            // ADVICE r14: a pin on batchId > 0 is the degenerate-corpus
-            // path ONLY if the earlier splits carried no usable seeds;
-            // if staging ever delivers seed ids late in a healthy
-            // corpus, the pinned quantizer is partial. Keep that state
-            // loud in the logs so a mis-staged corpus is diagnosable.
-            if (batchId > 0L)
-              System.err.println(
-                s"[ivf-stream] LATE PIN: quantizer pinned on batch $batchId " +
-                  s"with $k seed(s) — expected batch 0 under id-ordered " +
-                  "staging; earlier splits carried no usable seed vectors")
-            seeds.coalesce(1).write.mode(SaveMode.ErrorIfExists).parquet(centDir)
-          }
-          seeds.unpersist()
+    MicroBatchFold.run(spark, inputDir, workDir,
+        narrow = () => MicroBatchFold.below(spark, storeDir)) {
+      (batch, batchId) =>
+      // staged via the shared doc_id-range stager; restore the key
+      // name. Zero-norm rows drop here like everywhere in the
+      // similarity family (r13 degenerate sweep): they can neither
+      // seed a centroid (cn2=0 divisor) nor join a bucket.
+      val e = batch
+        .select(col("doc_id").as("vec_id"),
+          col("embedding").cast("array<double>").as("v"))
+        .withColumn("n2", squaredNorm(col("v")))
+        .where(col("n2") > 0d)
+      // pin the quantizer from the batch that carries the seed ids;
+      // id-ordered arrival puts every seed the corpus HAS in batch 0.
+      // A corpus so small that its id span splits below 8 pins on the
+      // usable seeds batch 0 carries (documented degenerate-corpus
+      // deviation: the stream's seed set is split 0's prefix of the
+      // batch twin's); a corpus with NO usable seed ids builds no
+      // index and the probe answers empty.
+      if (graft.pipeline.Load.readStoreIfExists(batch.sparkSession, centDir).isEmpty) {
+        val seeds = SelectionOps.seedCentroids(e).cache()
+        val k = seeds.count()
+        // While NO quantizer is pinned yet, ANY batch may pin whatever
+        // usable seeds it carries (ADVICE r13): if split 0's seed-range
+        // vectors were all zero-norm (dropped by the n2>0 guard above)
+        // and a later split carries usable vec_id<8 rows, failing loud
+        // here would kill a degenerate stream that contracts to "empty
+        // result, not dead query". Seeds arriving AFTER a store is
+        // pinned never reach this block (guarded by isEmpty), so the
+        // ErrorIfExists write below stays the loud path for a
+        // double-pin, the one state that would mean staging broke.
+        if (k > 0L) {
+          // ADVICE r14: a pin on batchId > 0 is the degenerate-corpus
+          // path ONLY if the earlier splits carried no usable seeds;
+          // if staging ever delivers seed ids late in a healthy
+          // corpus, the pinned quantizer is partial. Keep that state
+          // loud in the logs so a mis-staged corpus is diagnosable.
+          if (batchId > 0L)
+            System.err.println(
+              s"[ivf-stream] LATE PIN: quantizer pinned on batch $batchId " +
+                s"with $k seed(s) — expected batch 0 under id-ordered " +
+                "staging; earlier splits carried no usable seed vectors")
+          seeds.coalesce(1).write.mode(SaveMode.ErrorIfExists).parquet(centDir)
         }
-        // store layout: batch=<id>/bucket=<b> — idempotent per batch AND
-        // prunable per bucket, so a probe reads only the cells it
-        // searches (the same directory-pruning shape as the q101 gram
-        // store; compaction on cadence would merge per-bucket files)
-        graft.pipeline.Load.readStoreIfExists(spark, centDir).foreach { cent =>
-          graft.pipeline.Load.writeBatchPartial(
-            SelectionOps.assignWith(e, cent).repartition(col("bucket")),
-            storeDir, batchId, partitionCols = Seq("bucket"))
-        }
+        seeds.unpersist()
+      }
+      // store layout: batch=<id>/bucket=<b> — idempotent per batch AND
+      // prunable per bucket, so a probe reads only the cells it
+      // searches (the same directory-pruning shape as the q101 gram
+      // store; compaction on cadence would merge per-bucket files)
+      graft.pipeline.Load.readStoreIfExists(batch.sparkSession, centDir).foreach { cent =>
+        graft.pipeline.Load.writeBatchPartial(
+          SelectionOps.assignWith(e, cent).repartition(col("bucket")),
+          storeDir, batchId, partitionCols = Seq("bucket"))
       }
     }
     // the q86 probe over the accumulated store; a corpus that pinned no

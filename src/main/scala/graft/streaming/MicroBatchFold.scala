@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession
 import graft.pipeline.Load
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,34 +10,35 @@ import org.apache.spark.sql.streaming.Trigger
 /** The micro-batch harness every file-per-trigger stream runs on: a
   * corpus is staged as doc_id-range arrival files, a file source
   * replays them one file per trigger, `Trigger.AvailableNow` drains
-  * them into a `foreachBatch` body, and each batch's plans are scoped
-  * by one cost switch. A stream supplies its per-batch partial and its
-  * final fold; the staging, source, drain and switch live here once.
+  * them into a `foreachBatch` body, and each batch's plans are set by
+  * one cost switch. A stream supplies its per-batch partial, its gate
+  * and its final fold; the staging, source, drain and switch live here
+  * once.
   */
 private[graft] object MicroBatchFold {
 
-  /** The cost switch. A batch whose gate — the staged input, or the
-    * stream's own store — holds fewer bytes plans with AQE off and a
-    * narrow shuffle width ([[BatchTuning]]); at or above it the batch
-    * keeps the session's AQE planning, and store streams pay the
-    * bucket-list job that partition-prunes their probes. Always-narrow
-    * regressed the sf10 rung (q125 35 -> 51 s) once the narrow scope
-    * reached the batch's cloned session.
+  /** The cost switch. A batch whose gate (the staged input, or the
+    * stream's own store) holds fewer bytes plans with AQE off and a
+    * narrow shuffle width ([[Narrow]]); at or above it the batch keeps
+    * the AQE planning the stream started with, and store streams pay
+    * the bucket-list job that partition-prunes their probes.
+    * Always-narrow regressed the sf10 rung (q125 35 -> 51 s). Narrow
+    * because AQE runs every exchange as its own job: a 6-batch
+    * span-dedup replay ran 63 jobs with AQE on, 34 off (~13% wall).
     */
   val NarrowBelowBytes: Long = 64L * 1024 * 1024
+
+  private val Aqe = "spark.sql.adaptive.enabled"
+  private val Width = "spark.sql.shuffle.partitions"
+
+  private def narrowAt(width: Int) = Seq(Aqe -> "false", Width -> width.toString)
+  private val Narrow = narrowAt(4)
 
   /** Whether everything under `dir` (0 bytes if missing) is below the
     * switch.
     */
   def below(spark: SparkSession, dir: String): Boolean =
     Load.storeBytes(spark, dir) < NarrowBelowBytes
-
-  /** Plan `f` narrow (when `narrow`) on every session a foreachBatch
-    * body plans with: the outer session and the batch's clone.
-    */
-  def scoped[T](spark: SparkSession, batch: DataFrame, narrow: Boolean)
-               (f: => T): T =
-    BatchTuning.withNarrowShufflesOn(Seq(spark, batch.sparkSession), narrow)(f)
 
   /** The staged arrivals under `inputDir` as a file source, one split
     * file per trigger (replayed in mod-time order).
@@ -60,22 +62,28 @@ private[graft] object MicroBatchFold {
       .awaitTermination()
 
   /** Drain the staged splits under `inputDir` through `body`,
-    * checkpointed at `$workDir/ckpt`. The body scopes its own batch
-    * ([[scoped]]), gated on whatever it measures per batch.
+    * checkpointed at `$workDir/ckpt`. Before each batch `narrow()`
+    * picks [[Narrow]] or the AQE and width `spark` started with, set on
+    * the batch's own session (the clone the stream owns), never on
+    * `spark`: bodies plan their store reads on `batch.sparkSession`.
     */
-  def run(spark: SparkSession, inputDir: String, workDir: String)
-         (body: (DataFrame, Long) => Unit): Unit =
-    drain(source(spark, inputDir), s"$workDir/ckpt")(body)
+  def run(spark: SparkSession, inputDir: String, workDir: String,
+          narrow: () => Boolean)(body: (DataFrame, Long) => Unit): Unit = {
+    val started = Seq(Aqe, Width).map(k => k -> spark.conf.get(k))
+    drain(source(spark, inputDir), s"$workDir/ckpt") { (batch, batchId) =>
+      GraftSession.set(batch.sparkSession,
+        (if (narrow()) Narrow else started): _*)
+      body(batch, batchId)
+    }
+  }
 
-  /** [[run]] with every batch scoped by the staged input's size,
+  /** [[run]] with every batch gated by the staged input's size,
     * measured once before the stream starts.
     */
   def runInputGated(spark: SparkSession, inputDir: String, workDir: String)
                    (body: (DataFrame, Long) => Unit): Unit = {
     val narrow = below(spark, inputDir)
-    run(spark, inputDir, workDir) { (batch, batchId) =>
-      scoped(spark, batch, narrow)(body(batch, batchId))
-    }
+    run(spark, inputDir, workDir, () => narrow)(body)
   }
 
   /** Every staged arrival as one batch frame: the corpus a final fold
@@ -107,25 +115,26 @@ private[graft] object MicroBatchFold {
                   nSplits: Int): Unit = {
     // Cost-switched staging plan: when the frame to stage is itself a
     // narrow scan (the small-fixture case — one or two input splits),
-    // plan it like a micro batch (AQE off, narrow width — each AQE
-    // exchange materialization is an extra scheduling round-trip on a
-    // table this size). A WIDE input keeps the session's AQE planning:
-    // narrowing it funneled a 100x rung's staged table through 4
-    // AQE-off partitions (measured at sf10: q125 35 -> 51 s before
-    // this switch). The hash-repartition on `split` keeps each split
-    // value wholly inside one task at any width, so the
-    // one-file-per-split layout the replay order depends on is
-    // width-independent.
+    // plan it like a micro batch, on a fork (AQE off, narrow width —
+    // each AQE exchange materialization is an extra scheduling
+    // round-trip on a table this size). A WIDE input keeps the
+    // caller's AQE planning: narrowing it funneled a 100x rung's
+    // staged table through 4 AQE-off partitions (measured at sf10:
+    // q125 35 -> 51 s before this switch). The hash-repartition on
+    // `split` keeps each split value wholly inside one task at any
+    // width, so the one-file-per-split layout the replay order depends
+    // on is width-independent.
     val width = math.max(4, nSplits)
-    val narrow = docs.rdd.getNumPartitions <= width
-    BatchTuning.withNarrowShuffles(spark, narrow = narrow,
-      partitions = width) {
-      stageSplitsInner(spark, docs, inputDir, nSplits)
+    if (docs.rdd.getNumPartitions > width)
+      stageSplitsInner(docs, inputDir, nSplits)
+    else {
+      val fork = GraftSession.fork(spark, narrowAt(width): _*)
+      stageSplitsInner(GraftSession.on(fork, docs), inputDir, nSplits)
     }
   }
 
-  private def stageSplitsInner(spark: SparkSession, docs: DataFrame,
-                               inputDir: String, nSplits: Int): Unit = {
+  private def stageSplitsInner(docs: DataFrame, inputDir: String,
+                               nSplits: Int): Unit = {
     val boundRow = docs.agg(max(col("doc_id"))).collect().head
     new java.io.File(inputDir).mkdirs()
     val tmp = s"$inputDir/_stage"

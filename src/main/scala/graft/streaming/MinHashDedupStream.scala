@@ -127,9 +127,14 @@ object MinHashDedupStream {
   private def runStream(spark: SparkSession, inputDir: String,
                         workDir: String, nBuckets: Int,
                         pruneThresholdBytes: Long, foldCc: Boolean): Unit = {
-    MicroBatchFold.run(spark, inputDir, workDir) { (batch0, batchId) =>
-      processBatch(spark, batch0, batchId, workDir, nBuckets,
-        pruneThresholdBytes, foldCc)
+    // narrow-shuffle/AQE-off batches while both stores are below the
+    // prune threshold
+    def small(store: String) =
+      Load.storeBytes(spark, s"$workDir/$store") < pruneThresholdBytes
+    MicroBatchFold.run(spark, inputDir, workDir,
+        narrow = () => small("band_store") && small("pack_store")) {
+      (batch0, batchId) => processBatch(batch0.sparkSession, batch0, batchId,
+        workDir, nBuckets, pruneThresholdBytes, foldCc)
     }
   }
 
@@ -152,12 +157,6 @@ object MinHashDedupStream {
     val bandBucket = pmod(hash(col("band"), col("key")), lit(nBuckets))
     val docBucket = pmod(col("doc_id"), lit(nBuckets.toLong)).cast("int")
     val batch = batch0.cache()
-    // narrow-shuffle/AQE-off scope while both stores are below the
-    // prune threshold (BatchTuning)
-    val smallStores =
-      Load.storeBytes(spark, bandStoreDir) < pruneThresholdBytes &&
-        Load.storeBytes(spark, packStoreDir) < pruneThresholdBytes
-    MicroBatchFold.scoped(spark, batch0, narrow = smallStores) {
     // per-doc shingle packs and banded signature, one codegen'd
     // kernel pass (the q70 shape); docs under 3 tokens have no
     // shingles and band with nothing
@@ -325,7 +324,6 @@ object MinHashDedupStream {
     // every consumer (verdicts, pair store, label fold) materialized
     if (foldCc) qual.unpersist(blocking = false)
     ()
-    }
   }
 
   /** Stage + run in a fresh work dir: the q129 entry. Arrival order is

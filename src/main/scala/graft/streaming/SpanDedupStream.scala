@@ -22,6 +22,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object SpanDedupStream {
 
   private val packSchema = StructType(Seq(StructField("pack", LongType)))
+  private def storeDir(workDir: String): String = s"$workDir/gram_store"
 
   /** Run the incremental dedup over the staged splits to completion
     * (one micro-batch per file) and return the accumulated per-doc
@@ -58,8 +59,13 @@ object SpanDedupStream {
     */
   def run(spark: SparkSession, inputDir: String, workDir: String,
           w: Int, nBuckets: Int = 16, compactEvery: Int = 8): DataFrame = {
-    MicroBatchFold.run(spark, inputDir, workDir) { (batch0, batchId) =>
-      processBatch(spark, batch0, batchId, workDir, w, nBuckets, compactEvery)
+    // below the switch, plan the whole batch with narrow shuffles and
+    // AQE off: micro-batch data never needs runtime re-planning, and
+    // each AQE exchange materialization is a whole extra job
+    MicroBatchFold.run(spark, inputDir, workDir,
+        narrow = () => MicroBatchFold.below(spark, storeDir(workDir))) {
+      (batch0, batchId) => processBatch(batch0.sparkSession, batch0, batchId,
+        workDir, w, nBuckets, compactEvery)
     }
     spark.read.parquet(s"$workDir/out")
       .select(col("doc_id"), col("n_tok"), col("n_dup_spans"),
@@ -77,7 +83,7 @@ object SpanDedupStream {
                                   batchId: Long, workDir: String, w: Int,
                                   nBuckets: Int,
                                   compactEvery: Int): Unit = {
-    val storeDir = s"$workDir/gram_store"
+    val storeDir = SpanDedupStream.storeDir(workDir)
     val outDir = s"$workDir/out"
     val bucketOf = pmod(col("pack"), lit(nBuckets.toLong)).cast("int")
     // three consumers scan the batch (bucket list, dedup, delta):
@@ -93,10 +99,6 @@ object SpanDedupStream {
     // driver-side list, not data. Cost-based: below the size
     // threshold a full scan beats paying an extra job for the list.
     val big = !MicroBatchFold.below(spark, storeDir)
-    // below the switch, plan the whole batch with narrow shuffles and
-    // AQE off — micro-batch data never needs runtime re-planning, and
-    // each AQE exchange materialization is a whole extra job
-    MicroBatchFold.scoped(spark, batch0, narrow = !big) {
     val store = graft.pipeline.Load
       .readStoreExcludingBatch(spark, storeDir, batchId)
       .map { s =>
@@ -136,7 +138,6 @@ object SpanDedupStream {
     done()
     batch.unpersist()
     ()
-    }
   }
 
   /** Stage + run in a fresh work dir: the q101 entry. */

@@ -42,14 +42,17 @@ object UrlFrontierStream {
     StructField("pack2", LongType)))
   private val PackBase = graft.functions.ShingleKernel.PackBase
   private val PackKeys = Seq("pack", "pack2")
+  private def storeDir(workDir: String): String = s"$workDir/url_store"
 
   /** Run the staged splits to completion and return the folded per-host
     * frame, schema-identical to q177's output.
     */
   def run(spark: SparkSession, inputDir: String, workDir: String,
           nBuckets: Int = 16, compactEvery: Int = 8): DataFrame = {
-    MicroBatchFold.run(spark, inputDir, workDir) { (batch, batchId) =>
-      processBatch(spark, batch, batchId, workDir, nBuckets, compactEvery)
+    MicroBatchFold.run(spark, inputDir, workDir,
+        narrow = () => MicroBatchFold.below(spark, storeDir(workDir))) {
+      (batch, batchId) => processBatch(batch.sparkSession, batch, batchId,
+        workDir, nBuckets, compactEvery)
     }
     spark.read.parquet(s"$workDir/partials")
       .groupBy(col("host"))
@@ -66,7 +69,7 @@ object UrlFrontierStream {
   private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
                                   batchId: Long, workDir: String,
                                   nBuckets: Int, compactEvery: Int): Unit = {
-    val storeDir = s"$workDir/url_store"
+    val storeDir = UrlFrontierStream.storeDir(workDir)
     val partsDir = s"$workDir/partials"
     val bucketOf = pmod(col("pack"), lit(nBuckets.toLong)).cast("int")
     val (host, canon) = CurationOps.canonParts(col("u"))
@@ -83,56 +86,54 @@ object UrlFrontierStream {
         polyHash(col("canon"), 53) * lit(PackBase) + polyHash(col("canon"), 97))
       .cache()
     val big = !MicroBatchFold.below(spark, storeDir)
-    MicroBatchFold.scoped(spark, batch, narrow = !big) {
-      val store = graft.pipeline.Load
-        .readStoreExcludingBatch(spark, storeDir, batchId)
-        .map { s =>
-          val pruned = if (!big) s else {
-            val batchBuckets = withPacks.select(bucketOf.as("bucket"))
-              .distinct().collect().map(_.getInt(0)).toSeq
-            graft.pipeline.Load.pruneBuckets(s, batchBuckets, nBuckets)
-          }
-          pruned.select(PackKeys.map(col): _*)
+    val store = graft.pipeline.Load
+      .readStoreExcludingBatch(spark, storeDir, batchId)
+      .map { s =>
+        val pruned = if (!big) s else {
+          val batchBuckets = withPacks.select(bucketOf.as("bucket"))
+            .distinct().collect().map(_.getInt(0)).toSeq
+          graft.pipeline.Load.pruneBuckets(s, batchBuckets, nBuckets)
         }
-        .getOrElse(spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), packSchema))
-      // accepted = first-ever sighting: batch-distinct, then store probe
-      val accepted = withPacks
-        .select(col("host"), col("canon"), col("pack"), col("pack2"))
-        .distinct()
-        .join(store, PackKeys, "left_anti")
-        .cache()
-      val rawCounts = withPacks.groupBy(col("host"))
-        .agg(count(lit(1)).as("n_raw"))
-      val newCounts = accepted.groupBy(col("host"))
-        .agg(count(lit(1)).as("n_new"),
-             sum(polyHash(col("canon"))).as("hashsum_new"))
-      // per-host partial and store delta are independent batch-keyed
-      // Overwrite partials sharing the cached `withPacks`/`accepted` —
-      // overlap them on a driver pool (Sinks.inParallel, guide §2.6)
-      Sinks.inParallel(spark, Seq(
-        s"b$batchId: host partial write" -> (() =>
-          graft.pipeline.Load.writeBatchPartial(
-            rawCounts.join(newCounts, Seq("host"), "left")
-              .select(col("host"), col("n_raw"),
-                coalesce(col("n_new"), lit(0L)).as("n_new"),
-                coalesce(col("hashsum_new"), lit(0L)).as("hashsum_new"))
-              .coalesce(1),
-            partsDir, batchId)),
-        s"b$batchId: url store write" -> (() =>
-          graft.pipeline.Load.writeBatchPartial(
-            accepted.select(PackKeys.map(col): _*)
-              .withColumn("bucket", bucketOf)
-              .repartition(col("bucket")),
-            storeDir, batchId, Seq("bucket")))))
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-          (big || graft.pipeline.Load.storeFileCount(spark, storeDir) >
-            4 * nBuckets))
-        graft.pipeline.Load.consolidateBatchStore(spark, storeDir, batchId)
-      accepted.unpersist()
-      withPacks.unpersist()
-      ()
-    }
+        pruned.select(PackKeys.map(col): _*)
+      }
+      .getOrElse(spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), packSchema))
+    // accepted = first-ever sighting: batch-distinct, then store probe
+    val accepted = withPacks
+      .select(col("host"), col("canon"), col("pack"), col("pack2"))
+      .distinct()
+      .join(store, PackKeys, "left_anti")
+      .cache()
+    val rawCounts = withPacks.groupBy(col("host"))
+      .agg(count(lit(1)).as("n_raw"))
+    val newCounts = accepted.groupBy(col("host"))
+      .agg(count(lit(1)).as("n_new"),
+           sum(polyHash(col("canon"))).as("hashsum_new"))
+    // per-host partial and store delta are independent batch-keyed
+    // Overwrite partials sharing the cached `withPacks`/`accepted` —
+    // overlap them on a driver pool (Sinks.inParallel, guide §2.6)
+    Sinks.inParallel(spark, Seq(
+      s"b$batchId: host partial write" -> (() =>
+        graft.pipeline.Load.writeBatchPartial(
+          rawCounts.join(newCounts, Seq("host"), "left")
+            .select(col("host"), col("n_raw"),
+              coalesce(col("n_new"), lit(0L)).as("n_new"),
+              coalesce(col("hashsum_new"), lit(0L)).as("hashsum_new"))
+            .coalesce(1),
+          partsDir, batchId)),
+      s"b$batchId: url store write" -> (() =>
+        graft.pipeline.Load.writeBatchPartial(
+          accepted.select(PackKeys.map(col): _*)
+            .withColumn("bucket", bucketOf)
+            .repartition(col("bucket")),
+          storeDir, batchId, Seq("bucket")))))
+    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
+        (big || graft.pipeline.Load.storeFileCount(spark, storeDir) >
+          4 * nBuckets))
+      graft.pipeline.Load.consolidateBatchStore(spark, storeDir, batchId)
+    accepted.unpersist()
+    withPacks.unpersist()
+    ()
   }
 
   /** Stage + run in a fresh work dir: the q179 entry. */

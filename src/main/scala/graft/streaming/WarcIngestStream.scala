@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession
 import graft.functions.PolyHash.polyHash
 import graft.ops.{HtmlExtract, Warc}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -62,39 +63,39 @@ object WarcIngestStream {
     // default sizing: 4096 rows/batch × ~1 MB segments tries to reserve
     // a multi-GB contiguous byte vector (measured OOM at the sf100
     // rung). 32 × ~1 MB ≈ 32 MB per batch — the right order for any
-    // row size this source stages.
-    BatchTuning.withConf(spark,
-        "spark.sql.parquet.columnarReaderBatchSize" -> "32") {
-      MicroBatchFold.runInputGated(spark, inputDir, workDir) { (batch, batchId) =>
-        val recs = batch
-          .select(Warc.warcParseLenient(col("seg")).as("st"))
-          .select(explode(col("st.records")).as("r"))
-          .select(
-            regexp_extract(col("r.uri"),
-              "\\.com/([A-Za-z0-9]+)/doc/", 1).as("lang"),
-            col("r.content_length").as("clen"),
-            HtmlExtract.htmlMainStats(col("r.payload").cast("string"))
-              .as("hs"))
-        graft.pipeline.Load.writeBatchPartial(
-          recs.groupBy(col("lang")).agg(
-            count(lit(1)).as("n_docs"),
-            sum(col("clen")).as("sum_clen"),
-            sum(col("hs.n_kept")).as("n_kept"),
-            sum(col("hs.kept_chars")).as("kept_chars"),
-            sum(polyHash(coalesce(col("hs.main_text"), lit(""))))
-              .as("text_hashsum"))
-            .coalesce(1),
-          partsDir, batchId)
-      }
-      spark.read.parquet(partsDir)
-        .groupBy(col("lang"))
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("sum_clen")).as("sum_clen"),
-          sum(col("n_kept")).as("n_kept"),
-          sum(col("kept_chars")).as("kept_chars"),
-          sum(col("text_hashsum")).as("text_hashsum"))
-        .orderBy(col("lang"))
+    // row size this source stages. The stream runs on a fork with it
+    // set; the fold reads the tiny partials on the caller's session.
+    val fs = GraftSession.fork(spark,
+      "spark.sql.parquet.columnarReaderBatchSize" -> "32")
+    MicroBatchFold.runInputGated(fs, inputDir, workDir) { (batch, batchId) =>
+      val recs = batch
+        .select(Warc.warcParseLenient(col("seg")).as("st"))
+        .select(explode(col("st.records")).as("r"))
+        .select(
+          regexp_extract(col("r.uri"),
+            "\\.com/([A-Za-z0-9]+)/doc/", 1).as("lang"),
+          col("r.content_length").as("clen"),
+          HtmlExtract.htmlMainStats(col("r.payload").cast("string"))
+            .as("hs"))
+      graft.pipeline.Load.writeBatchPartial(
+        recs.groupBy(col("lang")).agg(
+          count(lit(1)).as("n_docs"),
+          sum(col("clen")).as("sum_clen"),
+          sum(col("hs.n_kept")).as("n_kept"),
+          sum(col("hs.kept_chars")).as("kept_chars"),
+          sum(polyHash(coalesce(col("hs.main_text"), lit(""))))
+            .as("text_hashsum"))
+          .coalesce(1),
+        partsDir, batchId)
     }
+    spark.read.parquet(partsDir)
+      .groupBy(col("lang"))
+      .agg(sum(col("n_docs")).as("n_docs"),
+        sum(col("sum_clen")).as("sum_clen"),
+        sum(col("n_kept")).as("n_kept"),
+        sum(col("kept_chars")).as("kept_chars"),
+        sum(col("text_hashsum")).as("text_hashsum"))
+      .orderBy(col("lang"))
   }
 
   /** Build segments, stage them as timed arrivals, run: the q182 entry.

@@ -226,10 +226,12 @@ class DriverFoldSpec extends SparkSpec {
     // empty corpus: learnMerges folds to zero merges; the curve declines
     check(Seq.empty[String].toDF("w"), folds = false, "empty")
     check(Seq("ab", "", "ab").toDF("w"), folds = false, "empty word")
-    // (no pair to merge: the distributed merge map cannot take a null
-    // word's symbol list)
+    // a null word contributes nothing to training, also once a merge
+    // applies; the curve declines it
     check(frame("w STRING", Seq(Row("a"), Row(null), Row("b"))),
       folds = false, "null word")
+    check(frame("w STRING", Seq(Row("ab"), Row(null), Row("ba"))),
+      folds = false, "null word, merges apply")
   }
 
   // ---- MMR --------------------------------------------------------------

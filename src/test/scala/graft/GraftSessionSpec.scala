@@ -1,8 +1,16 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
 /** The one session factory: SPARK_GRAFT_CPUS parses to a positive core
-  * count or fails naming the variable, and the suite's shared session
-  * is the factory's (its settings and its SQL functions).
+  * count or fails naming the variable, the suite's shared session is
+  * the factory's (its settings and its SQL functions), a fork starts
+  * from its caller and never reaches back, and the log policy drops
+  * only the known-benign DAGScheduler warning.
   */
 class GraftSessionSpec extends SparkSpec {
 
@@ -27,5 +35,78 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(spark.sql("SELECT squared_norm(array(3D, 4D)) AS n")
       .collect()(0).getDouble(0) == 25.0)
+  }
+
+  test("fork: starts from the caller's conf, views and functions; nothing on it reaches back") {
+    spark.conf.set("spark.graft.test.forkKey", "caller")
+    spark.range(3).createOrReplaceTempView("graft_fork_caller_view")
+    try {
+      val fork = GraftSession.fork(spark, "spark.sql.shuffle.partitions" -> "3")
+      assert(!(fork eq spark))
+      assert(fork.conf.get("spark.sql.shuffle.partitions") == "3")
+      assert(fork.conf.get("spark.graft.test.forkKey") == "caller")
+      assert(fork.table("graft_fork_caller_view").count() == 3)
+      assert(fork.sql("SELECT squared_norm(array(3D, 4D))")
+        .collect()(0).getDouble(0) == 25.0)
+      fork.conf.set("spark.graft.test.forkKey", "fork")
+      fork.range(2).createOrReplaceTempView("graft_fork_own_view")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") != "3")
+      assert(spark.conf.get("spark.graft.test.forkKey") == "caller")
+      assert(!spark.catalog.tableExists("graft_fork_own_view"))
+    } finally {
+      spark.conf.unset("spark.graft.test.forkKey")
+      spark.catalog.dropTempView("graft_fork_caller_view")
+    }
+  }
+
+  test("fork: a stream started on a fork reports to the caller's streaming listeners") {
+    val progress = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        progress.incrementAndGet(); ()
+      }
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val fork = GraftSession.fork(spark)
+      val dir = java.nio.file.Files.createTempDirectory("graft_fork_stream")
+      fork.range(5).write.mode("overwrite").parquet(s"$dir/in")
+      val q = fork.readStream.schema(fork.read.parquet(s"$dir/in").schema)
+        .parquet(s"$dir/in").writeStream.format("noop")
+        .option("checkpointLocation", s"$dir/ckpt").start()
+      try q.processAllAvailable() finally q.stop()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (progress.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(progress.get() > 0, "the caller's listener saw no progress of the fork's stream")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("log policy: DAGScheduler drops the idle job-group-cancel WARN and keeps its others") {
+    val dag = "org.apache.spark.scheduler.DAGScheduler"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-test-dag", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        seen.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val config = ctx.getConfiguration.getLoggerConfig(dag)
+    assert(config.getName == dag)
+    config.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    try {
+      val log = LogManager.getLogger(dag)
+      log.warn("Failed to cancel job group 5f1c. Cannot find active jobs for it.")
+      log.warn("Broadcasting large task binary with size 1024.0 KiB")
+      assert(seen.toArray.toSeq ==
+        Seq("Broadcasting large task binary with size 1024.0 KiB"))
+    } finally {
+      config.removeAppender(appender.getName)
+      ctx.updateLoggers()
+    }
   }
 }

@@ -1,68 +1,87 @@
 package graft
 
-import java.sql.DriverManager
-
 import graft.queries.Registry
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 
-/** Round-10 verdict #3: the fact-scaled shuffle width for graph builds
-  * must not leak into plans the SAME SparkSession compiles concurrently
-  * — the BI endpoint plans thrift clients' queries on it. The engine
-  * now runs widened graph builds on a `newSession()` (own SQLConf,
-  * shared context/catalog); this spec forces the wide path on fixture
-  * data (`spark.graft.graph.minShuffleWidth`), drives a live thrift
-  * client DURING the build, and asserts (a) the caller session's
-  * shuffle width never moves, (b) the client's wire results equal
-  * direct evaluation, and (c) the wide-path q130 answer is
-  * bit-identical to the narrow-path answer.
+/** A row that plans with its own conf must not move the conf of the
+  * session it was called on: the BI endpoint plans thrift clients'
+  * queries on that same session. The engine plans every such scope on a
+  * [[GraftSession.fork]]. For each row in the table below, the row runs
+  * on the shared `spark` in a thread while the main thread (a) probes
+  * `spark.conf` for the shuffle width and AQE, which must stay at their
+  * base values, and (b) drives a live thrift client, whose wire results
+  * must equal direct evaluation. The concurrent answer must equal the
+  * row's answer computed alone. The rows:
+  *   - q130 with the graph build forced onto its wide path
+  *     (`spark.graft.graph.minShuffleWidth`): a fact-scaled width fork
+  *     with columnar edge cache and parquet staging;
+  *   - q111, a width-8 stream row whose batches are store-gated;
+  *   - q129, a width-8 stream row whose batches plan narrow (AQE off,
+  *     width 4) below the cost switch.
   */
 class GraphIsolationSpec extends SparkSpec {
 
-  private def rows(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+  private val Width = "spark.sql.shuffle.partitions"
+  private val Aqe = "spark.sql.adaptive.enabled"
 
-  test("forced-wide graph build leaves a concurrent thrift client's session untouched") {
-    val narrow = rows(Registry.byName("q130_pagerank").run(spark, sfDir))
-    assert(narrow.nonEmpty)
-    val baseWidth = spark.conf.get("spark.sql.shuffle.partitions")
+  private def answer(q: String): Seq[Row] =
+    Registry.byName(q).run(spark, sfDir).collect().toSeq
+
+  /** Run `q` in a thread while probing the shared session and a thrift
+    * client; the concurrent answer must equal `expected`.
+    */
+  private def isolated(q: String, expected: Seq[Row]): Unit = {
+    assert(expected.nonEmpty)
+    val base = (spark.conf.get(Width), spark.conf.get(Aqe))
+    val direct = Tables.orders(spark, sfDir).count()
     SharedEndpoint.port // the JVM's one thrift endpoint (see its doc)
-    spark.conf.set("spark.graft.graph.minShuffleWidth", "48")
+    val out = new java.util.concurrent.atomic.AtomicReference[Seq[Row]]()
+    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val build = new Thread(() => {
+      try out.set(answer(q))
+      catch { case t: Throwable => err.set(t) }
+    })
+    build.start()
     try {
-      // the graph build in flight on its own thread (wide path:
-      // newSession at width 48, columnar edge cache, parquet staging)
-      val wideOut = new java.util.concurrent.atomic.AtomicReference[Seq[(Long, String, Long)]]()
-      val buildErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      val build = new Thread(() => {
-        try wideOut.set(rows(Registry.byName("q130_pagerank").run(spark, sfDir)))
-        catch { case t: Throwable => buildErr.set(t) }
-      })
-      build.start()
-
-      // a REAL external client during the build: wire counts must match
-      // direct evaluation, and the serving session's width must never
-      // move off its configured value while the wide build runs
       val conn = SharedEndpoint.connect()
       try {
         val st = conn.createStatement()
         var probes = 0
-        while (build.isAlive && probes < 200) {
+        while (build.isAlive && probes < 2000) {
+          assert((spark.conf.get(Width), spark.conf.get(Aqe)) == base,
+            s"$q leaked its shuffle width or AQE setting into the shared session")
           val rs = st.executeQuery(
             "SELECT count(*) AS n FROM global_temp.orders")
-          assert(rs.next() &&
-            rs.getLong("n") == Tables.orders(spark, sfDir).count())
-          assert(spark.conf.get("spark.sql.shuffle.partitions") == baseWidth,
-            "graph build leaked its widened shuffle conf into the shared session")
+          assert(rs.next() && rs.getLong("n") == direct)
           probes += 1
         }
         assert(probes > 0)
       } finally conn.close()
-      build.join(300000)
-      assert(!build.isAlive, "graph build did not finish")
-      assert(buildErr.get() == null, s"wide build failed: ${buildErr.get()}")
-      // same answer on both paths: the width/caching/staging regime is
-      // physical only
-      assert(wideOut.get() == narrow)
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == baseWidth)
-    } finally spark.conf.unset("spark.graft.graph.minShuffleWidth")
+    } finally build.join(300000)
+    assert(!build.isAlive, s"$q did not finish")
+    assert(err.get() == null, s"$q failed: ${err.get()}")
+    assert(out.get() == expected)
+    assert((spark.conf.get(Width), spark.conf.get(Aqe)) == base)
+  }
+
+  /** (test name, row, the session conf the row runs under) */
+  private val table = Seq(
+    ("forced-wide graph build leaves a concurrent thrift client's session untouched",
+      "q130_pagerank", Some("spark.graft.graph.minShuffleWidth" -> "48")),
+    ("q111 width-8 stream leaves the shared session untouched",
+      "q111_ivf_stream", None),
+    ("q129 narrow-batch stream leaves the shared session untouched",
+      "q129_minhash_dedup_stream", None))
+
+  table.foreach { case (name, q, forced) =>
+    test(name) {
+      // the row's answer alone; q130's is its narrow path, which must
+      // equal the wide one (the width/caching/staging regime is
+      // physical only)
+      val expected = answer(q)
+      forced.foreach { case (k, v) => spark.conf.set(k, v) }
+      try isolated(q, expected)
+      finally forced.foreach { case (k, _) => spark.conf.unset(k) }
+    }
   }
 }

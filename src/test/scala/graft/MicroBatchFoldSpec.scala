@@ -7,11 +7,10 @@ import org.apache.spark.sql.graftbridge.TempDirBridge
 import org.apache.spark.sql.streaming.StreamingQueryException
 
 /** The micro-batch harness every file-per-trigger stream runs on: the
-  * cost switch's narrow scope reaches both sessions a foreachBatch body
-  * plans with and is undone after the drain (also when the body
-  * throws), staged splits replay one per batch in doc_id-range order,
-  * an empty corpus still drains as one empty batch, and a staged work
-  * dir is deleted at JVM exit.
+  * cost switch is set afresh on each batch's own clone and never on the
+  * caller's session (also when the body throws), staged splits replay
+  * one per batch in doc_id-range order, an empty corpus still drains as
+  * one empty batch, and a staged work dir is deleted at JVM exit.
   */
 class MicroBatchFoldSpec extends SparkSpec {
 
@@ -31,37 +30,38 @@ class MicroBatchFoldSpec extends SparkSpec {
   private def conf(s: SparkSession): (String, String) =
     (s.conf.get(Aqe), s.conf.get(Width))
 
-  test("under the switch a batch plans narrow on the outer and batch sessions; both restored, also on a throw") {
+  test("under the switch only the batch's own clone plans narrow") {
     val work = stage("mbf_narrow", ids(40), nSplits = 2)
     val input = s"$work/input"
     assert(MicroBatchFold.below(spark, input))
     val outer0 = conf(spark)
-    // control: an unscoped drain shows what a batch clone plans with
-    var clone0: (String, String) = null
-    MicroBatchFold.run(spark, input, s"$work/control") { (batch, _) =>
-      clone0 = conf(batch.sparkSession)
-    }
-    assert(clone0._2 == outer0._2)
 
     // (batch session, outer conf, batch conf) as each batch saw them
-    val seen = scala.collection.mutable.ArrayBuffer
-      .empty[(SparkSession, (String, String), (String, String))]
-    MicroBatchFold.runInputGated(spark, input, s"$work/gated") { (batch, _) =>
-      seen += ((batch.sparkSession, conf(spark), conf(batch.sparkSession)))
+    def drain(tag: String, narrow: () => Boolean) = {
+      val seen = scala.collection.mutable.ArrayBuffer
+        .empty[(SparkSession, (String, String), (String, String))]
+      MicroBatchFold.run(spark, input, s"$work/$tag", narrow) { (batch, _) =>
+        seen += ((batch.sparkSession, conf(spark), conf(batch.sparkSession)))
+      }
+      assert(seen.size == 2)
+      seen.foreach { case (clone, outer, _) =>
+        assert(!(clone eq spark), "foreachBatch should hand the body a cloned session")
+        assert(outer == outer0)
+      }
+      seen.map(_._3).toSeq
     }
-    assert(seen.size == 2)
-    seen.foreach { case (clone, outer, inBatch) =>
-      assert(!(clone eq spark), "foreachBatch should hand the body a cloned session")
-      assert(outer == ("false", "4"))
-      assert(inBatch == ("false", "4"))
-    }
+    assert(drain("wide", () => false) == Seq(outer0, outer0))
+    val small = () => MicroBatchFold.below(spark, input)
+    assert(drain("gated", small) == Seq(("false", "4"), ("false", "4")))
+    // each batch sets the switch afresh: a wide batch after a narrow
+    // one plans with the values the stream started with
+    var first = true
+    assert(drain("flip", () => { val n = first; first = false; n }) ==
+      Seq(("false", "4"), outer0))
     assert(conf(spark) == outer0)
-    seen.foreach { case (clone, _, _) => assert(conf(clone) == clone0) }
 
-    var thrower: SparkSession = null
     val e = intercept[StreamingQueryException](
       MicroBatchFold.runInputGated(spark, input, s"$work/throws") { (batch, _) =>
-        thrower = batch.sparkSession
         assert(conf(batch.sparkSession) == ("false", "4"))
         throw new IllegalStateException("body failed mid-batch")
       })
@@ -69,7 +69,6 @@ class MicroBatchFoldSpec extends SparkSpec {
       .exists(t => Option(t.getMessage).exists(_.contains("body failed mid-batch"))),
       s"query died for the wrong reason: $e")
     assert(conf(spark) == outer0)
-    assert(conf(thrower) == clone0)
   }
 
   test("staged splits arrive one per batch in doc_id-range order (batch i reads split i)") {
@@ -78,7 +77,7 @@ class MicroBatchFoldSpec extends SparkSpec {
       .filter(_.endsWith(".parquet")).sorted.toSeq
     assert(staged == (0 until 4).map(i => f"split_$i%03d.parquet"))
     val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-    MicroBatchFold.run(spark, s"$work/input", work) { (batch, batchId) =>
+    MicroBatchFold.run(spark, s"$work/input", work, () => false) { (batch, batchId) =>
       batches += ((batchId,
         batch.select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq))
     }
@@ -94,7 +93,7 @@ class MicroBatchFoldSpec extends SparkSpec {
       .filterNot(_.startsWith(".")).toSeq
     assert(staged == Seq("split_000.parquet"))
     val counts = scala.collection.mutable.ArrayBuffer.empty[Long]
-    MicroBatchFold.run(spark, s"$work/input", work) { (batch, _) =>
+    MicroBatchFold.run(spark, s"$work/input", work, () => false) { (batch, _) =>
       counts += batch.count()
     }
     assert(counts == Seq(0L))

@@ -20,16 +20,32 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="$(mktemp -d /tmp/presnapshot.XXXXXX)"
 trap 'rm -rf "$OUT_DIR"' EXIT
 
-echo "[presnapshot] 1/5 sbt compile"
+echo "[presnapshot] 1/6 session conf is set only through GraftSession"
+# A conf.set on a session that other code plans on leaks into its
+# concurrent queries (the SQL endpoint plans client queries on the
+# engine's session). Plan with a different conf on GraftSession.fork.
+# Allowed: GraftSession, the Spark bridge, and the constant nanos read
+# setting of Tables.load and EventStreams.readEventStream.
+conf_sets="$(grep -rnE 'conf\.(un)?set\(' src/main --include='*.scala' \
+  | grep -vE '^src/main/scala/(graft/GraftSession|org/apache/spark/sql/graftbridge/[A-Za-z]+)\.scala:' \
+  | grep -vE '^src/main/scala/graft/(Tables|streaming/EventStreams)\.scala:[0-9]+: *spark\.conf\.set\("spark\.sql\.legacy\.parquet\.nanosAsLong", "true"\)$' \
+  || true)"
+if [ -n "$conf_sets" ]; then
+  echo "$conf_sets"
+  echo "[presnapshot] SESSION CONF SET OUTSIDE GraftSession: plan on GraftSession.fork"
+  exit 1
+fi
+
+echo "[presnapshot] 2/6 sbt compile"
 sbt -batch compile > "$OUT_DIR/compile.log" 2>&1 || {
   tail -30 "$OUT_DIR/compile.log"; echo "[presnapshot] COMPILE FAILED"; exit 1; }
 
-echo "[presnapshot] 2/5 graft.Verify @ $SF_DIR"
+echo "[presnapshot] 3/6 graft.Verify @ $SF_DIR"
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR/verify" \
   > "$OUT_DIR/verify.log" 2>&1 || {
   tail -30 "$OUT_DIR/verify.log"; echo "[presnapshot] VERIFY FAILED"; exit 1; }
 
-echo "[presnapshot] 3/5 gate completeness (round-6 post-mortem: a broken"
+echo "[presnapshot] 4/6 gate completeness (round-6 post-mortem: a broken"
 echo "              query must FAIL the gate, not silently shrink it)"
 python3 - "$OUT_DIR/verify" <<'EOF'
 import json, os, sys
@@ -50,10 +66,10 @@ if missing:
 print(f"[presnapshot] {len(dumped)} queries dumped, 0 errors")
 EOF
 
-echo "[presnapshot] 4/5 DuckDB oracle selfcheck"
+echo "[presnapshot] 5/6 DuckDB oracle selfcheck"
 python3 tools/selfcheck.py "$SF_DIR" "$OUT_DIR/verify" | tail -5
 
-echo "[presnapshot] 5/5 sbt test (full suite — driver bar is exit 0)"
+echo "[presnapshot] 6/6 sbt test (full suite — must exit 0)"
 sbt -batch test > "$OUT_DIR/test.log" 2>&1 || {
   grep -E "TESTS FAILED|\*\*\* FAILED|Error" "$OUT_DIR/test.log" | tail -20
   echo "[presnapshot] SBT TEST FAILED"; exit 1; }
