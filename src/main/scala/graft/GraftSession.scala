@@ -64,8 +64,9 @@ object GraftSession {
 
   def start(app: String): SparkSession = start(builder(app, cpus))
 
-  /** Build `b` and apply the one log policy: WARN, with known-benign
-    * warnings raised to ERROR so they cannot bury real signals:
+  /** Build `b`, [[shareCompiledCode]] on it and apply the one log
+    * policy: WARN, with known-benign warnings raised to ERROR so they
+    * cannot bury real signals:
     *   - org.apache.spark.rdd: released rank/edge snapshots warn about
     *     truncated lineage on every unpersist (retired checkpoints are
     *     never re-read);
@@ -80,6 +81,7 @@ object GraftSession {
     */
   def start(b: SparkSession.Builder): SparkSession = {
     val spark = b.getOrCreate()
+    shareCompiledCode(spark)
     spark.sparkContext.setLogLevel("WARN")
     Seq("org.apache.spark.rdd",
       "org.apache.spark.sql.execution.window.WindowExec",
@@ -93,6 +95,24 @@ object GraftSession {
       "Failed to cancel job group .*\\. Cannot find active jobs for it\\.",
       Array.empty[String], false, Filter.Result.DENY, Filter.Result.NEUTRAL))
     spark
+  }
+
+  /** One executor class loader for every session of `spark`'s
+    * application. Spark 4.1 gives each session its own loader
+    * (`spark.sql.artifact.isolation.enabled`, default true) and caches
+    * compiled code per (loader, source), so each fork, each stream's
+    * batch clone and each thrift connection would compile again every
+    * whole-stage class another session had already compiled. Turned off
+    * on `spark`, whose forks, clones and stream batch clones inherit
+    * its runtime conf, and on its shared state's conf, which seeds
+    * every session `newSession()` makes later (the thrift server's per
+    * connection). Sessions still keep their own conf and temp views;
+    * what they share is compiled code and added artifacts (`ADD JAR`).
+    */
+  def shareCompiledCode(spark: SparkSession): Unit = {
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    spark.conf.set(isolation, "false")
+    SessionBridge.seedNewSessions(spark, isolation, "false")
   }
 
   /** A clone of `spark` with `kvs` set: the caller's runtime conf, temp
@@ -109,8 +129,8 @@ object GraftSession {
   }
 
   /** `df` as a frame of `spark`: a fork's result handed back to its
-    * caller, so its lazy tail plans with the caller's conf and runs the
-    * code the caller already compiled (each session compiles its own).
+    * caller, so its lazy tail plans with the caller's conf, not the
+    * fork's.
     */
   def on(spark: SparkSession, df: DataFrame): DataFrame =
     DatasetBridge.ofRows(spark, DatasetBridge.analyzed(df))

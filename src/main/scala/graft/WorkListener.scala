@@ -88,3 +88,15 @@ private[graft] object WorkListener {
       true
     } catch { case _: java.util.concurrent.TimeoutException => false }
 }
+
+/** The JVM's codegen compiles so far: their count (CodegenMetrics'
+  * compilation-time histogram, one sample per janino compile, i.e. per
+  * codegen cache miss) and their summed compile time in ms
+  * (CodeGenerator's own accumulator, exact where the histogram keeps
+  * only a sample). Deltas around a query attribute its compiles.
+  */
+private[graft] object Compiles {
+  def now(): (Long, Double) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6)
+}

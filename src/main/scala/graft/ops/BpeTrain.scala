@@ -274,12 +274,13 @@ object BpeTrain {
     * fold is O(merges·len) per word type and the type table is
     * Zipf-bounded). Powers q159's vocab-size/compression curve, where
     * each rung reads the corpus-piece and distinct-symbol counts off
-    * this table.
+    * this table. A null word contributes nothing, as in training.
     */
   def wordTypes(s: SparkSession, words: DataFrame,
                 merges: Seq[(String, String)]): DataFrame = {
     import s.implicits._
-    words.groupBy(col("w")).agg(count(lit(1)).as("freq"))
+    words.where(col("w").isNotNull)
+      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(col("w").as("word"), col("freq"),
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
           .as("syms"))

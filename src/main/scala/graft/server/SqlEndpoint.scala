@@ -1,6 +1,6 @@
 package graft.server
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.pipeline.{Extract, Transform}
 import graft.queries.PipelineOps
 import org.apache.spark.sql.SparkSession
@@ -19,6 +19,14 @@ import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
   * them costs nothing until a client selects from them, and each select
   * re-plans against the current data (filter pushdown and column pruning
   * reach the parquet scans exactly as in the batch paths).
+  *
+  * Connections share compiled code, not conf: [[start]] puts every
+  * session of the application on one executor class loader
+  * ([[GraftSession.shareCompiledCode]]), so a statement one
+  * connection has run compiles no whole-stage code when another runs
+  * it, while each connection keeps its own conf and temp views. A jar
+  * one client adds (`ADD JAR`) is visible to all, as it is under
+  * SqlServerMain's singleSession; the engine itself adds none.
   *
   * Launch: `sbt "runMain graft.SqlServerMain <sfDir> [port]"` (default
   * port 10000), then connect any HiveServer2 client to
@@ -91,7 +99,8 @@ object SqlEndpoint {
     graft.SparkEntry.queries.keys
       .filter(_.matches("q(0[1-9]|1[0-9]|2[0-7])_.*")).toSeq.sorted
 
-  /** Register the views and start the HiveServer2 endpoint on `port`.
+  /** Share compiled code across sessions, register the views and start
+    * the HiveServer2 endpoint on `port`.
     * Returns the server handle (call `.stop()` to shut down; typed as
     * the public hive superclass — Spark's subclass is package-private).
     * The port and bind host go through the session's hadoop conf — that
@@ -100,6 +109,7 @@ object SqlEndpoint {
     */
   def start(spark: SparkSession, sfDir: String,
             port: Int = 10000): HiveServer2 = {
+    GraftSession.shareCompiledCode(spark)
     registerViews(spark, sfDir)
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("hive.server2.thrift.port", port.toString)

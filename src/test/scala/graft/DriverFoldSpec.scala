@@ -230,8 +230,14 @@ class DriverFoldSpec extends SparkSpec {
     // applies; the curve declines it
     check(frame("w STRING", Seq(Row("a"), Row(null), Row("b"))),
       folds = false, "null word")
-    check(frame("w STRING", Seq(Row("ab"), Row(null), Row("ba"))),
-      folds = false, "null word, merges apply")
+    val nullWord = frame("w STRING", Seq(Row("ab"), Row(null), Row("ba")))
+    check(nullWord, folds = false, "null word, merges apply")
+    // the q159 curve falls through to the distributed rungs, where the
+    // null word contributes nothing too
+    val rungs = Seq(0, 2, 5)
+    assertSame(BpeTrain.curveDistributed(spark, nullWord, k = 5, rungs),
+      BpeTrain.curveFast(spark, nullWord.where(col("w").isNotNull), k = 5,
+        rungs).get, "null word, curve")
   }
 
   // ---- MMR --------------------------------------------------------------

@@ -4,15 +4,28 @@ import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** The one session factory: SPARK_GRAFT_CPUS parses to a positive core
   * count or fails naming the variable, the suite's shared session is
   * the factory's (its settings and its SQL functions), a fork starts
-  * from its caller and never reaches back, and the log policy drops
-  * only the known-benign DAGScheduler warning.
+  * from its caller and never reaches back, every session shares one
+  * executor class loader and so the code another session compiled, and
+  * the log policy drops only the known-benign DAGScheduler warning.
   */
 class GraftSessionSpec extends SparkSpec {
+
+  private val isolation = "spark.sql.artifact.isolation.enabled"
+
+  /** A statement of a few whole-stage classes that no other spec runs. */
+  private def statement(s: SparkSession): Unit = {
+    s.range(0, 2000, 1, 4).select((col("id") % 13).as("k"),
+        (col("id") * 7).as("v"))
+      .groupBy(col("k")).agg(sum(col("v")), max(col("v"))).collect()
+    ()
+  }
 
   test("SPARK_GRAFT_CPUS: unset means every processor, a positive integer is taken as is") {
     assert(GraftSession.parseCpus(None) ==
@@ -81,6 +94,33 @@ class GraftSessionSpec extends SparkSpec {
       while (progress.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
       assert(progress.get() > 0, "the caller's listener saw no progress of the fork's stream")
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("shared code: a fork and a stream's batch body re-run their caller's statement with 0 whole-stage compiles") {
+    val (_, first) = CodegenProbe.during(statement(spark))
+    assert(first.wholeStage > 0, first)
+    val (_, onFork) = CodegenProbe.during(statement(GraftSession.fork(spark)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_shared_code")
+    spark.range(1).write.parquet(s"$dir/in")
+    val inBatch = new java.util.concurrent.atomic.AtomicReference[CodegenProbe.Counts]()
+    val q = spark.readStream.schema(spark.read.parquet(s"$dir/in").schema)
+      .parquet(s"$dir/in").writeStream
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        inBatch.set(CodegenProbe.during(statement(b.sparkSession))._2)
+      }
+      .option("checkpointLocation", s"$dir/ckpt").start()
+    try q.processAllAvailable() finally q.stop()
+    info(s"compiles on the caller: $first, on a fork: $onFork, " +
+      s"in a batch body: ${inBatch.get}")
+    assert(onFork.wholeStage == 0, onFork)
+    assert(inBatch.get != null && inBatch.get.wholeStage == 0, inBatch.get)
+  }
+
+  test("shared code: sessions made after the SQL endpoint started report isolation off") {
+    SharedEndpoint.port
+    assert(spark.conf.get(isolation) == "false")
+    assert(spark.newSession().conf.get(isolation) == "false")
+    assert(GraftSession.fork(spark).conf.get(isolation) == "false")
   }
 
   test("log policy: DAGScheduler drops the idle job-group-cancel WARN and keeps its others") {

@@ -128,6 +128,26 @@ class SqlEndpointSpec extends SparkSpec {
     assert(pages.count(n => wireCounts.get(n) > 0) >= 25)
   }
 
+  test("connections share compiled code: what connection A ran compiles no whole-stage class when B runs it") {
+    val sql = "SELECT l_returnflag, count(*) AS n, max(l_quantity) AS top " +
+      "FROM global_temp.lineitem WHERE l_quantity > 17 GROUP BY l_returnflag"
+    def run(c: java.sql.Connection): List[(String, Long, String)] = {
+      val rs = c.createStatement().executeQuery(sql)
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => (r.getString(1), r.getLong(2), r.getString(3))).toList
+        .sorted
+    }
+    val (a, b) = (SharedEndpoint.connect(), SharedEndpoint.connect())
+    try {
+      val (onA, first) = CodegenProbe.during(run(a))
+      val (onB, second) = CodegenProbe.during(run(b))
+      info(s"compiles on A: $first, on B: $second")
+      assert(first.wholeStage > 0, first)
+      assert(second.wholeStage == 0, second)
+      assert(onA == onB && onA.nonEmpty)
+    } finally { a.close(); b.close() }
+  }
+
   test("soak: 4 clients × all dashboard pages + ad-hoc SQL, store-maintenance stream in flight") {
     // Round-10 verdict #6: Power BI issues BURSTS over several
     // connections. Four concurrent hive-jdbc clients each sweep all 27

@@ -20,7 +20,7 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="$(mktemp -d /tmp/presnapshot.XXXXXX)"
 trap 'rm -rf "$OUT_DIR"' EXIT
 
-echo "[presnapshot] 1/6 session conf is set only through GraftSession"
+echo "[presnapshot] 1/6 session conf and class-loader policy live only in GraftSession"
 # A conf.set on a session that other code plans on leaks into its
 # concurrent queries (the SQL endpoint plans client queries on the
 # engine's session). Plan with a different conf on GraftSession.fork.
@@ -33,6 +33,17 @@ conf_sets="$(grep -rnE 'conf\.(un)?set\(' src/main --include='*.scala' \
 if [ -n "$conf_sets" ]; then
   echo "$conf_sets"
   echo "[presnapshot] SESSION CONF SET OUTSIDE GraftSession: plan on GraftSession.fork"
+  exit 1
+fi
+# Every session shares one executor class loader, and so the code any
+# session compiled (GraftSession.shareCompiledCode); a second owner of
+# spark.sql.artifact.isolation.* could split them again.
+isolation="$(grep -rn 'artifact\.isolation' src/main \
+  | grep -vE '^src/main/scala/(graft/GraftSession|org/apache/spark/sql/graftbridge/[A-Za-z]+)\.scala:' \
+  || true)"
+if [ -n "$isolation" ]; then
+  echo "$isolation"
+  echo "[presnapshot] ARTIFACT ISOLATION OUTSIDE GraftSession: it owns the class-loader policy"
   exit 1
 fi
 
