@@ -5,7 +5,7 @@ import org.apache.logging.log4j.core.{Filter, LoggerContext}
 import org.apache.logging.log4j.core.config.Configurator
 import org.apache.logging.log4j.core.filter.RegexFilter
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftbridge.{DatasetBridge, SessionBridge}
+import org.apache.spark.sql.graftbridge.{DatasetBridge, ListenerBridge, SessionBridge}
 
 /** The one place a graft session is built. Every main and the test
   * suite take their session from here, so the settings the suite
@@ -126,6 +126,18 @@ object GraftSession {
     set(f, kvs: _*)
     spark.streams.listListeners().foreach(l => f.streams.addListener(l))
     f
+  }
+
+  /** `body` on a [[fork]] of `spark` that starts streams. Spark keeps
+    * the streaming listener bus of each session that started a stream on
+    * the SparkContext's listener bus for the life of the JVM, where every
+    * later event is dispatched to it; once `body` returns, and its
+    * streams have stopped, the fork's bus is taken off.
+    */
+  def streamingFork[A](spark: SparkSession, kvs: (String, String)*)
+                      (body: SparkSession => A): A = {
+    val f = fork(spark, kvs: _*)
+    try body(f) finally ListenerBridge.dropStreamingBus(f)
   }
 
   /** `df` as a frame of `spark`: a fork's result handed back to its

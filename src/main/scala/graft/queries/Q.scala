@@ -31,8 +31,8 @@ object Q {
     */
   def atWidth8(run: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = { (s, d) =>
-    val fork = GraftSession.fork(s, "spark.sql.shuffle.partitions" -> "8")
-    GraftSession.on(s, run(fork, d))
+    GraftSession.streamingFork(s, "spark.sql.shuffle.partitions" -> "8")(
+      fork => GraftSession.on(s, run(fork, d)))
   }
 }
 

@@ -2,8 +2,10 @@ package graft.server
 
 import graft.{GraftSession, Tables}
 import graft.pipeline.{Extract, Transform}
+import graft.plans.{GraftExtensions, SingleSplitPlans}
 import graft.queries.PipelineOps
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.functions._
 import org.apache.hive.service.server.HiveServer2
 import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
@@ -27,6 +29,14 @@ import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
   * it, while each connection keeps its own conf and temp views. A jar
   * one client adds (`ADD JAR`) is visible to all, as it is under
   * SqlServerMain's singleSession; the engine itself adds none.
+  *
+  * Statements plan for their size: one whose inputs together fit in
+  * one scan split (`spark.sql.files.maxPartitionBytes`) plans as one
+  * partition and runs as one job ([[SingleSplitPlans]]); its `EXPLAIN`
+  * shows `Coalesce 1` where a larger input gets an `Exchange`. Only
+  * the sessions the endpoint serves plan this way ([[servedSession]]):
+  * the session handed to [[start]], its forks and its streams keep
+  * their exchanges.
   *
   * Launch: `sbt "runMain graft.SqlServerMain <sfDir> [port]"` (default
   * port 10000), then connect any HiveServer2 client to
@@ -100,7 +110,8 @@ object SqlEndpoint {
       .filter(_.matches("q(0[1-9]|1[0-9]|2[0-7])_.*")).toSeq.sorted
 
   /** Share compiled code across sessions, register the views and start
-    * the HiveServer2 endpoint on `port`.
+    * the HiveServer2 endpoint on `port`, serving [[servedSession]] of
+    * `spark`.
     * Returns the server handle (call `.stop()` to shut down; typed as
     * the public hive superclass — Spark's subclass is package-private).
     * The port and bind host go through the session's hadoop conf — that
@@ -114,6 +125,22 @@ object SqlEndpoint {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("hive.server2.thrift.port", port.toString)
     hc.set("hive.server2.thrift.bind.host", "localhost")
-    HiveThriftServer2.startWithSparkSession(spark, exitOnError = false)
+    HiveThriftServer2.startWithSparkSession(servedSession(spark),
+      exitOnError = false)
+  }
+
+  /** The session the endpoint serves: a clone of `spark` (its conf,
+    * views and functions, on its SparkContext and shared state) with
+    * extensions of its own, [[GraftExtensions]] plus [[SingleSplitPlans]].
+    * The thrift server runs statements on it under singleSession and on
+    * its `newSession()` per connection otherwise, and both plan with
+    * those extensions. `spark`'s extensions are shared by every later
+    * clone of it, so the rule there would reach the engine's own plans.
+    */
+  private def servedSession(spark: SparkSession): SparkSession = {
+    val extensions = new SparkSessionExtensions
+    new GraftExtensions()(extensions)
+    extensions.injectQueryPostPlannerStrategyRule(_ => SingleSplitPlans)
+    SessionBridge.cloneWithExtensions(spark, extensions)
   }
 }

@@ -36,23 +36,24 @@ object DsirStream {
     // scan parallelism matches the corpus, not the file count: the
     // stream and the corpus scan plan on a fork with it set. Production
     // streams arrive as many files and don't need this.
-    val fs = GraftSession.fork(spark,
-      "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString)
-    MicroBatchFold.runInputGated(fs, inputDir, workDir) { (batch, batchId) =>
-      graft.pipeline.Load.writeBatchPartial(
-        SelectionOps.dsirToks(batch, isTarget, dim)
-          .groupBy(col("b")).agg(
-            count(lit(1)).as("rc"),
-            sum(when(col("tgt"), 1L).otherwise(0L)).as("tc"))
-          .coalesce(1),
-        cntDir, batchId)
+    val maxSplit = "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString
+    val arrived = GraftSession.streamingFork(spark, maxSplit) { fs =>
+      MicroBatchFold.runInputGated(fs, inputDir, workDir) { (batch, batchId) =>
+        graft.pipeline.Load.writeBatchPartial(
+          SelectionOps.dsirToks(batch, isTarget, dim)
+            .groupBy(col("b")).agg(
+              count(lit(1)).as("rc"),
+              sum(when(col("tgt"), 1L).otherwise(0L)).as("tc"))
+            .coalesce(1),
+          cntDir, batchId)
+      }
+      // split on the fork's size (a scan takes it from the session that
+      // read it), scored on the caller's session
+      GraftSession.on(spark, MicroBatchFold.arrived(fs, inputDir))
     }
     val counts = spark.read.parquet(cntDir)
       .groupBy(col("b"))
       .agg(sum(col("rc")).as("rc"), sum(col("tc")).as("tc"))
-    // split on the fork's size (a scan takes it from the session that
-    // read it), scored on the caller's session
-    val arrived = GraftSession.on(spark, MicroBatchFold.arrived(fs, inputDir))
     SelectionOps.dsirScore(
       SelectionOps.dsirToks(arrived, isTarget, dim), counts, dim, k,
       // the fold runs under a live stream's lifetime: pin to parquet

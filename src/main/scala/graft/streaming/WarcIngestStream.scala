@@ -65,28 +65,29 @@ object WarcIngestStream {
     // rung). 32 × ~1 MB ≈ 32 MB per batch — the right order for any
     // row size this source stages. The stream runs on a fork with it
     // set; the fold reads the tiny partials on the caller's session.
-    val fs = GraftSession.fork(spark,
-      "spark.sql.parquet.columnarReaderBatchSize" -> "32")
-    MicroBatchFold.runInputGated(fs, inputDir, workDir) { (batch, batchId) =>
-      val recs = batch
-        .select(Warc.warcParseLenient(col("seg")).as("st"))
-        .select(explode(col("st.records")).as("r"))
-        .select(
-          regexp_extract(col("r.uri"),
-            "\\.com/([A-Za-z0-9]+)/doc/", 1).as("lang"),
-          col("r.content_length").as("clen"),
-          HtmlExtract.htmlMainStats(col("r.payload").cast("string"))
-            .as("hs"))
-      graft.pipeline.Load.writeBatchPartial(
-        recs.groupBy(col("lang")).agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("clen")).as("sum_clen"),
-          sum(col("hs.n_kept")).as("n_kept"),
-          sum(col("hs.kept_chars")).as("kept_chars"),
-          sum(polyHash(coalesce(col("hs.main_text"), lit(""))))
-            .as("text_hashsum"))
-          .coalesce(1),
-        partsDir, batchId)
+    GraftSession.streamingFork(spark,
+        "spark.sql.parquet.columnarReaderBatchSize" -> "32") { fs =>
+      MicroBatchFold.runInputGated(fs, inputDir, workDir) { (batch, batchId) =>
+        val recs = batch
+          .select(Warc.warcParseLenient(col("seg")).as("st"))
+          .select(explode(col("st.records")).as("r"))
+          .select(
+            regexp_extract(col("r.uri"),
+              "\\.com/([A-Za-z0-9]+)/doc/", 1).as("lang"),
+            col("r.content_length").as("clen"),
+            HtmlExtract.htmlMainStats(col("r.payload").cast("string"))
+              .as("hs"))
+        graft.pipeline.Load.writeBatchPartial(
+          recs.groupBy(col("lang")).agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("clen")).as("sum_clen"),
+            sum(col("hs.n_kept")).as("n_kept"),
+            sum(col("hs.kept_chars")).as("kept_chars"),
+            sum(polyHash(coalesce(col("hs.main_text"), lit(""))))
+              .as("text_hashsum"))
+            .coalesce(1),
+          partsDir, batchId)
+      }
     }
     spark.read.parquet(partsDir)
       .groupBy(col("lang"))

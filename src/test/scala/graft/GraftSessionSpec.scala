@@ -6,6 +6,7 @@ import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** The one session factory: SPARK_GRAFT_CPUS parses to a positive core
@@ -94,6 +95,16 @@ class GraftSessionSpec extends SparkSpec {
       while (progress.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
       assert(progress.get() > 0, "the caller's listener saw no progress of the fork's stream")
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("a stream row's fork leaves no streaming listener bus behind: the count stays flat over three q109 runs") {
+    val q109 = graft.queries.Registry.byName("q109_cms_stream")
+    val counts = (1 to 3).map { _ =>
+      assert(q109.run(spark, sfDir).collect().nonEmpty)
+      ListenerBridge.streamingBuses(spark.sparkContext)
+    }
+    info(s"streaming listener buses after each run: ${counts.mkString(", ")}")
+    assert(counts.distinct.size == 1, counts)
   }
 
   test("shared code: a fork and a stream's batch body re-run their caller's statement with 0 whole-stage compiles") {

@@ -2,7 +2,9 @@ package graft
 
 import java.sql.DriverManager
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** One thrift endpoint per test JVM: HiveServer2 does not reliably
   * re-bind after an in-process stop (a second start leaves the new
@@ -146,6 +148,109 @@ class SqlEndpointSpec extends SparkSpec {
       assert(second.wholeStage == 0, second)
       assert(onA == onB && onA.nonEmpty)
     } finally { a.close(); b.close() }
+  }
+
+  /** The dashboard views of the serving benchmark's mix, each as
+    * `SELECT *`, and its five ad-hoc shapes with fixed literals.
+    */
+  private val servedMix: Seq[String] = Seq(
+    "q03_customer_distincts", "q05_priority_share", "q07_daily_by_status",
+    "q12_argmax_per_group", "q13_semi_join", "q18_rlike_filter",
+    "q21_pivot_status", "q25_rollup", "job_summary")
+    .map(v => s"SELECT * FROM global_temp.$v") ++ Seq(
+    "SELECT job_type, count(*) AS n, round(avg(salary), 2) AS avg_salary " +
+      "FROM global_temp.job_data WHERE salary >= 41000 GROUP BY job_type",
+    "SELECT skill, count(*) AS n FROM global_temp.job_skills " +
+      "WHERE job_type = 'Full-Time' GROUP BY skill ORDER BY n DESC, skill LIMIT 7",
+    "SELECT l_returnflag, l_linestatus, count(*) AS n, " +
+      "round(sum(l_extendedprice * (1 - l_discount)), 2) AS rev " +
+      "FROM global_temp.lineitem WHERE l_shipdate < TIMESTAMP '1995-06-17 00:00:00' " +
+      "GROUP BY l_returnflag, l_linestatus",
+    "SELECT count(*) AS n, round(sum(l_quantity), 1) AS qty FROM global_temp.lineitem " +
+      "WHERE l_quantity BETWEEN 12 AND 25 AND l_discount <= 0.04",
+    "SELECT city, count(*) AS n, max(salary) AS top FROM global_temp.job_data " +
+      "WHERE job_posted_date >= TIMESTAMP '2025-10-21 07:30:00' " +
+      "AND salary < 65000 GROUP BY city ORDER BY n DESC, city LIMIT 10")
+
+  /** A result as sorted canonical rows, the same for wire and direct. */
+  private def canonical(rows: Seq[Seq[Any]]): Seq[String] =
+    rows.map(_.map {
+      case null => "NULL"
+      case b: java.math.BigDecimal => b.stripTrailingZeros.toPlainString
+      case f: java.lang.Float => f.toDouble.toString
+      case v => v.toString
+    }.mkString("\u0001")).sorted
+
+  private def overWire(st: java.sql.Statement, sql: String): Seq[Seq[Any]] = {
+    val rs = st.executeQuery(sql)
+    val n = rs.getMetaData.getColumnCount
+    Iterator.continually(rs).takeWhile(_.next())
+      .map(r => (1 to n).map(r.getObject)).toList
+  }
+
+  /** The plan text a connection's `EXPLAIN` returns. */
+  private def explain(st: java.sql.Statement, sql: String): String =
+    overWire(st, s"EXPLAIN $sql").flatten.mkString("\n")
+
+  private val grouped = "SELECT l_returnflag, count(*) AS n " +
+    "FROM global_temp.lineitem GROUP BY l_returnflag ORDER BY l_returnflag"
+
+  test("statements over inputs within one split run as one job each (q13 adds its broadcast); wire == direct") {
+    SharedEndpoint.port
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+        ()
+      }
+    }
+    val conn = SharedEndpoint.connect()
+    val st = conn.createStatement()
+    // pinned as the serving benchmark pins them
+    val pinned = Seq("job_data", "job_skills")
+    pinned.foreach(t => st.execute(s"CACHE TABLE global_temp.$t"))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val jobs = servedMix.zipWithIndex.map { case (sql, i) =>
+        val tag = s"graft-single-split-$i"
+        val wire = overWire(st, s"/* $tag */ $sql")
+        val direct = spark.sql(sql).collect().toSeq.map(_.toSeq)
+        assert(canonical(wire) == canonical(direct), sql)
+        ListenerBridge.waitUntilEmpty(spark.sparkContext, 10000)
+        sql -> descriptions.toArray.count(_.toString.contains(tag))
+      }
+      info(jobs.map { case (sql, n) => s"$n job(s): $sql" }.mkString("\n"))
+      jobs.foreach { case (sql, n) =>
+        val allowed = if (sql.contains("q13_semi_join")) 2 else 1
+        assert(n >= 1 && n <= allowed, s"$n jobs: $sql")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      pinned.foreach(t => st.execute(s"UNCACHE TABLE global_temp.$t"))
+      conn.close()
+    }
+  }
+
+  test("a connection whose max split is below its inputs plans its exchanges") {
+    val (small, conn) = (SharedEndpoint.connect(), SharedEndpoint.connect())
+    try {
+      val st = small.createStatement()
+      st.execute("SET spark.sql.files.maxPartitionBytes=1024")
+      val below = explain(st, grouped)
+      assert(below.contains("Exchange") && !below.contains("Coalesce 1"), below)
+      val within = explain(conn.createStatement(), grouped)
+      assert(within.contains("Coalesce 1") && !within.contains("Exchange"), within)
+    } finally { small.close(); conn.close() }
+  }
+
+  test("the served sessions alone plan as one partition: the host and its forks keep their exchanges") {
+    SharedEndpoint.port
+    Seq(spark, GraftSession.fork(spark), spark.newSession()).foreach { s =>
+      val plan = s.sql(grouped).queryExecution.executedPlan.toString
+      assert(plan.contains("Exchange") && !plan.contains("Coalesce 1"), plan)
+    }
   }
 
   test("soak: 4 clients × all dashboard pages + ad-hoc SQL, store-maintenance stream in flight") {

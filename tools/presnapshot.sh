@@ -20,7 +20,7 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="$(mktemp -d /tmp/presnapshot.XXXXXX)"
 trap 'rm -rf "$OUT_DIR"' EXIT
 
-echo "[presnapshot] 1/6 session conf and class-loader policy live only in GraftSession"
+echo "[presnapshot] 1/6 session conf and class-loader policy live only in GraftSession, the serving rule only in SqlEndpoint"
 # A conf.set on a session that other code plans on leaks into its
 # concurrent queries (the SQL endpoint plans client queries on the
 # engine's session). Plan with a different conf on GraftSession.fork.
@@ -44,6 +44,19 @@ isolation="$(grep -rn 'artifact\.isolation' src/main \
 if [ -n "$isolation" ]; then
   echo "$isolation"
   echo "[presnapshot] ARTIFACT ISOLATION OUTSIDE GraftSession: it owns the class-loader policy"
+  exit 1
+fi
+# Only the sessions SqlEndpoint serves plan tiny inputs as one partition
+# (SingleSplitPlans). Injected anywhere else, e.g. into the host
+# session's extensions, which every later clone shares, the rule would
+# reach the engine's own plans, and the plan shapes the suite pins would
+# change with test order.
+single_split="$(grep -rnE 'SingleSplitPlans|injectQueryPostPlannerStrategyRule' src/main --include='*.scala' \
+  | grep -vE '^src/main/scala/(graft/server/SqlEndpoint|graft/plans/SingleSplitPlans|org/apache/spark/sql/graftbridge/[A-Za-z]+)\.scala:' \
+  || true)"
+if [ -n "$single_split" ]; then
+  echo "$single_split"
+  echo "[presnapshot] SingleSplitPlans OUTSIDE SqlEndpoint: it owns the serving scope"
   exit 1
 fi
 
