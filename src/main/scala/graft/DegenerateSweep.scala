@@ -122,10 +122,7 @@ object DegenerateSweep {
             .find(_.nonEmpty).getOrElse("")
           errors(name) = s"${e.getClass.getSimpleName}: ${msg.take(300)}"
         }
-        // same per-query isolation as Verify: pinned localCheckpoint
-        // blocks must not accumulate across 165 queries
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        GraftSession.releaseCached(spark)
       }
     errors.toMap
   }

@@ -140,6 +140,19 @@ object GraftSession {
     try body(f) finally ListenerBridge.dropStreamingBus(f)
   }
 
+  /** Drop every cached table and persisted RDD of `spark`'s application,
+    * after each query of a run of independent ones. localCheckpoint
+    * blocks (PageRank rounds, stream stores) stay pinned for the session
+    * otherwise, and each query's blocks shrink the execution pool the
+    * next one aggregates in: at sf10 the blocks of 12 earlier queries
+    * starved q130's hash aggregation into AGGREGATE_OUT_OF_MEMORY.
+    */
+  def releaseCached(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(
+      _.unpersist(blocking = false))
+  }
+
   /** `df` as a frame of `spark`: a fork's result handed back to its
     * caller, so its lazy tail plans with the caller's conf, not the
     * fork's.

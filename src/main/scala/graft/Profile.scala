@@ -50,11 +50,7 @@ object Profile {
         println(f"$n%-42s $cold%7.2f $warm%7.2f ${c.jobs.get() - j0}%5d ${c.stages.get() - s0}%5d ${c.tasks.get() - k0}%6d ${(c.cpuNs.get() - cp0) / 1e9}%7.2f ${(c.shuffleBytes.get() - sh0) / 1e6}%8.1f ${n1 - n0}%5d ${n2 - n1}%5d ${ms1 - ms0}%7.0f ${ms2 - ms1}%7.0f")
       } catch { case e: Throwable =>
         println(s"$n FAILED: $e")
-      } finally {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(
-          _.unpersist(blocking = false))
-      }
+      } finally GraftSession.releaseCached(spark)
     }
     spark.stop()
   }

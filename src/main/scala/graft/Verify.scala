@@ -25,16 +25,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
-      // Per-query isolation: localCheckpoint blocks (PageRank rounds,
-      // stream stores) persist for the SESSION, so without this each
-      // query's pinned blocks shrink the execution pool available to
-      // the next — at sf10 the accumulated storage from 12 earlier
-      // queries starved q130's hash aggregation into
-      // AGGREGATE_OUT_OF_MEMORY. The driver's gate semantics are
-      // independent queries; make the memory semantics match.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(
-        _.unpersist(blocking = false))
+      // the driver's gate semantics are independent queries; make the
+      // memory semantics match
+      GraftSession.releaseCached(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -57,12 +57,6 @@ object Clean {
   def cleanJobTitle(c: Column): Column =
     titleCase(stripTitleNoise(firstSegment(stripBrackets(c))))
 
-  /** The unfused reference composition (C4 → C5 → C6), kept as the
-    * equivalence oracle for `stripTitleNoise`.
-    */
-  private[graft] def cleanJobTitleUnfused(c: Column): Column =
-    titleCase(alphaOnly(stripSeniority(stripRomanNumerals(firstSegment(stripBrackets(c))))))
-
   // ---- C9: timestamp coercion, invalid -> null (transform.py:102-103) ----
   def coerceTimestamp(c: Column): Column =
     coalesce(
@@ -113,15 +107,6 @@ object Clean {
     */
   def skillsAsArray(c: Column): Column = skillTokens(c)
 
-  /** The lambda form of C15, kept as the equivalence oracle for
-    * `flattenSkills`.
-    */
-  private[graft] def flattenSkillsLambda(c: Column): Column = {
-    val norm = transform(split(c, ","), t => lower(trim(t)))
-    val nonEmpty = filter(norm, t => t =!= "")
-    when(c.isNull, lit("not listed")).otherwise(array_join(nonEmpty, ", "))
-  }
-
   // ---- C16: deterministic timestamp synthesis (data_extract.py:217-225) --
   // The reference draws a random evening time (09:00:00–22:59:59); for
   // replayability ours is a hash of (seed, key): same inputs -> same
@@ -147,7 +132,7 @@ object Clean {
   // filter, both CodegenFallback in Spark 4.1. Each rlike is guarded by
   // a literal every match must contain; `And` short-circuits in codegen,
   // so most rows skip most regexes without changing any result.
-  private val jobTypePatterns = Seq(
+  private[pipeline] val jobTypePatterns = Seq(
     // (regex, literal every match contains, label) — sorted by label
     ("contract", Seq("contract"), "Contract"),
     ("freelance|consult", Seq("freelance", "consult"), "Freelance"),
@@ -155,7 +140,7 @@ object Clean {
     ("intern(ship)?", Seq("intern"), "Internship"),
     ("part[- ]?time", Seq("part"), "Part-Time"),
     ("temp(orary)?", Seq("temp"), "Temporary"))
-  private def jobTypeHaystack(jobType: Column, jobTitle: Column): Column =
+  private[pipeline] def jobTypeHaystack(jobType: Column, jobTitle: Column): Column =
     concat_ws(" ", lower(coalesce(jobType, lit(""))), lower(coalesce(jobTitle, lit(""))))
 
   def inferJobType(jobType: Column, jobTitle: Column): Column = {
@@ -165,19 +150,6 @@ object Clean {
       when(guard && hay.rlike(s"""\\b($re)\\b"""), lit(label))
     }: _*)
     when(labels === "", lit("Not specified")).otherwise(labels)
-  }
-
-  /** The array/lambda form of T1, kept as the equivalence oracle for
-    * `inferJobType`.
-    */
-  private[graft] def inferJobTypeLambda(jobType: Column, jobTitle: Column): Column = {
-    val hay = jobTypeHaystack(jobType, jobTitle)
-    val labels = array(jobTypePatterns.map { case (re, _, label) =>
-      when(hay.rlike(s"""\\b($re)\\b"""), lit(label))
-    }: _*)
-    val present = array_sort(filter(labels, l => l.isNotNull))
-    when(size(present) === 0, lit("Not specified"))
-      .otherwise(array_join(present, ", "))
   }
 
   // ---- D1: keyed dedup with exact keep-first semantics -------------------

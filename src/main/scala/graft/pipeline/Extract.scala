@@ -44,13 +44,6 @@ object Extract {
       coalesce(location, lit("")).rlike("(?i)\\b(US|United States|USA)\\b")
     else lit(true)
 
-  /** M1: deterministic ~rate sample via multiplicative hash of a key —
-    * replayable on any cluster shape, unlike seeded rand + global sort.
-    * rate is in basis points (1% = 100).
-    */
-  def hashSample(key: Column, rateBp: Int, seed: Long = 42L): Column =
-    pmod(xxhash64(key, lit(seed)), lit(10000L)) < rateBp
-
   /** Full extract for one run date: filter both sources, enrich the kept
     * rows, normalize, union, fill edge defaults, synthesize posted
     * timestamps.

@@ -220,6 +220,21 @@ object GraphOps {
     }
   }
 
+  /** The trade graph's edge derivation, one `(c, sp)` row per lineitem:
+    * the one fact-fact join (`lineitem ⋈ orders` on the orderkey) with
+    * customers at custkey*2 and suppliers at suppkey*2+1. q130 takes its
+    * distinct pairs, q132 their counts as weights, and the staged graph
+    * check ([[graft.StagedVerify]]) exports both from here.
+    */
+  private[graft] def tradePairs(s: org.apache.spark.sql.SparkSession,
+                                d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_suppkey"))
+      .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
+        col("l_orderkey") === col("o_orderkey"))
+      .select((col("o_custkey") * 2).as("c"),
+        (col("l_suppkey") * 2 + 1).as("sp"))
+
   val defs: Seq[Q] = Seq(
     // ---- PageRank over the customer↔supplier trade graph -----------------
     // Nodes: custkey*2 / suppkey*2+1 (disjoint BIGINT spaces, no string
@@ -229,13 +244,7 @@ object GraphOps {
     Q(
       "q130_pagerank",
       (s, d) => withFactScaledShuffle(s, d) { (gs, stage, big) =>
-        val pairs = stage(Tables.lineitem(gs, d)
-          .select(col("l_orderkey"), col("l_suppkey"))
-          .join(Tables.orders(gs, d).select(col("o_orderkey"), col("o_custkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).as("c"),
-            (col("l_suppkey") * 2 + 1).as("sp"))
-          .distinct())
+        val pairs = stage(tradePairs(gs, d).distinct())
         // symmetrization + deg/spine derivation live in ranksSymmetric:
         // deg comes from the HALF-sized pair frame and the spine is the
         // deg frame itself — the old 2·|edges| endpoint distinct (the
@@ -266,13 +275,8 @@ object GraphOps {
     Q(
       "q132_personalized_pagerank",
       (s, d) => withFactScaledShuffle(s, d) { (gs, stage, big) =>
-        val pw = stage(Tables.lineitem(gs, d)
-          .select(col("l_orderkey"), col("l_suppkey"))
-          .join(Tables.orders(gs, d).select(col("o_orderkey"), col("o_custkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy((col("o_custkey") * 2).as("c"),
-            (col("l_suppkey") * 2 + 1).as("sp"))
-          .agg(count(lit(1)).as("w")))
+        val pw = stage(tradePairs(gs, d)
+          .groupBy(col("c"), col("sp")).agg(count(lit(1)).as("w")))
         val seeds = Tables.customer(gs, d)
           .where(col("c_mktsegment") === SeedSegment)
           .select((col("c_custkey") * 2).as("node"))

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** CSV edge IO (SURVEY.md §2.1 S2/S5/S6): the reference's inter-stage
-  * format. Production schemas are always driver-declared — `inferSchema`
-  * exists only behind an explicit opt-in because a schema inference pass
+  * format. Schemas are always driver-declared: a schema inference pass
   * reads the data twice and can flip types between daily files.
   */
 object CsvTables {
@@ -19,10 +18,6 @@ object CsvTables {
       .option("mode", "PERMISSIVE") // malformed rows -> nulls, not task failure
       .schema(schema)
       .csv(paths: _*)
-
-  /** Exploratory read with inference — never in the pipeline path. */
-  def readInferred(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(paths: _*)
 
   /** S6: CSV sink. One file per partition; callers coalesce(1) only for
     * tiny exports (a single writer is a scale anti-pattern).

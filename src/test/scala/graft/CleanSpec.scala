@@ -47,7 +47,7 @@ class CleanSpec extends SparkSpec {
     val df = inputs.toDF("v")
       .select(col("v"),
         graft.pipeline.Clean.cleanJobTitle(col("v")).as("fused"),
-        graft.pipeline.Clean.cleanJobTitleUnfused(col("v")).as("seq"))
+        graft.pipeline.CleanOracles.cleanJobTitleUnfused(col("v")).as("seq"))
     val diffs = df.where(not(col("fused") <=> col("seq"))).collect()
     assert(diffs.isEmpty,
       diffs.take(5).map(r => s"'${r.getString(0)}': fused='${r.getString(1)}' seq='${r.getString(2)}'").mkString("; "))

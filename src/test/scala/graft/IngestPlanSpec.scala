@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{Clean, Extract, Schema, Transform}
+import graft.pipeline.{CleanOracles, Extract, Schema, Transform}
 import graft.queries.PipelineOps
 import graft.sources.CsvTables
 import org.apache.spark.sql.DataFrame
@@ -49,7 +49,7 @@ class IngestPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // derived from a range, so nothing constant-folds away)
     val s = concat(lit("a, full-time "), col("id").cast("string"))
     val lambda = executed(spark.range(4)
-      .select(Clean.flattenSkillsLambda(s), Clean.inferJobTypeLambda(s, s)))
+      .select(CleanOracles.flattenSkillsLambda(s), CleanOracles.inferJobTypeLambda(s, s)))
     assert(Set("array_sort", "filter", "transform").subsetOf(fallbacks(lambda).toSet),
       fallbacks(lambda).toString)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{Clean, Schema, Transform}
+import graft.pipeline.{Clean, CleanOracles, Schema, Transform}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -88,7 +88,7 @@ class PropertySpec extends SparkSpec {
     val edges = Seq[(String, String)]((null, null), ("", ""), (null, "contract"),
       ("full-time", null), ("\t", "\t"), ("full", "time"), ("inter", "n"),
       ("", "contract full time intern role"), ("freelance consulting", "temp work"))
-    val bad = mismatches(gen, edges, 600)(Clean.inferJobType, Clean.inferJobTypeLambda)
+    val bad = mismatches(gen, edges, 600)(Clean.inferJobType, CleanOracles.inferJobTypeLambda)
     assert(bad.isEmpty, bad.take(5).mkString("; "))
   }
 
@@ -102,7 +102,7 @@ class PropertySpec extends SparkSpec {
     val edges = Seq("", " ", ",", " , ", ",,,", " , , ", "\t", "a,\tb", "a ,b, c ,",
       " Python , SQL,,aws ", "ΟΔΟΣ,ΣΑΣ", "ΣΑΣ ,ΣΑΣ", "İ, I", null).map(s => (s, ""))
     val bad = mismatches(gen, edges, 600)(
-      (a, _) => Clean.flattenSkills(a), (a, _) => Clean.flattenSkillsLambda(a))
+      (a, _) => Clean.flattenSkills(a), (a, _) => CleanOracles.flattenSkillsLambda(a))
     assert(bad.isEmpty, bad.take(5).mkString("; "))
   }
 

@@ -20,7 +20,7 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="$(mktemp -d /tmp/presnapshot.XXXXXX)"
 trap 'rm -rf "$OUT_DIR"' EXIT
 
-echo "[presnapshot] 1/6 session conf and class-loader policy live only in GraftSession, the serving rule only in SqlEndpoint"
+echo "[presnapshot] 1/7 session conf and class-loader policy live only in GraftSession, the serving rule only in SqlEndpoint"
 # A conf.set on a session that other code plans on leaks into its
 # concurrent queries (the SQL endpoint plans client queries on the
 # engine's session). Plan with a different conf on GraftSession.fork.
@@ -60,16 +60,16 @@ if [ -n "$single_split" ]; then
   exit 1
 fi
 
-echo "[presnapshot] 2/6 sbt compile"
+echo "[presnapshot] 2/7 sbt compile"
 sbt -batch compile > "$OUT_DIR/compile.log" 2>&1 || {
   tail -30 "$OUT_DIR/compile.log"; echo "[presnapshot] COMPILE FAILED"; exit 1; }
 
-echo "[presnapshot] 3/6 graft.Verify @ $SF_DIR"
+echo "[presnapshot] 3/7 graft.Verify @ $SF_DIR"
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR/verify" \
   > "$OUT_DIR/verify.log" 2>&1 || {
   tail -30 "$OUT_DIR/verify.log"; echo "[presnapshot] VERIFY FAILED"; exit 1; }
 
-echo "[presnapshot] 4/6 gate completeness (round-6 post-mortem: a broken"
+echo "[presnapshot] 4/7 gate completeness (round-6 post-mortem: a broken"
 echo "              query must FAIL the gate, not silently shrink it)"
 python3 - "$OUT_DIR/verify" <<'EOF'
 import json, os, sys
@@ -90,10 +90,19 @@ if missing:
 print(f"[presnapshot] {len(dumped)} queries dumped, 0 errors")
 EOF
 
-echo "[presnapshot] 5/6 DuckDB oracle selfcheck"
+echo "[presnapshot] 5/7 DuckDB oracle selfcheck"
 python3 tools/selfcheck.py "$SF_DIR" "$OUT_DIR/verify" | tail -5
 
-echo "[presnapshot] 6/6 sbt test (full suite — must exit 0)"
+echo "[presnapshot] 6/7 staged oracles of the lsh/graph/pairs/spans families @ $SF_DIR"
+# The staged path is otherwise run only at the sf30+ rungs; run every
+# family here so it cannot rot between rung rounds.
+sbt -batch "runMain graft.StagedVerify all $SF_DIR $OUT_DIR/staged" \
+  > "$OUT_DIR/staged.log" 2>&1 || {
+  tail -30 "$OUT_DIR/staged.log"; echo "[presnapshot] STAGED EXPORT FAILED"; exit 1; }
+python3 tools/stagedcheck.py all "$SF_DIR" "$OUT_DIR/staged" || {
+  echo "[presnapshot] STAGED CHECK FAILED"; exit 1; }
+
+echo "[presnapshot] 7/7 sbt test (full suite — must exit 0)"
 sbt -batch test > "$OUT_DIR/test.log" 2>&1 || {
   grep -E "TESTS FAILED|\*\*\* FAILED|Error" "$OUT_DIR/test.log" | tail -20
   echo "[presnapshot] SBT TEST FAILED"; exit 1; }
