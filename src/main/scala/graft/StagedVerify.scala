@@ -24,7 +24,12 @@ import org.apache.spark.sql.functions._
   *    ([[queries.GraphOps.tradePairs]]): DuckDB symmetrizes, derives
   *    deg/Σw itself, folds the 8 (resp. 6) integer rounds and elects the
   *    top 20, exact because every rank is a BIGINT and every division a
-  *    floor division ([[graft.ops.PageRank]]).
+  *    floor division ([[graft.ops.PageRank]]). Its exports plan on a
+  *    fork whose `spark.graft.graph.minShuffleWidth` is one above the
+  *    session width, so q130/q132 take the wide path of sf30 and above
+  *    (parquet stage, columnar edge cache, broadcast rounds) at any
+  *    rung instead of the driver fold; above the fact width the floor
+  *    changes nothing.
   *  - `pairs`: q140's routed pair set is checked at the top-2 fine-cell
   *    assignment, a deterministic function of the corpus that the gate
   *    verifies through its `asg2` CTE chain: DuckDB replays the
@@ -90,9 +95,15 @@ object StagedVerify {
       s"family must be one of ${all.map(_._1).mkString(", ")} or all, got '$which'")
     val spark = GraftSession.start("graft-staged-verify")
     chosen.foreach { case (family, exports) =>
-      val s = if (family == "spans")
-        GraftSession.fork(spark, "spark.sql.files.maxPartitionBytes" -> "16m")
-      else spark
+      val s = family match {
+        case "spans" =>
+          GraftSession.fork(spark, "spark.sql.files.maxPartitionBytes" -> "16m")
+        case "graph" =>
+          val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+          GraftSession.fork(spark,
+            "spark.graft.graph.minShuffleWidth" -> (width + 1).toString)
+        case _ => spark
+      }
       exports.foreach { case (name, df) =>
         val t0 = System.nanoTime()
         df(s).write.mode(SaveMode.Overwrite)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.DataType
 
 /** The bounded driver fold behind every iterative operator's small-input
-  * branch (CC, triangles, both symmetric PageRanks, BPE training, MMR).
+  * branch (CC, triangles, PageRank — global and personalized through
+  * one fold —, BPE training, MMR).
   *
   * Each of those operators has a distributed loop whose rounds cost
   * several jobs plus a localCheckpoint apiece — on the graphs, type

@@ -19,17 +19,17 @@ final case class PrRank(node: Long, rank_units: Long)
   * formulation differs per-engine in the 1e-16s from round one and the
   * drift compounds per iteration.
   *
-  * Semantics per round (damping 0.85 expressed as the 85/100 ratio):
+  * Both entry points take an UNDIRECTED graph as its pair list and run
+  * one fixpoint: [[personalizedSymmetric]]'s weighted, seeded
+  * recurrence. [[ranksSymmetric]] (global PageRank) is its case with
+  * every pair at weight 1 and every node a seed — Page et al. 1999 §6's
+  * uniform E vector — which reproduces the uniform recurrence
+  * bit-for-bit (see [[ranksSymmetric]]).
   *
-  *   contrib(u→v) = (85 * r(u)) div (100 * deg(u))
-  *   r'(v)        = (15 * Mass) div (100 * N)  +  Σ_{u→v} contrib(u→v)
-  *
-  * Floor losses (the sub-unit remainders of each division) and the mass
-  * of dangling nodes are dropped, not redistributed — the well-known
-  * "dangling mass removed" PageRank variant. Both choices are exact and
-  * deterministic; with Mass = 1e12 the relative loss per round is
-  * ≤ N·(deg-division remainder) / Mass ≈ 1e-6 at a million nodes, far
-  * below ranking resolution.
+  * Floor losses (the sub-unit remainders of each division) are dropped,
+  * not redistributed. Exact and deterministic; with Mass = 1e12 the
+  * relative loss per round is ≤ N·(division remainder) / Mass ≈ 1e-6 at
+  * a million nodes, far below ranking resolution.
   *
   * Iterative shape (the q60/q99 driver-round pattern):
   *  - the BARE edge list (src, dst[, w] — the narrowest possible big
@@ -45,17 +45,16 @@ final case class PrRank(node: Long, rank_units: Long)
   *    partitioning metadata — its scans report UnknownPartitioning —
   *    so the small/medium path skips the pre-shuffle and relies on
   *    AQE instead, below.)
-  *  - per-src denominators (deg / Σw) ride IN THE RANK FRAME, not on
-  *    every edge row: each round's share (share(u) = (85·r(u)) div
-  *    (100·deg(u)), one row per node) is a pure PROJECTION of the
-  *    rank frame. Same integer value per edge as the old per-edge
-  *    form, a third fewer cached bytes, one fewer corpus-sized
-  *    shuffle at build (the old edges⋈deg) — and, critically, a
-  *    single measurable stage on the small side of the big join, so
-  *    AQE converts it to broadcast-hash below the node-size
-  *    threshold (a join-shaped share side is unmeasurable mid-stage
-  *    and pinned the corpus side into a full per-round sort —
-  *    measured 2.5× on q130 at sf10, round 11);
+  *  - per-src denominators (Σw) ride IN THE RANK FRAME, not on every
+  *    edge row: each round's share side (85·r(u) and 100·Σw(u), one
+  *    row per node) is a pure PROJECTION of the rank frame. Same
+  *    integer value per edge as a per-edge denominator, a third fewer
+  *    cached bytes, one fewer corpus-sized shuffle at build (the old
+  *    edges⋈deg) — and, critically, a single measurable stage on the
+  *    small side of the big join, so AQE converts it to broadcast-hash
+  *    below the node-size threshold (a join-shaped share side is
+  *    unmeasurable mid-stage and pinned the corpus side into a full
+  *    per-round sort — measured 2.5× on q130 at sf10, round 11);
   *  - each small/medium round is the canonical two-shuffle PageRank
   *    step: join shares into edges on src (shares are node-sized —
   *    only they move), then an integer-sum aggregate; corpus rounds
@@ -74,11 +73,10 @@ object PageRank {
   /** Total rank mass in fixed-point units. */
   val Mass: Long = 1000000000000L
 
-  /** [[DriverFold]] cap of the SYMMETRIC fixpoints: flat (a, b[, w])
-    * Long rows, 2^20 pairs ≈ 24 MB, where the k-round loop was ~45
-    * scheduling round-trips over node-sized frames at sf0.1. Integer
-    * fixed-point sums commute, so the fold is bit-identical to the
-    * rounds.
+  /** [[DriverFold]] cap of the fixpoint: flat (a, b[, w]) Long rows,
+    * 2^20 pairs ≈ 24 MB, where the k-round loop was ~45 scheduling
+    * round-trips over node-sized frames at sf0.1. Integer fixed-point
+    * sums commute, so the fold is bit-identical to the rounds.
     */
   private[graft] val DriverFoldCap = 1 << 20
 
@@ -91,7 +89,7 @@ object PageRank {
     */
   private val CheckpointEvery = 2
 
-  /** Materialize the degree-annotated edge list once. Two regimes:
+  /** Materialize the bare edge list once. Two regimes:
     *
     *  - `columnar = false` (default, small/medium graphs):
     *    localCheckpoint — the cheapest one-shot materialization; its
@@ -116,23 +114,22 @@ object PageRank {
       // partition by DST before caching: InMemoryRelation preserves the
       // partitioning (unlike localCheckpoint, whose LogicalRDD scans
       // report UnknownPartitioning — measured, round 11). Round 11
-      // partitioned by SRC for a zero-exchange sort-merge join — but
-      // the join was never the edge-sized cost: the corpus path
-      // BROADCASTS the node-sized share frame (see ranks), so the join
-      // needs no edge exchange under EITHER layout. The edge-sized
-      // cost was the per-round contribution aggregate: groupBy(dst)
-      // over a src-partitioned cache re-shuffles ~every edge row every
-      // round (dsts are scattered across tasks, so map-side combine
-      // collapses almost nothing — at sf100 that was ~19 GB of shuffle
-      // per round, ×8 rounds). dst-partitioned, the aggregate's
-      // required distribution is already satisfied and every round
-      // runs ZERO-exchange end to end: scan → broadcast-hash join →
-      // in-partition final aggregate. The one-time price is the deg/Σw
-      // build aggregate, which loses its co-partitioning and pays ONE
-      // edge-sized shuffle at build — 1 vs the 8 per-round ones it
-      // buys back. The within-partition sort keeps the dst column
-      // RLE/delta-friendly for the columnar compressor (the cache is
-      // scanned 8×; narrower is faster).
+      // partitioned by SRC for a zero-exchange sort-merge join — but the
+      // join was never the edge-sized cost: the corpus path BROADCASTS the
+      // node-sized share frame (see fixpointDistributed), so the join
+      // needs no edge exchange under EITHER layout. The edge-sized cost
+      // was the per-round contribution aggregate: groupBy(dst) over a
+      // src-partitioned cache re-shuffles ~every edge row every round
+      // (dsts are scattered across tasks, so map-side combine collapses
+      // almost nothing — at sf100 that was ~19 GB of shuffle per round, ×8
+      // rounds). dst-partitioned, the aggregate's required distribution is
+      // already satisfied and every round runs ZERO-exchange end to end:
+      // scan → broadcast-hash join → in-partition final aggregate. The
+      // one-time price is the deg/Σw build aggregate, which loses its
+      // co-partitioning and pays ONE edge-sized shuffle at build — 1 vs
+      // the 8 per-round ones it buys back. The within-partition sort keeps
+      // the dst column RLE/delta-friendly for the columnar compressor (the
+      // cache is scanned 8×; narrower is faster).
       val p = ed.repartition(col("dst")).sortWithinPartitions(col("dst"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       p.count()
@@ -149,121 +146,153 @@ object PageRank {
   private def releaseEdges(ed: DataFrame, columnar: Boolean): Unit =
     if (columnar) { ed.unpersist(false); () } else releaseLocalCkpt(ed)
 
-  /** Ranks after `k` rounds over a directed edge list (`src`, `dst`:
-    * long). Edges are taken as-is — callers dedup and symmetrize as
-    * their graph semantics require. Nodes = every endpoint; nodes with
-    * no out-edges hold teleport-only rank (their mass is dropped).
+  /** Global PageRank: ranks after `k` rounds over an UNDIRECTED graph
+    * given as its distinct pair list (`a`, `b`: long, one row per
+    * unordered edge) — the shape every corpus graph in this engine
+    * starts from (the q130 trade pairs). Per round (damping 0.85 as the
+    * 85/100 ratio), with deg(u) the number of pairs containing u:
+    *
+    *   contrib(u→v) = (85 * r(u)) div (100 * deg(u))
+    *   r'(v)        = (15 * Mass) div (100 * N)  +  Σ_{u→v} contrib(u→v)
+    *
+    * starting from r(v) = Mass div N. Both directions of every pair are
+    * edges, so every endpoint has an out-edge: no node is dangling and
+    * the node set is exactly the deg frame's.
+    *
+    * This is [[personalizedSymmetric]] with w ≡ 1 and every node a
+    * seed: its teleport (15·Mass) div (100·N), start Mass div N and
+    * per-edge (85·r·1) div (100·deg) are the terms above exactly, so
+    * the result is bit-identical (PageRankSpec pins it against the
+    * sequential uniform recurrence). The unit weight joins after the
+    * edge cache (the cached (src, dst) bytes are unchanged) and the
+    * spine needs no seed probe.
     *
     * Returns (`node` long, `rank_units` long), one row per node.
     */
-  def ranks(edges: DataFrame, k: Int,
-            columnarEdgeCache: Boolean = false): DataFrame = {
-    require(k >= 0, s"pagerank rounds must be >= 0, got $k")
-    // cache the BARE (src, dst) pairs: degrees are NOT carried per
-    // edge — they ride in the rank frame below and the round's share
-    // pre-division is a pure projection (same integer per-edge value,
-    // a third fewer cached bytes, one fewer corpus shuffle at build:
-    // the old edges⋈deg materialization).
-    val ed = persistEdges(edges, columnarEdgeCache)
-    // partial aggs combine map-side; the exchange carries node-sized
-    // partials only
-    val deg = ed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg"))
-    // the node spine CARRIES deg (0 for dangling nodes): the per-round
-    // share is then a projection over the rank frame alone — one
-    // measurable shuffle stage on the small side of the big join, which
-    // is what lets AQE convert it to broadcast-hash below the node-size
-    // threshold (a join-shaped small side is unmeasurable mid-stage and
-    // pins the corpus side into a full per-round sort — measured 2.5×
-    // on q130 at sf10, round 11)
-    val nodes = ed.select(col("src").as("node"))
-      .unionByName(ed.select(col("dst").as("node")))
-      .distinct()
-      .join(deg, Seq("node"), "left")
-      .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"))
-      .localCheckpoint()
-    iterateRanks(ed, nodes, k, columnarEdgeCache)
-  }
-
-  /** [[ranks]] specialized to an UNDIRECTED graph given as its distinct
-    * pair list (`a`, `b`: long, one row per unordered edge) — the shape
-    * every corpus graph in this engine starts from (the q130 trade
-    * pairs). Symmetrization (both directions) happens inside; the build
-    * aggregates run on the HALF-sized pair frame instead of the
-    * symmetrized one (round-12 verdict lever): deg comes from two
-    * pair-frame aggregates merged node-wise (node-sized inputs), and the
-    * node spine IS that deg frame — the old path's distinct over
-    * 2·|edges| endpoint rows (the largest single build aggregate at the
-    * sf100 rung) disappears entirely. In a symmetric graph every
-    * endpoint has an out-edge, so deg ≥ 1 and the spine is complete by
-    * construction — no dangling left-join. Integer sums are
-    * order-independent, so ranks are bit-identical to
-    * `ranks(a→b ∪ b→a)`; PageRankSpec pins that equality.
-    */
   def ranksSymmetric(pairs: DataFrame, k: Int,
-                     columnarEdgeCache: Boolean = false): DataFrame = {
+                     columnarEdgeCache: Boolean = false): DataFrame =
+    fixpoint(pairs.select(col("a"), col("b")), None, k, columnarEdgeCache)
+
+  /** Weighted, personalized PageRank over an UNDIRECTED weighted graph
+    * given as its pair list (`a`, `b`, `w`: long, `w` ≥ 1, one row per
+    * unordered edge) — the [[ranksSymmetric]] recurrence with two
+    * generalizations:
+    *
+    *  - **edge weights**: a node's rank splits proportionally to weight
+    *    instead of uniformly:
+    *      contrib(u→v) = (85 * r(u) * w(u,v)) div (100 * W(u))
+    *    where W(u) = Σ_v w(u,v). Exact-overflow bound: the product
+    *    85 * r(u) * w needs r(u)·w < 2^63/85 ≈ 1.1e17; with total mass
+    *    1e12 that admits per-edge weights up to ~1e5 even if one node
+    *    held ALL the mass — and in practice r(u) shrinks as 1/N, so the
+    *    bound loosens linearly with graph size (100 TB-safe for any
+    *    count-like weight). Past it both paths throw
+    *    ArithmeticException (ANSI on the distributed path, exact
+    *    arithmetic in the fold) instead of wrapping.
+    *  - **personalization**: the teleport term lands only on a seed set
+    *    S (restart distribution uniform over S), and the initial mass
+    *    starts on S:  r'(v) = [v∈S]·(15·Mass) div (100·|S|) + Σ contribs.
+    *    Ranks then measure proximity to S through weighted trade flow —
+    *    the standard personalized-PageRank semantics (Page et al. 1999,
+    *    §6 "personalized" E vector).
+    *
+    * `seeds`: (`node` long); seeds outside the graph's node set are
+    * ignored (they could never receive or emit mass), and with no
+    * in-graph seed every rank is 0. Returns (`node`, `rank_units`).
+    */
+  def personalizedSymmetric(pw: DataFrame, seeds: DataFrame, k: Int,
+                            columnarEdgeCache: Boolean = false): DataFrame =
+    fixpoint(pw.select(col("a"), col("b"), col("w")), Some(seeds), k,
+      columnarEdgeCache)
+
+  /** Probe for the driver fold, else run [[fixpointDistributed]]:
+    * `pairs` is (a, b) (every pair weighs 1) or (a, b, w); `seeds`
+    * None seeds every node. A corpus-scale call (the columnar-edge-cache
+    * hint) skips the probe.
+    */
+  private def fixpoint(pairs: DataFrame, seeds: Option[DataFrame], k: Int,
+                       columnarEdgeCache: Boolean): DataFrame = {
     require(k >= 0, s"pagerank rounds must be >= 0, got $k")
-    // a corpus-scale call (the columnar-edge-cache hint) skips the probe
-    val folded = if (columnarEdgeCache) None
-      else DriverFold.rows(pairs.select(col("a"), col("b")), DriverFoldCap,
-          LongType, LongType)
-        .map(driverRanksSymmetric(pairs.sparkSession, _, k))
-    folded.getOrElse(ranksSymmetricDistributed(pairs, k, columnarEdgeCache))
+    val folded = if (columnarEdgeCache) None else for {
+      p <- DriverFold.rows(pairs, DriverFoldCap,
+        pairs.columns.toSeq.map(_ => LongType): _*)
+      s <- seeds.fold(Option(Option.empty[Array[Row]]))(sd =>
+        DriverFold.rows(sd.select(col("node")).distinct(), DriverFoldCap,
+          LongType).map(Some(_)))
+    } yield driverFold(pairs.sparkSession, p, s, k)
+    folded.getOrElse(fixpointDistributed(pairs, seeds, k, columnarEdgeCache))
   }
 
-  /** The distributed [[ranksSymmetric]] body — the scale path above
-    * [[DriverFoldCap]] and the equality reference for PageRankSpec's
-    * fast==distributed pin.
+  /** The distributed fixpoint — the scale path above [[DriverFoldCap]]
+    * and the equality reference for the driver fold's specs. `pairs`
+    * and `seeds` as in [[fixpoint]].
+    *
+    * Build: both directions of every pair go into the edge cache; Σw
+    * per node comes from two HALF-sized pair-frame aggregates whose
+    * node-sized partials merge in one final node-keyed sum (a node can
+    * appear on both sides in general graphs; disjoint id spaces just
+    * make one of the two partials empty per node), and the node spine
+    * IS that Σw frame — no distinct over the 2·|edges| symmetrized
+    * endpoints (the largest single build aggregate at the sf100 rung).
     */
-  private[graft] def ranksSymmetricDistributed(
-      pairs: DataFrame, k: Int, columnarEdgeCache: Boolean): DataFrame = {
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-    val ed = persistEdges(edges, columnarEdgeCache)
-    // deg(v) = #pairs containing v: two half-sized aggregates whose
-    // node-sized partials merge in one final node-keyed sum (a node can
-    // appear on both sides in general graphs; disjoint id spaces just
-    // make one of the two partials empty per node)
-    val nodes = pairs.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
-      .unionByName(pairs.groupBy(col("b").as("node")).agg(count(lit(1)).as("d")))
-      .groupBy(col("node")).agg(sum(col("d")).as("deg"))
+  private[graft] def fixpointDistributed(
+      pairs: DataFrame, seeds: Option[DataFrame], k: Int,
+      columnarEdgeCache: Boolean): DataFrame = {
+    val weight = pairs.columns.find(_ == "w").map(col).toSeq
+    def directed(src: String, dst: String): DataFrame =
+      pairs.select(col(src).as("src") +: col(dst).as("dst") +: weight: _*)
+    val cached = persistEdges(directed("a", "b").unionByName(directed("b", "a")),
+      columnarEdgeCache)
+    // a unit weight joins AFTER the cache: an unweighted graph keeps its
+    // bare (src, dst) cache bytes and dst partitioning
+    val w = weight.headOption.getOrElse(lit(1L))
+    val ed = if (weight.isEmpty) cached.withColumn("w", w) else cached
+    def total(end: String): DataFrame =
+      pairs.groupBy(col(end).as("node")).agg(sum(w).as("t"))
+    val tw = total("a").unionByName(total("b"))
+      .groupBy(col("node")).agg(sum(col("t")).as("tw"))
+    // the checkpointed spine carries the seed flag only for a real seed
+    // set; every-node seeding is a literal after the checkpoint
+    val spine = seeds.fold(tw)(sd => tw
+      .join(sd.select(col("node"), lit(1L).as("seed1")).distinct(),
+        Seq("node"), "left")
+      .select(col("node"), col("tw"), coalesce(col("seed1"), lit(0L)).as("seed")))
       .localCheckpoint()
-    iterateRanks(ed, nodes, k, columnarEdgeCache)
-  }
-
-  /** The k-round fixpoint shared by [[ranks]] and [[ranksSymmetric]]:
-    * `ed` the cached edge list, `nodes` the checkpointed (node, deg)
-    * spine.
-    */
-  private def iterateRanks(ed: DataFrame, nodes: DataFrame, k: Int,
-                           columnarEdgeCache: Boolean): DataFrame = {
-    val n = nodes.count()
-    if (n == 0) {
-      // empty graph (r13 degenerate sweep): no nodes, no ranks — an
-      // empty result, not a dead query (materialized BEFORE the spine's
-      // checkpoint blocks are released)
-      val out = nodes.select(col("node"), lit(0L).as("rank_units"))
+    val nodesS = if (seeds.isEmpty) spine.withColumn("seed", lit(1L)) else spine
+    val ns = nodesS.where(col("seed") === 1L).count()
+    if (ns == 0) {
+      // no in-graph seed (r13 degenerate sweep — includes the empty
+      // graph): the restart distribution is empty, so no mass ever
+      // enters and every node's rank is exactly 0 for any k — return
+      // that closed form instead of dying on the teleport division
+      // (materialized BEFORE the spine's checkpoint blocks are released)
+      releaseEdges(cached, columnarEdgeCache)
+      val out = nodesS.select(col("node"), lit(0L).as("rank_units"))
         .localCheckpoint()
-      releaseEdges(ed, columnarEdgeCache)
-      releaseLocalCkpt(nodes)
+      releaseLocalCkpt(spine)
       return out
     }
-    val teleport = (15L * Mass) / (100L * n)
+    val teleport = (15L * Mass) / (100L * ns)
 
-    // the rank frame carries (node, deg, rank) — deg is loop-invariant
-    var r = nodes.select(col("node"), col("deg"), lit(Mass / n).as("rank"))
+    // the rank frame carries (node, tw, rank) — tw is loop-invariant
+    var r = nodesS.select(col("node"), col("tw"),
+      (col("seed") * lit(Mass / ns)).as("rank"))
     // retire the previous rank snapshot once the next one is
     // materialized: live storage stays O(1) rounds instead of O(k)
     // (node-sized blocks, but at 16M+ nodes that is GBs per snapshot)
     var prevCkpt: DataFrame = null
     var i = 0
     while (i < k) {
-      // pre-divide on the node side: one div per NODE, then the big
-      // join ships only (src, share). Dangling nodes (deg 0) emit no
-      // share — the same rows the old per-edge form never saw.
-      val shares = r.where(col("deg") > 0)
+      // pre-divide on the node side: the share frame carries the
+      // per-node NUMERATOR (85·r) and DENOMINATOR (100·Σw), and the
+      // per-edge value (r85 · w) div tw100 = (85·r·w) div (100·Σw) is
+      // the identical long product and floor division — same bits,
+      // narrower big join. Nodes with no out-weight (tw 0) emit no
+      // share.
+      val shares = r.where(col("tw") > 0)
         .select(col("node").as("src"),
-          expr("(85 * rank) div (100 * deg)").as("share"))
+          (lit(85L) * col("rank")).as("r85"),
+          (lit(100L) * col("tw")).as("tw100"))
       // corpus path: broadcast the node-sized share frame explicitly —
       // nodes run orders of magnitude below edges (|C|+|S| vs the
       // distinct trade pairs), so even at the 100 TB point the share
@@ -279,11 +308,12 @@ object PageRank {
       // recurrence).
       val contribs = ed
         .join(if (columnarEdgeCache) broadcast(shares) else shares, Seq("src"))
-        .select(col("dst").as("node"), col("share").as("c"))
+        .select(col("dst").as("node"), expr("(r85 * w) div tw100").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("sc"))
-      val next = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"), col("deg"),
-          (lit(teleport) + coalesce(col("sc"), lit(0L))).as("rank"))
+      val next = nodesS.join(contribs, Seq("node"), "left")
+        .select(col("node"), col("tw"),
+          (col("seed") * lit(teleport) + coalesce(col("sc"), lit(0L)))
+            .as("rank"))
       if (i % CheckpointEvery == CheckpointEvery - 1 || i == k - 1) {
         r = next.localCheckpoint()
         if (prevCkpt != null) releaseLocalCkpt(prevCkpt)
@@ -295,175 +325,19 @@ object PageRank {
     // node spine can be released before the caller's (top-k, join-back)
     // follow-up work
     if (k > 0) {
-      releaseEdges(ed, columnarEdgeCache)
-      releaseLocalCkpt(nodes)
-    }
-    r.select(col("node"), col("rank").as("rank_units"))
-  }
-
-  /** Weighted, personalized PageRank — same exact fixed-point integer
-    * discipline as [[ranks]], with two generalizations:
-    *
-    *  - **edge weights**: each out-edge carries an integer weight `w`;
-    *    a node's rank splits proportionally to weight instead of
-    *    uniformly:  contrib(u→v) = (85 * r(u) * w(u,v)) div (100 * W(u))
-    *    where W(u) = Σ_v w(u,v). Exact-overflow bound: the product
-    *    85 * r(u) * w needs r(u)·w < 2^63/85 ≈ 1.1e17; with total mass
-    *    1e12 that admits per-edge weights up to ~1e5 even if one node
-    *    held ALL the mass — and in practice r(u) shrinks as 1/N, so the
-    *    bound loosens linearly with graph size (100 TB-safe for any
-    *    count-like weight).
-    *  - **personalization**: the teleport term lands only on a seed set
-    *    S (restart distribution uniform over S), and the initial mass
-    *    starts on S:  r'(v) = [v∈S]·(15·Mass) div (100·|S|) + Σ contribs.
-    *    Ranks then measure proximity to S through weighted trade flow —
-    *    the standard personalized-PageRank semantics (Page et al. 1999,
-    *    §6 "personalized" E vector), in the same dangling-mass-removed
-    *    variant as [[ranks]].
-    *
-    * `edges`: (`src` long, `dst` long, `w` long ≥ 1). `seeds`: (`node`
-    * long); seeds outside the graph's node set are ignored (they could
-    * never receive or emit mass). Returns (`node`, `rank_units`).
-    */
-  def personalized(edges: DataFrame, seeds: DataFrame, k: Int,
-                   columnarEdgeCache: Boolean = false): DataFrame = {
-    require(k >= 0, s"pagerank rounds must be >= 0, got $k")
-    // same cached-layout discipline as [[ranks]]: bare (src, dst, w);
-    // the Σw denominator rides in the rank frame (see ranks — the
-    // projection-shaped share side is what keeps the big join
-    // AQE-convertible)
-    val ed = persistEdges(edges, columnarEdgeCache)
-    val wsum = ed.groupBy(col("src")).agg(sum(col("w")).as("tw"))
-      .select(col("src").as("node"), col("tw"))
-    val nodes = ed.select(col("src").as("node"))
-      .unionByName(ed.select(col("dst").as("node")))
-      .distinct()
-    // seed flag AND Σw materialized once onto the node spine (the
-    // rank frame below carries both, so the per-round share side is a
-    // pure projection — see ranks)
-    val nodesS = nodes
-      .join(seeds.select(col("node"), lit(1L).as("seed1")).distinct(),
-        Seq("node"), "left")
-      .join(wsum, Seq("node"), "left")
-      .select(col("node"), coalesce(col("seed1"), lit(0L)).as("seed"),
-        coalesce(col("tw"), lit(0L)).as("tw"))
-      .localCheckpoint()
-    iteratePersonalized(ed, nodesS, k, columnarEdgeCache)
-  }
-
-  /** [[personalized]] specialized to an UNDIRECTED weighted graph given
-    * as its pair list (`a`, `b`, `w`: long, one row per unordered
-    * edge) — the [[ranksSymmetric]] construction for the weighted
-    * personalized variant: Σw per node from two half-sized pair-frame
-    * aggregates merged node-wise, the spine from that frame (symmetric ⇒
-    * every endpoint emits, tw ≥ w ≥ 1), and NO distinct over the
-    * 2·|edges| symmetrized endpoints. Bit-identical to
-    * `personalized(a→b ∪ b→a)` — integer sums commute; PageRankSpec
-    * pins the equality.
-    */
-  def personalizedSymmetric(pw: DataFrame, seeds: DataFrame, k: Int,
-                            columnarEdgeCache: Boolean = false): DataFrame = {
-    require(k >= 0, s"pagerank rounds must be >= 0, got $k")
-    val folded = if (columnarEdgeCache) None else for {
-      p <- DriverFold.rows(pw.select(col("a"), col("b"), col("w")),
-        DriverFoldCap, LongType, LongType, LongType)
-      s <- DriverFold.rows(seeds.select(col("node")).distinct(),
-        DriverFoldCap, LongType)
-    } yield driverPersonalizedSymmetric(pw.sparkSession, p, s, k)
-    folded.getOrElse(
-      personalizedSymmetricDistributed(pw, seeds, k, columnarEdgeCache))
-  }
-
-  /** The distributed [[personalizedSymmetric]] body — see
-    * [[ranksSymmetricDistributed]].
-    */
-  private[graft] def personalizedSymmetricDistributed(
-      pw: DataFrame, seeds: DataFrame, k: Int,
-      columnarEdgeCache: Boolean): DataFrame = {
-    val edges = pw.select(col("a").as("src"), col("b").as("dst"), col("w"))
-      .unionByName(pw.select(col("b").as("src"), col("a").as("dst"), col("w")))
-    val ed = persistEdges(edges, columnarEdgeCache)
-    val tw = pw.groupBy(col("a").as("node")).agg(sum(col("w")).as("t"))
-      .unionByName(pw.groupBy(col("b").as("node")).agg(sum(col("w")).as("t")))
-      .groupBy(col("node")).agg(sum(col("t")).as("tw"))
-    val nodesS = tw
-      .join(seeds.select(col("node"), lit(1L).as("seed1")).distinct(),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("seed1"), lit(0L)).as("seed"), col("tw"))
-      .localCheckpoint()
-    iteratePersonalized(ed, nodesS, k, columnarEdgeCache)
-  }
-
-  /** The k-round weighted personalized fixpoint shared by
-    * [[personalized]] and [[personalizedSymmetric]]: `ed` the cached
-    * (src, dst, w) edges, `nodesS` the checkpointed (node, seed, tw)
-    * spine.
-    */
-  private def iteratePersonalized(ed: DataFrame, nodesS: DataFrame, k: Int,
-                                  columnarEdgeCache: Boolean): DataFrame = {
-    val ns = nodesS.where(col("seed") === 1L).count()
-    if (ns == 0) {
-      // no in-graph seed (r13 degenerate sweep — includes the empty
-      // graph): the restart distribution is empty, so no mass ever
-      // enters and every node's rank is exactly 0 for any k — return
-      // that closed form instead of dying on the teleport division
-      releaseEdges(ed, columnarEdgeCache)
-      val out = nodesS.select(col("node"), lit(0L).as("rank_units"))
-        .localCheckpoint()
-      releaseLocalCkpt(nodesS)
-      return out
-    }
-    val teleport = (15L * Mass) / (100L * ns)
-
-    // rank frame carries (node, seed, tw, rank) — seed/tw loop-invariant
-    var r = nodesS.select(col("node"), col("seed"), col("tw"),
-      (col("seed") * lit(Mass / ns)).as("rank"))
-    var prevCkpt: DataFrame = null
-    var i = 0
-    while (i < k) {
-      // weighted pre-division carries the per-node NUMERATOR (85·r)
-      // and DENOMINATOR (100·Σw); the per-edge value
-      // (r85 · w) div tw100 = (85·r·w) div (100·Σw) is the identical
-      // long product and floor-division — same bits, narrower big join.
-      // Nodes with no out-edges (tw 0) emit no share, as before.
-      val shares = r.where(col("tw") > 0)
-        .select(col("node").as("src"),
-          (lit(85L) * col("rank")).as("r85"),
-          (lit(100L) * col("tw")).as("tw100"))
-      // same broadcast-the-node-frame discipline as ranks: the
-      // dst-partitioned cache + broadcast share side make each round
-      // exchange-free on the edge side (see ranks for the full
-      // reasoning and the bit-identity argument)
-      val contribs = ed
-        .join(if (columnarEdgeCache) broadcast(shares) else shares, Seq("src"))
-        .select(col("dst").as("node"),
-          expr("(r85 * w) div tw100").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("sc"))
-      val next = nodesS.join(contribs, Seq("node"), "left")
-        .select(col("node"), col("seed"), col("tw"),
-          (col("seed") * lit(teleport) + coalesce(col("sc"), lit(0L)))
-            .as("rank"))
-      if (i % CheckpointEvery == CheckpointEvery - 1 || i == k - 1) {
-        r = next.localCheckpoint()
-        if (prevCkpt != null) releaseLocalCkpt(prevCkpt)
-        prevCkpt = r
-      } else r = next
-      i += 1
-    }
-    if (k > 0) {
-      releaseEdges(ed, columnarEdgeCache)
-      releaseLocalCkpt(nodesS)
+      releaseEdges(cached, columnarEdgeCache)
+      releaseLocalCkpt(spine)
     }
     r.select(col("node"), col("rank").as("rank_units"))
   }
 
   /** The symmetric graph of a folded pair list: node ids indexed in
     * first-seen order, both directions of pair i as edges 2i and 2i+1
-    * with weight `w(row)`, and each node's weight summed over its pairs
-    * (a self-pair counts twice, as in the distributed endpoint
-    * aggregates).
+    * with the pair's weight (1 for an (a, b) row), and each node's
+    * weight summed over its pairs (a self-pair counts twice, as in the
+    * distributed endpoint aggregates).
     */
-  private final class SymGraph(rows: Array[Row], w: Row => Long) {
+  private final class SymGraph(rows: Array[Row]) {
     val idx = new java.util.HashMap[java.lang.Long, Integer]()
     private def id(v: Long): Int = {
       val got = idx.get(v)
@@ -475,7 +349,7 @@ object PageRank {
     val wA = new Array[Long](edges)
     rows.indices.foreach { i =>
       val ia = id(rows(i).getLong(0)); val ib = id(rows(i).getLong(1))
-      val wi = w(rows(i))
+      val wi = if (rows(i).length > 2) rows(i).getLong(2) else 1L
       srcA(2 * i) = ia; dstA(2 * i) = ib; wA(2 * i) = wi
       srcA(2 * i + 1) = ib; dstA(2 * i + 1) = ia; wA(2 * i + 1) = wi
     }
@@ -484,7 +358,7 @@ object PageRank {
     (0 until edges).foreach(e => weight(srcA(e)) += wA(e))
 
     /** One (node, rank_units) row per node. */
-    def ranks(spark: SparkSession, rank: Array[Long]): DataFrame = {
+    def rankFrame(spark: SparkSession, rank: Array[Long]): DataFrame = {
       val out = new Array[PrRank](n)
       idx.forEach { (node, ix) =>
         out(ix.intValue()) = PrRank(node.longValue(), rank(ix.intValue())) }
@@ -492,63 +366,29 @@ object PageRank {
     }
   }
 
-  /** [[ranksSymmetric]] folded on the driver over the whole (a, b)
-    * pair list. Bit-identical to the distributed rounds: same deg/spine
+  /** [[fixpointDistributed]] folded on the driver over the whole pair
+    * list and the distinct seed rows (`None`: every node is a seed).
+    * Bit-identical to the distributed rounds: same Σw/spine
     * construction, same per-round floor divisions, and integer sums
     * commute.
     */
-  private def driverRanksSymmetric(spark: SparkSession, rows: Array[Row],
-                                   k: Int): DataFrame = {
-    // deg(v) = #pairs containing v
-    val g = new SymGraph(rows, _ => 1L)
-    val n = g.n
-    if (n == 0) return g.ranks(spark, Array.empty[Long])
-    val deg = g.weight
-    val teleport = (15L * Mass) / (100L * n)
-    var rank = Array.fill(n)(Mass / n)
-    var round = 0
-    while (round < k) {
-      val share = new Array[Long](n)
-      var u = 0
-      while (u < n) {
-        if (deg(u) > 0L) share(u) = (85L * rank(u)) / (100L * deg(u))
-        u += 1
-      }
-      val next = Array.fill(n)(teleport)
-      var e = 0
-      while (e < g.edges) {
-        next(g.dstA(e)) += share(g.srcA(e))
-        e += 1
-      }
-      rank = next
-      round += 1
-    }
-    g.ranks(spark, rank)
-  }
-
-  /** [[personalizedSymmetric]] folded on the driver — the weighted,
-    * seeded twin of [[driverRanksSymmetric]] over the whole (a, b, w)
-    * pair list and the distinct seed set.
-    */
-  private def driverPersonalizedSymmetric(spark: SparkSession,
-                                          rows: Array[Row],
-                                          seedRows: Array[Row],
-                                          k: Int): DataFrame = {
-    val g = new SymGraph(rows, _.getLong(2))
+  private def driverFold(spark: SparkSession, rows: Array[Row],
+                         seedRows: Option[Array[Row]], k: Int): DataFrame = {
+    val g = new SymGraph(rows)
     val n = g.n
     val tw = g.weight
     // in-graph seeds only (out-of-graph seeds can never hold mass)
-    val seed = new Array[Boolean](n)
-    var ns = 0L
-    seedRows.foreach { sRow =>
+    val seed = Array.fill(n)(seedRows.isEmpty)
+    var ns = if (seedRows.isEmpty) n.toLong else 0L
+    seedRows.foreach(_.foreach { sRow =>
       val got = g.idx.get(sRow.getLong(0))
       if (got != null && !seed(got.intValue())) {
         seed(got.intValue()) = true; ns += 1
       }
-    }
+    })
     // no in-graph seed: every rank is exactly 0 for any k — the same
     // closed form the distributed path returns
-    if (ns == 0L) return g.ranks(spark, new Array[Long](n))
+    if (ns == 0L) return g.rankFrame(spark, new Array[Long](n))
     val teleport = (15L * Mass) / (100L * ns)
     val r0 = Mass / ns
     var rank = Array.tabulate(n)(v => if (seed(v)) r0 else 0L)
@@ -585,6 +425,6 @@ object PageRank {
       rank = next
       round += 1
     }
-    g.ranks(spark, rank)
+    g.rankFrame(spark, rank)
   }
 }

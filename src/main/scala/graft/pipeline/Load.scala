@@ -282,44 +282,42 @@ object Load {
       .parquet(s"$dir/batch=$batchId")
   }
 
+  /** The parquet data files under a store path (none if absent), as a
+    * lazy driver-side recursive listing: a directory is listed only
+    * when the walk reaches it.
+    */
+  private def storeFiles(spark: SparkSession, path: String)
+      : Iterator[org.apache.hadoop.fs.FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(d: org.apache.hadoop.fs.Path)
+        : Iterator[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).iterator.flatMap { s =>
+        if (s.isDirectory) walk(s.getPath)
+        else Iterator.single(s).filter(_.getPath.getName.endsWith(".parquet"))
+      }
+    if (fs.exists(p)) walk(p) else Iterator.empty
+  }
+
   /** Number of parquet data files under a store path (0 if absent) —
-    * one driver-side recursive listing. The write-path twin of the
+    * one full walk of [[storeFiles]]. The write-path twin of the
     * [[storeBytes]] cost switch: a store can stay under the byte
     * threshold for hundreds of micro-batches while its FILE count
     * grows past what open/list overhead tolerates, so consolidation
     * triggers on fragmentation even in the small-store regime.
     */
-  def storeFileCount(spark: SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0
-    def walk(d: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(d).map { s =>
-        if (s.isDirectory) walk(s.getPath)
-        else if (s.getPath.getName.endsWith(".parquet")) 1 else 0
-      }.sum
-    walk(p)
-  }
+  def storeFileCount(spark: SparkSession, path: String): Int =
+    storeFiles(spark, path).size
 
-  /** True iff at least one parquet data file exists under `path` —
-    * the existence twin of [[storeFileCount]] that SHORT-CIRCUITS at
-    * the first data file instead of walking the whole tree. Streams
+  /** True iff at least one parquet data file exists under `path` — the
+    * walk of [[storeFileCount]] stopped at the first data file. Streams
     * probe store non-emptiness once or twice per micro-batch; on a
     * large accumulated store (thousands of `batch=`/`bucket=` leaves
     * at the sf100 rung) the full recursive count is O(files) of pure
     * listing latency per batch, while the verdict only needs "any".
     */
-  def storeHasData(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    def walk(d: org.apache.hadoop.fs.Path): Boolean =
-      fs.listStatus(d).exists { s =>
-        if (s.isDirectory) walk(s.getPath)
-        else s.getPath.getName.endsWith(".parquet")
-      }
-    walk(p)
-  }
+  def storeHasData(spark: SparkSession, path: String): Boolean =
+    storeFiles(spark, path).hasNext
 
   /** Read a parquet store only if its directory exists. Incremental
     * operators treat a MISSING store as "first run" — but a store that
@@ -328,15 +326,12 @@ object Load {
     * the dedup guarantee and re-append the whole batch as duplicates.
     */
   def readStoreIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a store tree with ZERO parquet data files counts as missing: a
     // partitionBy write of an all-empty batch (r13 degenerate sweep —
     // every doc gated out) creates `batch=<id>/` with only _SUCCESS, and
     // reading such a tree dies on UNABLE_TO_INFER_SCHEMA, not "empty
     // store". Real read errors on a store WITH data still propagate.
-    if (fs.exists(p) && storeHasData(spark, path))
-      Some(spark.read.parquet(path))
+    if (storeHasData(spark, path)) Some(spark.read.parquet(path))
     else None
   }
 

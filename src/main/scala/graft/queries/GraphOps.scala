@@ -114,16 +114,19 @@ object GraphOps {
        |LIMIT 20""".stripMargin
   }
 
-  /** Per-dataset width cache — the width is a pure function of the
-    * dataset directory, so the (already metadata-only) derivation runs
-    * once per dataset per JVM, not once per q130/q132 call.
+  /** Per-dataset width cache — the fact-derived width is a pure
+    * function of the dataset directory, so the (already metadata-only)
+    * derivation runs once per dataset per JVM, not once per q130/q132
+    * call. It holds the fact width alone: the caller's session width
+    * is taken into the max per call, since sessions of different
+    * widths share the cache.
     */
   private val widthCache =
     new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
   private def factShuffleWidth(s: org.apache.spark.sql.SparkSession,
                                d: String, sessionWidth: Int): Int =
-    widthCache.computeIfAbsent(d, _ => {
+    math.max(sessionWidth, widthCache.computeIfAbsent(d, _ => {
       // metadata-only: Catalyst's relation stats for a parquet scan are
       // the summed file sizes from the file index — no count() scan.
       // ~45 MB of lineitem parquet ≈ 2.5M rows (~18 B/row measured at
@@ -133,9 +136,8 @@ object GraphOps {
       // exhausted execution memory.
       val bytes = Tables.lineitem(s, d).queryExecution
         .optimizedPlan.stats.sizeInBytes
-      math.max(sessionWidth,
-        (bytes / (45L * 1024 * 1024)).toInt + 1)
-    })
+      (bytes / (45L * 1024 * 1024)).toInt + 1
+    }))
 
   /** Lineage CUT for the corpus-scale edge derivation: write the frame
     * as compressed parquet in a scratch dir and read it back. Every

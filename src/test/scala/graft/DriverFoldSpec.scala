@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 
-/** The bounded driver fold ([[DriverFold]]) and the six operators that
+/** The bounded driver fold ([[DriverFold]]) and the five operators that
   * fold through it. For each operator, on generated and degenerate
   * inputs: the result equals the operator's distributed method, and
   * the branch that ran shows in the plan — a fold is a driver-local
@@ -138,7 +138,7 @@ class DriverFoldSpec extends SparkSpec {
       for (k <- Seq(0, 3)) {
         val fast = PageRank.ranksSymmetric(pairs, k)
         assert(isLocal(fast) == folds, s"$clue k=$k")
-        assertSame(fast, PageRank.ranksSymmetricDistributed(pairs, k,
+        assertSame(fast, PageRank.fixpointDistributed(pairs, None, k,
           columnarEdgeCache = false), s"$clue k=$k")
       }
     def checkSeeded(pw: DataFrame, seeds: DataFrame, folds: Boolean,
@@ -146,7 +146,7 @@ class DriverFoldSpec extends SparkSpec {
       val k = 3
       val fast = PageRank.personalizedSymmetric(pw, seeds, k)
       assert(isLocal(fast) == folds, clue)
-      assertSame(fast, PageRank.personalizedSymmetricDistributed(pw, seeds, k,
+      assertSame(fast, PageRank.fixpointDistributed(pw, Some(seeds), k,
         columnarEdgeCache = false), clue)
     }
     forAllSeeded(pairsGen, n = 5) { ps =>
@@ -186,8 +186,8 @@ class DriverFoldSpec extends SparkSpec {
       val seeds = Seq(ps.head._1).toDF("node")
       assert(causedByArithmetic(
         PageRank.personalizedSymmetric(pw, seeds, k).collect()), ps)
-      assert(causedByArithmetic(PageRank.personalizedSymmetricDistributed(
-        pw, seeds, k, columnarEdgeCache = false).collect()), ps)
+      assert(causedByArithmetic(PageRank.fixpointDistributed(
+        pw, Some(seeds), k, columnarEdgeCache = false).collect()), ps)
     }
   }
 

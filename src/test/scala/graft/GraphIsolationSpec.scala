@@ -1,7 +1,9 @@
 package graft
 
-import graft.queries.Registry
+import graft.queries.{GraphOps, Registry}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** A row that plans with its own conf must not move the conf of the
   * session it was called on: the BI endpoint plans thrift clients'
@@ -83,5 +85,29 @@ class GraphIsolationSpec extends SparkSpec {
       try isolated(q, expected)
       finally forced.foreach { case (k, _) => spark.conf.unset(k) }
     }
+  }
+
+  test("fact-scaled width is cached per dataset, not per caller's width") {
+    // a dataset dir no other test has sized: the width cache is keyed by
+    // dir, and a width-8 caller must not fix the width a later width-4
+    // caller plans at (at the fixture's size both widths are at or above
+    // the fact width, so both calls take the narrow path, unforked)
+    val dir = Files.createTempDirectory("graft_width")
+    val link = Files.createSymbolicLink(dir.resolve("lineitem.parquet"),
+      Paths.get(s"$sfDir/lineitem.parquet").toAbsolutePath)
+    try {
+      def build(width: Int): (Boolean, Boolean) = {
+        val s = GraftSession.fork(spark, Width -> width.toString)
+        var wide = false
+        val out = GraphOps.withFactScaledShuffle(s, dir.toString) { (gs, _, big) =>
+          wide = big
+          gs.range(1).toDF()
+        }
+        (wide, out.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+      }
+      assert(build(8) == ((false, false)))
+      assert(build(4) == ((false, false)),
+        "the width-4 call took the wide (forked, checkpointed) path")
+    } finally { Files.delete(link); Files.delete(dir) }
   }
 }

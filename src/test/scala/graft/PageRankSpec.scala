@@ -1,14 +1,19 @@
 package graft
 
 import graft.ops.PageRank
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
-/** Fixed-point PageRank (SURVEY §2 extension surface, q130).
+/** Fixed-point PageRank (SURVEY §2 extension surface, q130/q132).
   *
   * The load-bearing check is exact equality against an independent
-  * sequential implementation of the same integer recurrence: the
-  * distributed version has no float slack to hide behind, so any
-  * partitioning/ordering/join bug shows up as a unit-level diff.
+  * sequential implementation of the same integer recurrence, over the
+  * symmetrized edges of each pair graph: the distributed version has
+  * no float slack to hide behind, so any partitioning/ordering/join bug
+  * shows up as a unit-level diff. Global ranks run through the weighted
+  * personalized fixpoint, so they are checked against the uniform
+  * recurrence [[seqRanks]] on the fold, distributed and columnar paths.
   */
 class PageRankSpec extends SparkSpec {
   import spark.implicits._
@@ -27,57 +32,6 @@ class PageRankSpec extends SparkSpec {
       r = nodes.map(v => v -> (teleport + in.getOrElse(v, 0L))).toMap
     }
     r
-  }
-
-  private def sparkRanks(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] =
-    PageRank.ranks(edges.toDF("src", "dst"), k)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  // Asymmetric directed graph with a dangling node (4 has no out-edge),
-  // a hub (everything points at 1), and a 2-cycle.
-  private val g: Seq[(Long, Long)] =
-    Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (5L, 1L), (5L, 4L), (3L, 4L))
-
-  test("distributed ranks equal the sequential integer recurrence exactly") {
-    for (k <- Seq(0, 1, 3, 8)) {
-      assert(sparkRanks(g, k) == seqRanks(g, k), s"k=$k")
-    }
-  }
-
-  test("columnar corpus path (dst-partitioned cache + broadcast shares) is bit-identical") {
-    // the corpus-scale regime: dst-partitioned columnar edge cache and
-    // an explicitly-broadcast share frame (round-12 layout). Integer
-    // sums are order-independent and the broadcast join emits the same
-    // rows, so the ranks must equal the sequential recurrence exactly
-    for (k <- Seq(1, 5, 8)) {
-      val got = PageRank.ranks(g.toDF("src", "dst"), k,
-        columnarEdgeCache = true)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == seqRanks(g, k), s"k=$k")
-    }
-  }
-
-  test("ranks are invariant under edge partitioning and order") {
-    val want = seqRanks(g, 5)
-    val shuffled = scala.util.Random.shuffle(g)
-    val got = PageRank.ranks(
-      shuffled.toDF("src", "dst").repartition(7, col("dst")), 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
-  }
-
-  test("mass accounting: total rank stays within floor-loss of Mass") {
-    val r = sparkRanks(g, 8)
-    val total = r.values.sum
-    assert(total <= PageRank.Mass)
-    // Only floor remainders and the dangling node's damped mass leak;
-    // with one dangling node out of five, total keeps >= teleport mass
-    // plus the non-dangling 85% shares — loosely, more than half.
-    assert(total > PageRank.Mass / 2, s"total=$total")
-    // hub (node 1) with three in-edges outranks the dangling sink's
-    // teleport-only floor, and every rank is at least teleport
-    val teleport = (15L * PageRank.Mass) / (100L * 5L)
-    assert(r(1L) > r(4L) && r.values.forall(_ >= teleport))
   }
 
   /** Sequential reference for the weighted personalized recurrence. */
@@ -101,76 +55,146 @@ class PageRankSpec extends SparkSpec {
     r
   }
 
-  private def sparkPersonalized(edges: Seq[(Long, Long, Long)],
-                                seeds: Seq[Long], k: Int): Map[Long, Long] =
-    PageRank.personalized(edges.toDF("src", "dst", "w"), seeds.toDF("node"), k)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def sym(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
 
-  // Weighted version of g: the 5→1 edge dominates 5's out-mass 9:1.
-  private val wg: Seq[(Long, Long, Long)] =
-    Seq((1L, 2L, 3L), (2L, 1L, 1L), (2L, 3L, 2L), (3L, 1L, 5L),
-        (5L, 1L, 9L), (5L, 4L, 1L), (3L, 4L, 4L))
+  private def symW(pairs: Seq[(Long, Long, Long)]): Seq[(Long, Long, Long)] =
+    pairs.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+
+  private def ranksOf(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The fold ran: every leaf of the result's plan is driver-local. */
+  private def folded(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+
+  // Undirected pair graph: a triangle, a pendant, and a node (7)
+  // appearing on BOTH pair sides — the general case the node-wise
+  // deg/Σw merge must handle (the q130 trade graph's disjoint even/odd
+  // spaces never exercise it).
+  private val upairs: Seq[(Long, Long)] =
+    Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (7L, 1L), (4L, 7L))
+
+  private val wpairs: Seq[(Long, Long, Long)] =
+    upairs.zipWithIndex.map { case ((a, b), i) => (a, b, i + 1L) }
+
+  // A random pair graph dense enough (60 draws over 15 ids) to hold
+  // self-loops, duplicate pairs and both orientations of a pair.
+  private val rpairs: Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(7)
+    Seq.fill(60)((rnd.nextInt(15).toLong, rnd.nextInt(15).toLong))
+  }
+
+  private def distributed(pairs: Seq[(Long, Long)], k: Int): Map[Long, Long] =
+    ranksOf(PageRank.fixpointDistributed(pairs.toDF("a", "b"), None, k,
+      columnarEdgeCache = false))
+
+  test("distributed ranks equal the sequential integer recurrence exactly") {
+    assert(rpairs.exists { case (a, b) => a == b } &&
+      rpairs.exists { case (a, b) => a != b && rpairs.contains((b, a)) } &&
+      rpairs.distinct.size < rpairs.size)
+    for (k <- Seq(0, 1, 3, 8)) {
+      assert(distributed(rpairs, k) == seqRanks(sym(rpairs), k), s"k=$k")
+    }
+  }
+
+  test("columnar corpus path (dst-partitioned cache + broadcast shares) is bit-identical") {
+    // the corpus-scale regime: dst-partitioned columnar edge cache and
+    // an explicitly-broadcast share frame (round-12 layout). Integer
+    // sums are order-independent and the broadcast join emits the same
+    // rows, so the ranks must equal the sequential recurrence exactly
+    for (k <- Seq(1, 5, 8)) {
+      val got = ranksOf(PageRank.ranksSymmetric(rpairs.toDF("a", "b"), k,
+        columnarEdgeCache = true))
+      assert(got == seqRanks(sym(rpairs), k), s"k=$k")
+    }
+  }
+
+  test("ranks are invariant under edge partitioning and order") {
+    // shuffled rows, every other pair flipped (an undirected graph has
+    // no orientation), and a 7-way hash layout on one endpoint
+    val want = seqRanks(sym(rpairs), 5)
+    val shuffled = scala.util.Random.shuffle(rpairs).zipWithIndex.map {
+      case ((a, b), i) => if (i % 2 == 0) (b, a) else (a, b) }
+    val got = PageRank.fixpointDistributed(
+      shuffled.toDF("a", "b").repartition(7, col("b")), None, 5,
+      columnarEdgeCache = false)
+    assert(ranksOf(got) == want)
+  }
+
+  test("mass accounting: total rank stays within floor-loss of Mass") {
+    val k = 8
+    val r = distributed(upairs, k)
+    val total = r.values.sum
+    assert(total <= PageRank.Mass)
+    // no node of a symmetric graph is dangling, so only floor remainders
+    // leak: under one unit per node (start and teleport) and per
+    // directed edge each round
+    val bound = (k + 1).toLong * (r.size + 2 * upairs.size)
+    assert(PageRank.Mass - total <= bound, s"total=$total")
+    // the degree-3 nodes outrank the degree-2 ones, and every rank is
+    // at least teleport
+    val teleport = (15L * PageRank.Mass) / (100L * r.size)
+    assert(Seq(1L, 3L).forall(h => Seq(2L, 4L, 7L).forall(r(h) > r(_))))
+    assert(r.values.forall(_ >= teleport))
+  }
 
   test("personalized ranks equal the sequential weighted recurrence exactly") {
-    // seed 99 is outside the graph: must be ignored, not divide the mass
+    // seed 99 is outside the graph: must be ignored, not divide the mass.
+    // Both non-columnar paths: the driver fold and the distributed rounds
+    val seeds = Seq(2L, 7L, 99L)
     for (k <- Seq(0, 1, 3, 6)) {
-      assert(sparkPersonalized(wg, Seq(5L, 2L, 99L), k) ==
-        seqPersonalized(wg, Set(5L, 2L, 99L), k), s"k=$k")
+      val want = seqPersonalized(symW(wpairs), seeds.toSet, k)
+      val fold = PageRank.personalizedSymmetric(wpairs.toDF("a", "b", "w"),
+        seeds.toDF("node"), k)
+      assert(folded(fold) && ranksOf(fold) == want, s"fold k=$k")
+      val dist = PageRank.fixpointDistributed(wpairs.toDF("a", "b", "w"),
+        Some(seeds.toDF("node")), k, columnarEdgeCache = false)
+      assert(ranksOf(dist) == want, s"distributed k=$k")
     }
   }
 
   test("personalized columnar corpus path is bit-identical") {
     for (k <- Seq(1, 6)) {
-      val got = PageRank.personalized(wg.toDF("src", "dst", "w"),
-        Seq(5L, 2L).toDF("node"), k, columnarEdgeCache = true)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == seqPersonalized(wg, Set(5L, 2L), k), s"k=$k")
+      val got = PageRank.personalizedSymmetric(wpairs.toDF("a", "b", "w"),
+        Seq(2L, 7L).toDF("node"), k, columnarEdgeCache = true)
+      assert(ranksOf(got) == seqPersonalized(symW(wpairs), Set(2L, 7L), k),
+        s"k=$k")
     }
   }
 
   test("personalized with uniform weights and all-node seeds = global ranks") {
-    val uni = g.map { case (s, d) => (s, d, 1L) }
-    val all = (g.map(_._1) ++ g.map(_._2)).distinct
-    assert(sparkPersonalized(uni, all, 5) == seqRanks(g, 5))
+    // the one-fixpoint pin: global ranks run as the weighted, seeded
+    // fixpoint with w = 1 and every node a seed, and must equal the
+    // uniform recurrence on every path
+    val df = upairs.toDF("a", "b")
+    for (k <- Seq(0, 1, 5, 8)) {
+      val want = seqRanks(sym(upairs), k)
+      val fold = PageRank.ranksSymmetric(df, k)
+      assert(folded(fold) && ranksOf(fold) == want, s"fold k=$k")
+      assert(distributed(upairs, k) == want, s"distributed k=$k")
+      assert(ranksOf(PageRank.ranksSymmetric(df, k,
+        columnarEdgeCache = true)) == want, s"columnar k=$k")
+      val all = (upairs.map(_._1) ++ upairs.map(_._2)).distinct
+      assert(ranksOf(PageRank.personalizedSymmetric(
+        upairs.map { case (a, b) => (a, b, 1L) }.toDF("a", "b", "w"),
+        all.toDF("node"), k)) == want, s"personalized k=$k")
+    }
   }
 
   test("personalized mass concentrates near the seed set") {
-    // seed only node 5: its direct 9:1-weighted neighbor 1 must outrank
-    // node 4 (reachable from 5 only through the 1-weight edge)
-    val r = sparkPersonalized(wg, Seq(5L), 6)
-    assert(r(1L) > r(4L))
-    // non-seed, non-reachable-from-seed nodes hold no teleport mass:
-    // node 5 has no in-edges, so after round 1 its rank is exactly teleport
-    assert(r(5L) == (15L * PageRank.Mass) / 100L)
-  }
-
-  // Undirected pair graph for the *Symmetric builders: a triangle, a
-  // pendant, and a node (7) appearing on BOTH pair sides — the general
-  // case the node-wise deg/Σw merge must handle (the q130 trade graph's
-  // disjoint even/odd spaces never exercise it).
-  private val upairs: Seq[(Long, Long)] =
-    Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (7L, 1L), (4L, 7L))
-
-  test("ranksSymmetric is bit-identical to ranks over the symmetrized edges") {
-    val sym = upairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-    for (k <- Seq(0, 1, 5, 8); columnar <- Seq(false, true)) {
-      val got = PageRank.ranksSymmetric(upairs.toDF("a", "b"), k,
-        columnarEdgeCache = columnar)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == seqRanks(sym, k), s"k=$k columnar=$columnar")
-    }
-  }
-
-  test("personalizedSymmetric is bit-identical to personalized over the symmetrized edges") {
-    val wpairs = upairs.zipWithIndex.map { case ((a, b), i) => (a, b, i + 1L) }
-    val sym = wpairs.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
-    for (k <- Seq(0, 1, 6); columnar <- Seq(false, true)) {
-      val got = PageRank.personalizedSymmetric(wpairs.toDF("a", "b", "w"),
-        Seq(2L, 7L, 99L).toDF("node"), k, columnarEdgeCache = columnar)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == seqPersonalized(sym, Set(2L, 7L, 99L), k),
-        s"k=$k columnar=$columnar")
-    }
+    // seed only node 10: its 9-weight neighbor 11 must outrank its
+    // 1-weight neighbor 12, and the component {20, 21} the seed cannot
+    // reach never holds any mass
+    val g = Seq((10L, 11L, 9L), (10L, 12L, 1L), (11L, 13L, 1L),
+      (12L, 13L, 1L), (20L, 21L, 5L))
+    val r = ranksOf(PageRank.fixpointDistributed(g.toDF("a", "b", "w"),
+      Some(Seq(10L).toDF("node")), 6, columnarEdgeCache = false))
+    assert(r(11L) > r(12L))
+    assert(r(20L) == 0L && r(21L) == 0L)
+    // the lone seed takes the whole teleport term every round
+    assert(r(10L) >= (15L * PageRank.Mass) / 100L)
   }
 
   test("driver fold equals the distributed rounds on a random pair graph") {
@@ -181,11 +205,9 @@ class PageRankSpec extends SparkSpec {
     val pairs = Seq.fill(400)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
     val df = pairs.toDF("a", "b")
     for (k <- Seq(0, 1, 8)) {
-      val fast = PageRank.ranksSymmetric(df, k)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = PageRank
-        .ranksSymmetricDistributed(df, k, columnarEdgeCache = false)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val fast = ranksOf(PageRank.ranksSymmetric(df, k))
+      val dist = ranksOf(PageRank.fixpointDistributed(df, None, k,
+        columnarEdgeCache = false))
       assert(fast == dist, s"k=$k")
     }
     val wdf = pairs.zipWithIndex
@@ -193,11 +215,9 @@ class PageRankSpec extends SparkSpec {
       .toDF("a", "b", "w")
     val seeds = Seq(1L, 5L, 9L, 999L).toDF("node")
     for (k <- Seq(0, 1, 6)) {
-      val fast = PageRank.personalizedSymmetric(wdf, seeds, k)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = PageRank.personalizedSymmetricDistributed(
-        wdf, seeds, k, columnarEdgeCache = false)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val fast = ranksOf(PageRank.personalizedSymmetric(wdf, seeds, k))
+      val dist = ranksOf(PageRank.fixpointDistributed(wdf, Some(seeds), k,
+        columnarEdgeCache = false))
       assert(fast == dist, s"k=$k")
     }
   }

@@ -176,4 +176,23 @@ class StoreMaintenanceSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(after == before)
   }
+
+  test("store walker: file count and existence agree on nested, data-less and absent stores") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_walk").toString
+    try {
+      val absent = s"$dir/absent"
+      assert(Load.storeFileCount(spark, absent) == 0 && !Load.storeHasData(spark, absent))
+      // an all-empty partitioned batch leaves `batch=0/` and _SUCCESS only
+      Load.writeBatchPartial(Seq.empty[(Long, Int)].toDF("k", "bucket"), dir, 0L,
+        Seq("bucket"))
+      assert(Load.storeFileCount(spark, dir) == 0 && !Load.storeHasData(spark, dir))
+      assert(Load.readStoreIfExists(spark, dir).isEmpty)
+      Load.writeBatchPartial(Seq((1L, 0), (2L, 1), (3L, 1)).toDF("k", "bucket"),
+        dir, 1L, Seq("bucket"))
+      val files = dataFiles(new java.io.File(dir)).size
+      assert(files >= 2 && Load.storeFileCount(spark, dir) == files)
+      assert(Load.storeHasData(spark, dir))
+      assert(Load.readStoreIfExists(spark, dir).map(_.count()).contains(3L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }
